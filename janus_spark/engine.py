@@ -6,7 +6,9 @@ thread per historical window, a live processor, and an async baseline
 warm-up).  Spark mapping: each historical window is a lazy batch
 DataFrame plan (Catalyst schedules it distributed — no hand threading);
 the live side is a streaming runner (janus_spark.streaming); baseline
-warm-up is a small batch job whose result is broadcast into the live plan.
+warm-up is a small batch job run once, whose tiny result is materialized
+in memory and broadcast into every live plan — live windows never
+re-read the quad log.
 
 Status machine (janus_api.rs:110-118): Registered → [WarmingBaseline →]
 Running → Stopped/Completed/Failed.
@@ -173,6 +175,10 @@ class JanusEngine:
     ) -> DataFrame:
         """W8 warm-up: run the baseline historical window, compact to
         (anchor, var, value), return static quads for the live side.
+        The quads are materialized here, once (the reference also inserts
+        them as static triples at warm-up): live windows read the small
+        in-memory relation, not the quad log, so they neither re-run the
+        baseline nor break when the log is compacted.
         Status flips WarmingBaseline → Running (janus_api.rs:352-407)."""
         rq = self.registry[query_id]
         parsed = rq.parsed
@@ -184,7 +190,7 @@ class JanusEngine:
         hist = self.run_historical_window(parsed, w, quads, now)
         ord_col = "window_end" if "window_end" in hist.columns else None
         bl = build_baseline(hist, parsed.baseline_mode or "LAST", window_ord_col=ord_col)
-        static = baseline_to_quads(bl)
+        static = baseline_to_quads(bl).localCheckpoint(eager=True)
         rq.status = RUNNING
         return static
 
@@ -215,7 +221,7 @@ class JanusEngine:
         """Runtime observability for a registered query: lifecycle state +
         the live runner's counters (batches, rows in, window fires, last
         batch wall time) when the foreachBatch path is active.  Counters
-        ride aggregates each batch already runs — reading them costs
+        ride metrics each batch's buffer write observes — reading them costs
         nothing.  (Native-path queries expose Spark's own progress via
         ``StreamingQuery.lastProgress``; callers hold that handle.)"""
         rq = self.registry[query_id]

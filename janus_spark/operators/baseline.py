@@ -15,7 +15,10 @@ the live query joins against.
 
 Spark-first: the per-row accumulator loop is a groupBy — mean over the
 numeric view, last-by-window-order otherwise; the resulting frame is tiny
-(one row per (anchor, var)) and is broadcast into the live plan.
+(one row per (anchor, var)).  ``JanusEngine.warm_baseline`` materializes
+it once, at warm-up, and it is broadcast into every live plan from
+memory: live windows never re-run the historical window or re-read the
+quad log.
 """
 
 from __future__ import annotations
@@ -103,6 +106,7 @@ def baseline_to_quads(baseline: DataFrame) -> DataFrame:
     """(anchor, var, value) → static quads ``<anchor> <baseline#var> value``
     (janus_api.rs:682-697); joined into live plans via static_quads (the
     compiler unions them into every scan; Catalyst broadcasts the tiny side).
+    The frame is lazy; ``JanusEngine.warm_baseline`` materializes it.
     """
     return baseline.select(
         F.lit(0).cast("long").alias("ts"),

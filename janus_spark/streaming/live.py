@@ -14,9 +14,14 @@ Reference behavior (rsp-rs usage in src/stream/live_stream_processing.rs):
 Spark-first design: the runtime rides Structured Streaming's
 ``foreachBatch``.  Each micro-batch appends to a time-retention event
 buffer (bounded by the max window range — the same state rsp-rs keeps in
-memory, but spillable and distributed); newly closed windows are computed
-from the max event time and each fires one batch evaluation of the
-compiled plan over the merged window slice.  Late events older than the
+memory, but spillable and distributed) in one Spark job: the batch's max
+event time and row count are observed metrics of the chunk write, not a
+separate aggregation.  Newly closed windows are computed from the max
+event time and each fires one batch evaluation of the compiled plan over
+the merged window slice; the buffer is read with the fixed quad schema,
+so no schema-inference job runs per fire.  A hybrid query's baseline
+arrives here already materialized (``JanusEngine.warm_baseline``), so a
+live plan never re-reads the quad log.  Late events older than the
 watermark slack are dropped (the reference has NO late-data story at all —
 its MQTT path overwrites event time with arrival time; we document the
 divergence and keep a configurable allowed lateness instead).
@@ -30,10 +35,11 @@ import time
 from dataclasses import dataclass, field
 from pathlib import Path
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from janus_spark.compiler.compile import compile_sparql
+from janus_spark.model import QUAD_SCHEMA
 from janus_spark.parsing.janusql import JanusQuery, WindowDef
 
 
@@ -80,10 +86,10 @@ class ParquetSink:
               result: DataFrame) -> None:
         safe = re.sub(r"[^A-Za-z0-9_.-]", "_", window_name)
         path = str(self.root / safe / f"w_{window_start}_{window_end}")
-        result.write.mode("overwrite").parquet(path)
-        # count from the written footers (metadata-only scan), not a
-        # second run of the query plan
-        n = result.sparkSession.read.parquet(path).count()
+        # the row count is an observed metric of the write itself
+        obs = Observation()
+        result.observe(obs, F.count(F.lit(1)).alias("n")).write.mode("overwrite").parquet(path)
+        n = obs.get["n"]
         self.manifests.append(
             {
                 "window": window_name,
@@ -148,7 +154,7 @@ class LiveQueryRunner:
             )
         self._prev_rows: dict[str, list] = {}
         # runtime observability (served by /api/queries/<id>/metrics):
-        # counters ride the aggregates each batch already runs — no
+        # counters ride the metrics observed on the buffer write — no
         # extra jobs
         self.metrics: dict = {
             "n_batches": 0,
@@ -160,16 +166,22 @@ class LiveQueryRunner:
 
     # ------------------------------------------------------------ buffer
     def _append_buffer(self, batch_df: DataFrame) -> int | None:
-        """Append micro-batch to the retention buffer; returns batch max ts."""
-        agg = batch_df.agg(F.max("ts").alias("m"), F.count(F.lit(1)).alias("n")).collect()[0]
-        self.metrics["rows_in"] += int(agg["n"])
-        if agg["m"] is None:
-            return None
+        """Append micro-batch to the retention buffer in one job; returns
+        batch max ts.  Max ts and row count are observed during the
+        chunk write; an empty batch's chunk is deleted again."""
         sub = f"c{self._chunk_no:08d}"
+        path = self.buffer_path / sub
+        obs = Observation()
+        observed = batch_df.observe(obs, F.max("ts").alias("m"), F.count(F.lit(1)).alias("n"))
+        observed.write.mode("overwrite").parquet(str(path))
+        stats = obs.get
+        self.metrics["rows_in"] += int(stats["n"])
+        if stats["m"] is None:
+            shutil.rmtree(path, ignore_errors=True)
+            return None
         self._chunk_no += 1
-        batch_df.write.mode("overwrite").parquet(str(self.buffer_path / sub))
-        self._chunks[sub] = int(agg["m"])
-        return int(agg["m"])
+        self._chunks[sub] = int(stats["m"])
+        return int(stats["m"])
 
     def _prune_buffer(self) -> None:
         """Drop chunks entirely older than any window can still need."""
@@ -181,7 +193,9 @@ class LiveQueryRunner:
 
     def _buffer_df(self) -> DataFrame:
         paths = [str(self.buffer_path / s) for s in self._chunks]
-        return self.spark.read.parquet(*paths)
+        # fixed schema: no inference job per read, and an empty buffer
+        # (close() before any data) reads as an empty frame
+        return self.spark.read.schema(QUAD_SCHEMA).parquet(*paths)
 
     # ------------------------------------------------------------- fire
     def on_batch(self, batch_df: DataFrame, batch_id: int | None = None) -> None:

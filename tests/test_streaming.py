@@ -526,3 +526,129 @@ def test_parquet_sink_manifest_and_full_rows(spark, tmp_path):
     m0 = sink.manifests[0]
     got = {r["t"] for r in spark.read.parquet(m0["path"]).collect()}
     assert got == {str(i) for i in range(1, 20)} and m0["n_rows"] == 19
+
+
+HYBRID_QUERY = f"""
+PREFIX ex: <{EX}>
+REGISTER RStream <out> AS
+SELECT ?sensor ?temp ?mean
+FROM NAMED WINDOW ex:w ON STREAM ex:sensors [RANGE 2000 STEP 2000]
+FROM NAMED WINDOW ex:hist ON LOG ex:sensors [START 100 END 3000]
+USING BASELINE ex:hist AGGREGATE
+WHERE {{
+  WINDOW ex:w {{ ?sensor ex:temperature ?temp . }}
+  WINDOW ex:hist {{ ?sensor ex:temperature ?mean . }}
+  ?sensor <https://janus.rs/baseline#mean> ?mean .
+}}
+"""
+
+
+def _store_backed_engine(spark, tmp_path, quads):
+    from janus_spark.engine import JanusEngine
+    from janus_spark.sources.quadstore import QuadStore
+
+    store = QuadStore(spark, str(tmp_path / "store"), bucket_ms=1000)
+    store.write(quads)
+    return store, JanusEngine(spark, store.read())
+
+
+def _means(batch):
+    return {r["sensor"]: r["mean"] for r in batch["rows"]}
+
+
+def test_store_compaction_keeps_hybrid_query_running(spark, tmp_path):
+    """The baseline is materialized at warm-up, so rewriting the quad log
+    under a running hybrid query leaves its later windows unaffected."""
+    quads = melt_sensor_fixture(spark, 50)
+    store, eng = _store_backed_engine(spark, tmp_path, quads)
+    qid = eng.register_query(HYBRID_QUERY)
+    runner = eng.start_live(qid, str(tmp_path / "livebuf"))
+    runner.on_batch(quads.where("ts <= 2100"))
+    store.compact()
+    runner.on_batch(quads.where("ts > 2100 and ts <= 4100"))
+    first, second = runner.sink.batches
+    assert (second["window_start"], second["window_end"]) == (2000, 4000)
+    # the historical window [100, 3000] holds ts 100..3000: 6 readings a sensor
+    expected = {}
+    for i in range(1, 31):
+        expected.setdefault(f"{EX}sensor{i % 5}", []).append(20 + i % 10)
+    expected = {k: sum(v) / len(v) for k, v in expected.items()}
+    assert {k: float(v) for k, v in _means(first).items()} == expected
+    assert _means(second) == _means(first)
+
+
+def test_close_before_any_data_emits_empty_windows(spark, tmp_path):
+    """A runner that never buffered a quad still closes: the buffer read
+    has a fixed schema, so its windows fire empty."""
+    quads = melt_sensor_fixture(spark, 30).withColumn("ts", F.col("ts") + 5000)
+    # replay stopped before its first batch: the closing sentinel at ts 5100
+    runner, sink = make_runner(spark, tmp_path / "stopped")
+    assert replay_quads(quads, runner, batch_ms=1000, should_stop=lambda: True) == 0
+    assert [(b["window_start"], b["window_end"], b["rows"]) for b in sink.batches] == [
+        (0, 2000, []), (1000, 3000, []), (2000, 4000, []), (3000, 5000, [])
+    ]
+    # replay over an empty source, then an explicit close
+    runner, sink = make_runner(spark, tmp_path / "empty")
+    assert replay_quads(quads.where("ts < 0"), runner, batch_ms=1000) == 0
+    runner.close(3000)
+    assert [(b["window_end"], b["rows"]) for b in sink.batches] == [(2000, []), (3000, [])]
+    # an empty micro-batch buffers nothing and counts no rows
+    runner.on_batch(quads.where("ts < 0"))
+    assert list(runner.buffer_path.iterdir()) == []
+    assert runner.metrics["rows_in"] == 0
+    runner.on_batch(quads.where("ts <= 5500"))
+    assert runner.metrics["rows_in"] == 5
+    assert [p.name for p in runner.buffer_path.iterdir()] == ["c00000000"]
+
+
+class _ScanSink:
+    """DataFrame sink that keeps the files each fired window's plan scans."""
+
+    wants_dataframe = True
+
+    def __init__(self):
+        self.scans = []
+
+    def write(self, window_name, window_start, window_end, result):
+        self.scans.append(result.inputFiles())
+
+
+def test_live_batch_job_count_and_plan(spark, tmp_path):
+    """Pins the per-batch Spark work of a hybrid query after warm-up: a
+    non-firing batch is one job (the buffer append), a batch firing one
+    window is at most six, and no live plan scans the quad log.
+
+    The firing batch is the append, one dedup shuffle per pattern, the
+    baseline broadcast and the result collect.  The collect reads its two
+    final partitions (window rows, baseline rows) in one job or two,
+    depending on the order in which adaptive execution finishes stages."""
+    from janus_spark.streaming.live import LiveQueryRunner
+
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
+    assert not spark.streams.active, "a running stream would add jobs to the count"
+
+    def jobs(fn):
+        before = dag.numTotalJobs()
+        fn()
+        return dag.numTotalJobs() - before
+
+    quads = melt_sensor_fixture(spark, 50)
+    store, eng = _store_backed_engine(spark, tmp_path, quads)
+    qid = eng.register_query(HYBRID_QUERY)
+    runner = eng.start_live(qid, str(tmp_path / "livebuf"))
+    runner.on_batch(quads.where("ts <= 2100"))
+    assert len(runner.sink.batches) == 1
+    assert jobs(lambda: runner.on_batch(quads.where("ts > 2100 and ts <= 3500"))) == 1
+    assert len(runner.sink.batches) == 1
+    assert jobs(lambda: runner.on_batch(quads.where("ts > 3500 and ts <= 4100"))) <= 6
+    assert len(runner.sink.batches) == 2
+
+    sink = _ScanSink()
+    plan_runner = LiveQueryRunner(
+        spark, eng.get_query(qid).parsed, str(tmp_path / "planbuf"),
+        static_quads=runner.static_quads, sink=sink,
+    )
+    plan_runner.on_batch(quads.where("ts <= 2100"))
+    (files,) = sink.scans
+    assert files and all("/planbuf/" in f for f in files), files
+    assert store.path.endswith("/store") and not any("/store/" in f for f in files)
