@@ -555,15 +555,12 @@ class SparqlCompiler:
             # static/baseline triples are visible alongside window quads
             # (reference inserts them into the evaluation store,
             # live_stream_processing.rs:509-530); static side is tiny.
-            static = self.static_quads
-            for pc in self.partition_cols:
-                if pc not in static.columns:
-                    static = None
-                    break
-            if static is not None:
-                src = src.unionByName(static, allowMissingColumns=False)
-            else:
-                src = self.quads
+            # Untagged static rows would join no partition, so refuse
+            # them rather than return an empty result.
+            missing = [pc for pc in self.partition_cols if pc not in self.static_quads.columns]
+            if missing:
+                raise ValueError(f"static quads lack partition column(s) {missing}")
+            src = src.unionByName(self.static_quads, allowMissingColumns=False)
         conds: list[Column] = []
         proj: dict[str, str] = {}  # var name -> source column
         for pos, term in (("subject", tp.s), ("predicate", tp.p), ("object", tp.o)):

@@ -468,21 +468,18 @@ def curation_increment(
     weights table); the store join is banded-signature equi-join —
     increment bands against history bands — never a rescan of corpus
     text; the append is one partitioned parquet write."""
-    from janus_spark.datapipe.dedup import incremental_minhash_dedup
+    from janus_spark.datapipe.dedup import incremental_minhash_dedup, read_store
 
     id_col = model["id_col"]
     spark = new_docs.sparkSession
-    try:
-        seen = (
-            spark.read.parquet(store_path)
-            .select(F.col("id").alias("__seen_id"))
-            .distinct()
-        )
+    hist = read_store(spark, store_path)
+    if hist is None:  # first batch: no store yet
+        fresh = new_docs
+    else:
+        seen = hist.select(F.col("id").alias("__seen_id")).distinct()
         fresh = new_docs.join(
             seen, new_docs[id_col] == F.col("__seen_id"), "left_anti"
         )
-    except Exception:  # first batch: no store yet
-        fresh = new_docs
     s2 = _frozen_stage2(fresh, model)
     survivors = incremental_minhash_dedup(
         s2,

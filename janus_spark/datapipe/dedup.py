@@ -18,10 +18,39 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import Column, DataFrame
+from pyspark.errors import AnalysisException
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from janus_spark.datapipe.text import normalize, tokens
+
+# minhash store appends write one parquet file per this many signature rows
+STORE_APPEND_ROWS = 250_000
+
+
+def read_store(
+    spark: SparkSession, store_path: str, merge_schema: bool = False
+) -> DataFrame | None:
+    """Read a persistent parquet store, or None if it does not exist yet.
+    ONLY the path-missing case maps to "fresh store" — corruption,
+    permission errors and transient IO re-raise, because silently
+    treating them as an empty history would reset the state and admit
+    documents (or publish assignments) built from the current batch
+    alone.  ``merge_schema`` tolerates stores whose early appends predate
+    a later-added column (e.g. batch_id)."""
+    reader = spark.read.option("mergeSchema", "true") if merge_schema else spark.read
+    try:
+        return reader.parquet(store_path)
+    except AnalysisException as exc:
+        msg = str(exc)
+        if "PATH_NOT_FOUND" in msg or "Path does not exist" in msg:
+            return None
+        if "UNABLE_TO_INFER_SCHEMA" in msg:
+            # the dir exists but holds no data files (pre-created temp dir,
+            # or an append of an all-empty first batch) — a fresh store,
+            # not corruption (corrupt footers raise non-Analysis errors)
+            return None
+        raise
 
 
 # ---------------------------------------------------------------- exact
@@ -1391,12 +1420,9 @@ def incremental_dedup(
         .where(F.col("__rn") == 1)
         .drop("__rn")
     )
-    try:
-        seen = spark.read.parquet(store_path).select("fp_md5")
-        have_store = True
-    except Exception:
-        have_store = False
-    if have_store:
+    seen = read_store(spark, store_path)
+    if seen is not None:
+        seen = seen.select("fp_md5")
         batch = batch.join(
             seen, batch["__fp"] == seen["fp_md5"], "left_anti"
         )
@@ -1471,8 +1497,10 @@ def incremental_minhash_dedup(
     new_bands = banded.select("id", "band", "bh")
     new_sh = banded.where(F.col("band") == 0).select("id", "sh")
     replayed = False
-    try:
-        hist = spark.read.parquet(store_path)
+    hist = read_store(spark, store_path)
+    if hist is None:
+        all_bands, all_sh = new_bands, new_sh
+    else:
         if batch_id is not None:
             if "batch_id" not in hist.columns:
                 import warnings
@@ -1502,8 +1530,6 @@ def incremental_minhash_dedup(
         all_sh = new_sh.unionByName(
             hist.where(F.col("band") == 0).select("id", "sh")
         )
-    except Exception:
-        all_bands, all_sh = new_bands, new_sh
     cand = (
         new_bands.select("band", "bh", F.col("id").alias("b"))
         .join(all_bands.select("band", "bh", F.col("id").alias("a")), ["band", "bh"])
@@ -1534,17 +1560,14 @@ def incremental_minhash_dedup(
     # appended one near-empty parquet file PER CORE per call — at the
     # bench shape 32 files × 3 batches, with footer/committer overhead
     # dominating the store I/O (profiled 10.4 s task-CPU for ~800 rows).
-    # Scale-adaptive: one file per JANUS_STORE_APPEND_ROWS (default
-    # 250k) signature rows, never more than the current partition count
-    # — a TB-scale daily increment still writes hundreds of files.  The
-    # count is one cheap job over the already-materialized checkpoint.
+    # Scale-adaptive: one file per STORE_APPEND_ROWS signature rows,
+    # never more than the current partition count — a TB-scale daily
+    # increment still writes hundreds of files.  The count is one cheap
+    # job over the already-materialized checkpoint.
     if batch_id is None or not replayed:
-        import os as _os
-
-        rows_per_file = int(_os.environ.get("JANUS_STORE_APPEND_ROWS", "250000"))
         n_files = max(
             1,
-            min(banded.rdd.getNumPartitions(), -(-banded.count() // rows_per_file)),
+            min(banded.rdd.getNumPartitions(), -(-banded.count() // STORE_APPEND_ROWS)),
         )
         sig = sig.coalesce(n_files)
         if batch_id is not None:

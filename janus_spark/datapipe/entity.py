@@ -42,12 +42,11 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.errors import AnalysisException
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from janus_spark.datapipe.dedup import dedup_clusters
+from janus_spark.datapipe.dedup import dedup_clusters, read_store
 
 __all__ = [
     "block_candidates",
@@ -61,28 +60,6 @@ __all__ = [
     "score_pairs_tfidf",
     "evaluate_resolution",
 ]
-
-
-def _read_store(spark: SparkSession, store_path: str) -> DataFrame | None:
-    """Read the persistent record+edge store, or None if it does not
-    exist yet.  ONLY the path-missing case maps to "fresh store" —
-    corruption, permission errors, and transient IO re-raise, because
-    silently treating them as an empty history would reset the entity
-    state and publish a wrong assignment built from the current batch
-    alone.  mergeSchema tolerates stores whose early appends predate a
-    later-added column (e.g. batch_id)."""
-    try:
-        return spark.read.option("mergeSchema", "true").parquet(store_path)
-    except AnalysisException as exc:
-        msg = str(exc)
-        if "PATH_NOT_FOUND" in msg or "Path does not exist" in msg:
-            return None
-        if "UNABLE_TO_INFER_SCHEMA" in msg:
-            # the dir exists but holds no data files (pre-created temp dir,
-            # or an append of an all-empty first batch) — a fresh store,
-            # not corruption (corrupt footers raise non-Analysis errors)
-            return None
-        raise
 
 
 def _global_rank(recs: DataFrame, id_col: str, key_col: str) -> DataFrame:
@@ -492,7 +469,7 @@ def incremental_entity_resolution(
         .localCheckpoint(eager=True)
     )
     id_type = new.schema[id_col].dataType
-    hist = _read_store(spark, store_path)
+    hist = read_store(spark, store_path, merge_schema=True)
     if hist is not None:
         old_recs = (
             hist.where(F.col("kind") == "rec")
@@ -677,7 +654,7 @@ def _sink_step(
     (null on existing rows) plus one ``kind='batch'`` marker per
     already-committed batch id from the checkpoint."""
     spark = batch_df.sparkSession
-    hist = _read_store(spark, store_path)
+    hist = read_store(spark, store_path, merge_schema=True)
     replay = False
     if hist is not None and "batch_id" not in hist.columns:
         import warnings

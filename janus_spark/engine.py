@@ -127,7 +127,6 @@ class JanusEngine:
         window: WindowDef,
         quads: DataFrame,
         now: int | None = None,
-        static_quads: DataFrame | None = None,
     ) -> DataFrame:
         sq = parsed.historical_query(window)
         if window.kind == HIST_FIXED:
@@ -136,7 +135,6 @@ class JanusEngine:
                 quads,
                 window.start_ts,
                 window.end_ts,
-                static_quads=static_quads,
                 property_tables=self.property_tables if quads is self.quads else None,
                 path_max_hops=self.path_max_hops,
                 predicate_stats=self.predicate_stats,
@@ -146,7 +144,6 @@ class JanusEngine:
                 now = int(time.time() * 1000)
             return run_historical_sliding(
                 sq, quads, now, window.offset_ms, window.range_ms, window.step_ms,
-                static_quads=static_quads,
                 property_tables=self.property_tables if quads is self.quads else None,
                 path_max_hops=self.path_max_hops,
                 predicate_stats=self.predicate_stats,
@@ -272,21 +269,3 @@ class JanusEngine:
             rq.status = RUNNING
             return "native", native_window_agg_stream(rq.parsed, stream_df, watermark=watermark)
         return "foreachbatch", self.start_live(query_id, buffer_path, sink=sink)
-
-    def run_live_batch(
-        self,
-        query_id: str,
-        window_quads: DataFrame,
-        static_quads: DataFrame | None = None,
-    ) -> DataFrame:
-        """Evaluate the live query over one window's content (the unit the
-        streaming runtime calls per window close)."""
-        rq = self.registry[query_id]
-        from janus_spark.compiler.compile import compile_sparql
-
-        sq = rq.parsed.live_query()
-        df = compile_sparql(
-            sq, window_quads, static_quads=static_quads,
-            predicate_stats=self.predicate_stats,
-        )
-        return tag_results(df, query_id, "live")

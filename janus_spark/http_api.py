@@ -84,6 +84,16 @@ class QueryResultHub:
                 except queue.Empty:
                     pass
 
+    def take_dropped(self, query_id: str) -> int:
+        """Read and zero the drop count in one step under the lock, so a
+        drop that lands while the lag notice is being sent is reported by
+        the next notice instead of being erased."""
+        with self.lock:
+            n = self.dropped.get(query_id, 0)
+            if n:
+                self.dropped[query_id] = 0
+            return n
+
 
 def make_result(query_id: str, source: str, timestamp: int, bindings: list[dict]) -> dict:
     return {
@@ -215,9 +225,9 @@ def create_app(engine: JanusEngine, buffer_root: str = "/tmp/janus_spark_live") 
                 item = q.get(timeout=max(0.05, min(0.5, deadline - time.time())))
             except queue.Empty:
                 continue
-            if hub.dropped.get(qid):
-                yield "lag", {"type": "lag", "dropped": hub.dropped[qid]}
-                hub.dropped[qid] = 0
+            dropped = hub.take_dropped(qid)
+            if dropped:
+                yield "lag", {"type": "lag", "dropped": dropped}
             yield "result", item
             n += 1
 
@@ -260,9 +270,9 @@ def create_app(engine: JanusEngine, buffer_root: str = "/tmp/janus_spark_live") 
                     item = q.get(timeout=0.25)
                 except queue.Empty:
                     continue
-                if hub.dropped.get(qid):
-                    conn.send_text(json.dumps({"type": "lag", "dropped": hub.dropped[qid]}))
-                    hub.dropped[qid] = 0
+                dropped = hub.take_dropped(qid)
+                if dropped:
+                    conn.send_text(json.dumps({"type": "lag", "dropped": dropped}))
                 conn.send_text(json.dumps(item, default=str))
                 n += 1
         except OSError:

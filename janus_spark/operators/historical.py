@@ -194,7 +194,6 @@ def run_historical_fixed(
     start_ts: int,
     end_ts: int,
     registry: dict | None = None,
-    static_quads: DataFrame | None = None,
     property_tables: dict | None = None,
     path_max_hops: int | None = None,
     predicate_stats: dict | None = None,
@@ -209,7 +208,7 @@ def run_historical_fixed(
         sliced = {id(pt): pt.time_filtered(start_ts, end_ts) for pt in set(property_tables.values())}
         pts = {pred: sliced[id(pt)] for pred, pt in property_tables.items()}
     return compile_sparql(
-        query, window, registry=registry, static_quads=static_quads,
+        query, window, registry=registry,
         property_tables=pts, path_max_hops=path_max_hops,
         predicate_stats=predicate_stats,
     )
@@ -286,7 +285,6 @@ def run_historical_sliding(
     range_ms: int,
     step_ms: int,
     registry: dict | None = None,
-    static_quads: DataFrame | None = None,
     property_tables: dict | None = None,
     use_panes: bool | None = None,
     path_max_hops: int | None = None,
@@ -304,7 +302,7 @@ def run_historical_sliding(
 
     ``use_panes``: None = auto-dispatch the pane-decomposed fast path
     (_run_sliding_panes) when the query qualifies (single-pattern
-    mergeable aggregate, range a multiple of step, no static quads);
+    mergeable aggregate, range a multiple of step);
     True/False force/disable it (parity tests use both).
     """
     bounds = sliding_window_bounds(now, offset_ms, range_ms, step_ms)
@@ -313,7 +311,6 @@ def run_historical_sliding(
         spec is not None
         and step_ms > 0
         and range_ms % step_ms == 0
-        and static_quads is None
         and not property_tables
     ):
         result = _run_sliding_panes(
@@ -353,7 +350,6 @@ def run_historical_sliding(
         property_tables=pts,
         partition_cols=[WINDOW_ID],
         registry=registry,
-        static_quads=static_quads,
         path_max_hops=path_max_hops,
         predicate_stats=predicate_stats,
     )

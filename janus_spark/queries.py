@@ -12,7 +12,11 @@ form cancels out (string formatting never reaches the compare).
 
 from __future__ import annotations
 
-from collections.abc import Callable
+import shutil
+import tempfile
+import uuid
+from collections.abc import Callable, Iterator, Sequence
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -37,30 +41,6 @@ def _cached(key: tuple, build):
     return _FRAME_CACHE[key]
 
 
-def _read_wide(spark: SparkSession, path: str) -> DataFrame:
-    """Read a parquet input (plain scan — the widening repartition this
-    helper briefly carried is REVERTED, re-measured per guide §1.2).
-
-    History: mid-r10 this repartitioned small single-row-group scans to
-    the core budget so CPU-dense per-document stages would not run
-    single-task.  That measurement predated the operator rewrites that
-    made those stages cheap (gopher/quality/tf became narrow run-length
-    projections; the minhash family already widens internally at
-    ``_minhash_banded``).  Re-measured against the bench methodology on
-    a quiet box, interleaved process A/B, min of later reps: the probe
-    (``df.rdd.getNumPartitions`` ≈ 0.03 s) plus the round-robin shuffle
-    (≈ 0.1 s + payload) now LOSES or washes on every consumer —
-    q_embedding_near_dup 2.32→1.50 s, q_line_dedup 1.49→0.92 s,
-    q_novelty 1.86→1.47 s, q_entity_resolution 7.66→4.85 s,
-    q_tfidf_pairs 2.23→1.63 s, q_curation_full 12.9→11.8 s; no gate
-    favored widening.  At 100 TB a corpus scan exceeds the core count
-    by construction, so the helper was a no-op there anyway — operators
-    that need width mid-plan (self-join fan-out) still repartition
-    themselves.  The helper name stays so the decision has one home if
-    data shapes change again."""
-    return spark.read.parquet(path)
-
-
 def _await_stream(q, timeout_s: int) -> None:
     """awaitTermination returning False means the availableNow query is
     STILL RUNNING — reading the sink then would return a plausible but
@@ -71,6 +51,50 @@ def _await_stream(q, timeout_s: int) -> None:
             f"streaming query did not terminate within {timeout_s}s; "
             "sink contents would be partial"
         )
+
+
+@contextmanager
+def _scratch_dir(prefix: str) -> Iterator[str]:
+    """A fresh temp directory for a gate's fixture files, checkpoints and
+    stores; removed on exit, so anything returned from inside the block
+    must already be materialized (memory sink, localCheckpoint, collect)."""
+    root = tempfile.mkdtemp(prefix=prefix)
+    try:
+        yield root
+    finally:
+        shutil.rmtree(root, ignore_errors=True)
+
+
+def _fixture_stream(
+    spark: SparkSession, root: str, parts: Sequence[DataFrame], schema, sub: str = "f"
+) -> DataFrame:
+    """Write each frame of ``parts`` as one parquet file under ``root``,
+    in order, and return the file-source stream that takes one file per
+    micro-batch.  The source orders files by modification time, so list
+    order is micro-batch order."""
+    for i, part in enumerate(parts, 1):
+        part.coalesce(1).write.parquet(f"{root}/{sub}{i}.parquet")
+    return (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(f"{root}/{sub}*.parquet")
+    )
+
+
+def _drain_to_memory(out: DataFrame, root: str) -> DataFrame:
+    """Run the streaming frame ``out`` to completion (availableNow,
+    append mode) into a memory sink and return the sunk table."""
+    name = f"fixture_{uuid.uuid4().hex[:8]}"
+    q = (
+        out.writeStream.format("memory")
+        .queryName(name)
+        .outputMode("append")
+        .option("checkpointLocation", f"{root}/ck")
+        .trigger(availableNow=True)
+        .start()
+    )
+    _await_stream(q, 300)
+    return out.sparkSession.table(name)
 
 
 def _events_quads(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -355,10 +379,6 @@ def q_live_tumbling_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     double sums are exact and engine-order-independent.  sf_dir is
     unused: the fixture IS the stream (reference bench shape:
     benches/live_injection.rs)."""
-    import shutil
-    import tempfile
-    import uuid
-
     from janus_spark.model import QUAD_SCHEMA
     from janus_spark.parsing import parse_janusql
     from janus_spark.sources.melt import melt_sensor_fixture
@@ -383,31 +403,14 @@ def q_live_tumbling_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             f"CAST({ts} AS LONG) as ts", "subject", "predicate", "object", "graph"
         )
 
-    root = tempfile.mkdtemp(prefix="live_tj_")
-    try:
-        temps.unionByName(hums).coalesce(1).write.parquet(f"{root}/f1.parquet")
-        closer(60_000).coalesce(1).write.parquet(f"{root}/f2.parquet")
-        closer(120_000).coalesce(1).write.parquet(f"{root}/f3.parquet")
-        stream = (
-            spark.readStream.schema(QUAD_SCHEMA)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(f"{root}/*.parquet")
-        )
+    with _scratch_dir("live_tj_") as root:
+        parts = [temps.unionByName(hums), closer(60_000), closer(120_000)]
+        stream = _fixture_stream(spark, root, parts, QUAD_SCHEMA)
         out = native_window_agg_stream(parse_janusql(text), stream, watermark="1 second")
-        name = f"live_tj_{uuid.uuid4().hex[:8]}"
-        q = (
-            out.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .option("checkpointLocation", f"{root}/ck")
-            .trigger(availableNow=True)
-            .start()
-        )
-        _await_stream(q, 300)
         # keep only the data windows (the closer events open far-future
         # windows that exist solely to advance the watermark)
         return (
-            spark.table(name)
+            _drain_to_memory(out, root)
             .where(F.col("window_start") <= 4000)
             .select(
                 "window_start",
@@ -417,8 +420,6 @@ def q_live_tumbling_join(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.round(F.col("avg_h"), 6).alias("avg_h"),
             )
         )
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
 
 
 def q_comparator_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -672,7 +673,7 @@ def q_token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Text analysis: whitespace token counting over documents."""
     from janus_spark.datapipe.text import token_count
 
-    docs = _read_wide(spark, f"{sf_dir}/documents.parquet")
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     return docs.select("doc_id", token_count(F.col("text")).cast("long").alias("n_tokens"))
 
 
@@ -680,7 +681,7 @@ def q_text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Text analysis: quality features + composite score."""
     from janus_spark.datapipe.text import quality_features
 
-    docs = _read_wide(spark, f"{sf_dir}/documents.parquet")
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     out = quality_features(docs)
     return out.select(
         "doc_id",
@@ -695,7 +696,7 @@ def q_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Text analysis: marker-based language identification."""
     from janus_spark.datapipe.text import lang_id
 
-    docs = _read_wide(spark, f"{sf_dir}/documents.parquet")
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     out = lang_id(docs)
     return out.select(
         "doc_id",
@@ -709,13 +710,13 @@ def q_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Text analysis: md5-of-normalized-text document fingerprint."""
     from janus_spark.datapipe.text import fingerprint
 
-    docs = _read_wide(spark, f"{sf_dir}/documents.parquet")
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     return fingerprint(docs).select("doc_id", "fp_md5")
 
 
 def _dup_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     """documents ∪ shifted copy — deterministic corpus with known dups."""
-    docs = _read_wide(spark, f"{sf_dir}/documents.parquet")
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     copy = docs.select((F.col("doc_id") + 100000000).alias("doc_id"), "text", "lang", "source", "n_chars")
     return docs.unionByName(copy)
 
@@ -733,7 +734,7 @@ def q_dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     DuckDB SQL (the xxhash64 default is plan-identical)."""
     from janus_spark.datapipe.dedup import minhash_lsh_pairs
 
-    docs = _read_wide(spark, f"{sf_dir}/documents.parquet").where("doc_id < 200")
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").where("doc_id < 200")
     mutated = docs.select(
         (F.col("doc_id") + 1000000).alias("doc_id"),
         F.concat(F.col("text"), F.lit(" tailmarker")).alias("text"),
@@ -748,7 +749,7 @@ def q_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SimHash near-dup pairs, oracle-EXACT via ``shared_hash64``."""
     from janus_spark.datapipe.dedup import simhash_pairs
 
-    docs = _read_wide(spark, f"{sf_dir}/documents.parquet").where("doc_id < 200")
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").where("doc_id < 200")
     mutated = docs.select(
         (F.col("doc_id") + 1000000).alias("doc_id"),
         F.concat(F.col("text"), F.lit(" zz")).alias("text"),
@@ -763,7 +764,7 @@ def q_ann_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Brute-force cosine top-k similarity search (exact baseline)."""
     from janus_spark.datapipe.similarity import cosine_topk
 
-    embs = _read_wide(spark, f"{sf_dir}/embeddings.parquet")
+    embs = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     queries = embs.where("vec_id < 5")
     out = cosine_topk(embs, queries, k=10)
     return out.select(
@@ -777,7 +778,7 @@ def q_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact candidate buckets and ranking."""
     from janus_spark.datapipe.similarity import lsh_topk
 
-    embs = _read_wide(spark, f"{sf_dir}/embeddings.parquet")
+    embs = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     queries = embs.where("vec_id < 5")
     out = lsh_topk(embs, queries, k=10, bands=8, bits_per_band=4, dim=64)
     return out.select("query_id", "vec_id", F.col("rank").cast("long").alias("rank"), F.round("sim", 6).alias("sim"))
@@ -791,7 +792,7 @@ def q_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     anchor in tests)."""
     from janus_spark.datapipe.similarity import ivf_topk
 
-    embs = _read_wide(spark, f"{sf_dir}/embeddings.parquet")
+    embs = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     queries = embs.where("vec_id < 5")
     out = ivf_topk(embs, queries, k=10, n_cells=16, nprobe=4, iters=0)
     return out.select(
@@ -804,7 +805,7 @@ def q_embedding_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     (deterministic hyperplane literals as in q_ann_lsh)."""
     from janus_spark.datapipe.similarity import embedding_near_dup_pairs
 
-    embs = _read_wide(spark, f"{sf_dir}/embeddings.parquet")
+    embs = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     dup = embs.where("vec_id < 10").select((F.col("vec_id") + 1000000).alias("vec_id"), "embedding", "label")
     return embedding_near_dup_pairs(embs.unionByName(dup), sim_threshold=0.99).select(
         "a", "b", F.round("sim", 6).alias("sim")
@@ -818,7 +819,7 @@ def q_multimodal_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``md5(text)`` matches byte-for-byte)."""
     from janus_spark.datapipe.multimodal import decode_media, documents_as_media
 
-    docs = _read_wide(spark, f"{sf_dir}/documents.parquet")
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     return decode_media(documents_as_media(docs), fake=True)
 
 
@@ -1469,7 +1470,7 @@ def q_sample_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
     threshold — stable across runs, partitionings and engines."""
     from janus_spark.datapipe.sampling import hash_sample
 
-    docs = _read_wide(spark, f"{sf_dir}/documents.parquet")
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     return hash_sample(docs, 0.25).select("doc_id", "lang", "source")
 
 
@@ -1478,7 +1479,7 @@ def q_sample_stratified(spark: SparkSession, sf_dir: str) -> DataFrame:
     German, 50% of everything else."""
     from janus_spark.datapipe.sampling import stratified_sample
 
-    docs = _read_wide(spark, f"{sf_dir}/documents.parquet")
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     return stratified_sample(
         docs, {"en": 0.25, "de": 0.75}, strata_col="lang", default_rate=0.5
     ).select("doc_id", "lang")
@@ -1489,7 +1490,7 @@ def q_sample_quota(spark: SparkSession, sf_dir: str) -> DataFrame:
     win (deterministic)."""
     from janus_spark.datapipe.sampling import quota_sample
 
-    docs = _read_wide(spark, f"{sf_dir}/documents.parquet")
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     return quota_sample(docs, 5, strata_col="source").select("doc_id", "source")
 
 
@@ -1498,7 +1499,7 @@ def q_split_train_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows across the split."""
     from janus_spark.datapipe.sampling import split_train_eval
 
-    docs = _read_wide(spark, f"{sf_dir}/documents.parquet")
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     return split_train_eval(docs, eval_rate=0.2).select("doc_id", "split")
 
 
@@ -1507,7 +1508,7 @@ def q_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     (boilerplate / degenerate-text filter)."""
     from janus_spark.datapipe.text import repetition_features
 
-    docs = _read_wide(spark, f"{sf_dir}/documents.parquet")
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     out = repetition_features(docs)
     return out.select(
         "doc_id",
@@ -1522,7 +1523,7 @@ def q_word_freq(spark: SparkSession, sf_dir: str) -> DataFrame:
     the word — deterministic)."""
     from janus_spark.datapipe.text import word_freq
 
-    docs = _read_wide(spark, f"{sf_dir}/documents.parquet")
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     return word_freq(docs, k=50).select("word", F.col("n").cast("long").alias("n"))
 
 
@@ -1531,7 +1532,7 @@ def q_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     a 'benchmark' set (every 97th doc plays the benchmark role)."""
     from janus_spark.datapipe.dedup import contamination_flags
 
-    docs = _read_wide(spark, f"{sf_dir}/documents.parquet")
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     bench = docs.where(F.col("doc_id") % 97 == 0)
     return contamination_flags(docs, bench)
 
@@ -1541,7 +1542,7 @@ def q_contamination_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
     5-gram with the benchmark subset (every 97th doc)."""
     from janus_spark.datapipe.dedup import ngram_contamination
 
-    docs = _read_wide(spark, f"{sf_dir}/documents.parquet")
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     bench = docs.where(F.col("doc_id") % 97 == 0)
     out = ngram_contamination(docs, bench, n=5)
     return out.select("id", F.col("n_hits").cast("long").alias("n_hits"))
@@ -1551,7 +1552,7 @@ def q_chunk_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Training-chunk preparation: 32-token chunks with 4-token overlap."""
     from janus_spark.datapipe.text import chunk_documents
 
-    docs = _read_wide(spark, f"{sf_dir}/documents.parquet")
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     out = chunk_documents(docs, chunk_tokens=32, overlap=4)
     return out.select("id", F.col("chunk_id").cast("long").alias("chunk_id"),
                       "chunk_text", "n_tokens")
@@ -1562,7 +1563,7 @@ def q_pii_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
     IP / phone (both engines build the same input, then scrub)."""
     from janus_spark.datapipe.scrub import scrub_documents
 
-    docs = _read_wide(spark, f"{sf_dir}/documents.parquet")
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     planted = docs.select(
         "doc_id",
         F.concat(
@@ -1707,7 +1708,7 @@ def q_gapfill(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_length_hist(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Corpus shape profile: document-length histogram (100-char buckets)
     per language — the curation dashboard's first plot."""
-    docs = _read_wide(spark, f"{sf_dir}/documents.parquet")
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     return docs.groupBy(
         "lang", F.floor(F.col("n_chars") / 100).cast("long").alias("bucket")
     ).agg(
@@ -1991,7 +1992,7 @@ def q_topk_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
     the sort within each partition (WindowGroupLimit)."""
     from pyspark.sql.window import Window
 
-    docs = _read_wide(spark, f"{sf_dir}/documents.parquet")
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     w = Window.partitionBy("lang").orderBy(
         F.col("n_chars").desc(), F.col("doc_id").asc()
     )
@@ -2069,7 +2070,7 @@ def q_tpch_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q3-shaped star join: top revenue orders for one market
     segment.  customer is broadcast (small dim), lineitem⋈orders is the
     one real shuffle; the date filters reach the parquet scans."""
-    cu = _read_wide(spark, f"{sf_dir}/customer.parquet")
+    cu = spark.read.parquet(f"{sf_dir}/customer.parquet")
     od = spark.read.parquet(f"{sf_dir}/orders.parquet")
     li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
     cut = "1998-01-01"
@@ -2096,7 +2097,7 @@ def q_skew_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     with skew-proof partitioning."""
     from janus_spark.operators.skew import salted_join
 
-    cu = _read_wide(spark, f"{sf_dir}/customer.parquet").select("c_custkey", "c_mktsegment")
+    cu = spark.read.parquet(f"{sf_dir}/customer.parquet").select("c_custkey", "c_mktsegment")
     od = spark.read.parquet(f"{sf_dir}/orders.parquet").select(
         F.col("o_custkey").alias("c_custkey"), "o_totalprice"
     )
@@ -2118,7 +2119,7 @@ def q_skew_auto_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     results under the mitigated partitioning."""
     from janus_spark.operators.skew import auto_join
 
-    cu = _read_wide(spark, f"{sf_dir}/customer.parquet").select(
+    cu = spark.read.parquet(f"{sf_dir}/customer.parquet").select(
         "c_custkey", "c_mktsegment"
     )
     od = spark.read.parquet(f"{sf_dir}/orders.parquet").select(
@@ -2154,7 +2155,7 @@ def q_sample_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
     probability ∝ n_chars.  TakeOrderedAndProject — no global sort."""
     from janus_spark.datapipe.sampling import weighted_sample
 
-    docs = _read_wide(spark, f"{sf_dir}/documents.parquet")
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     return weighted_sample(docs, 500, "n_chars").select("doc_id", "lang", "n_chars")
 
 
@@ -2168,10 +2169,6 @@ def q_live_session(spark: SparkSession, sf_dir: str) -> DataFrame:
     the stream.  Fixture: 4 bursts × 10 events, user = r%5 — each user
     gets 2 events per burst 2.5 s apart (merged by the 4 s gap), bursts
     ~1 min apart (split)."""
-    import shutil
-    import tempfile
-    import uuid
-
     from janus_spark.operators.sessionize import sessionize
 
     def fixture(n: int = 40) -> DataFrame:
@@ -2190,39 +2187,22 @@ def q_live_session(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit(0.0).alias("v"),
         )
 
-    root = tempfile.mkdtemp(prefix="live_sess_")
-    try:
-        fixture().coalesce(1).write.parquet(f"{root}/f1.parquet")
-        closer(10_000_000).coalesce(1).write.parquet(f"{root}/f2.parquet")
-        closer(20_000_000).coalesce(1).write.parquet(f"{root}/f3.parquet")
-        stream = (
-            spark.readStream.schema("ts timestamp, user_id long, v double")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(f"{root}/*.parquet")
+    with _scratch_dir("live_sess_") as root:
+        stream = _fixture_stream(
+            spark, root, [fixture(), closer(10_000_000), closer(20_000_000)],
+            "ts timestamp, user_id long, v double",
         )
         out = sessionize(
             stream.withWatermark("ts", "1 second"),
             gap="4 seconds", key_cols=("user_id",),
             aggs={"sum_v": F.round(F.sum("v"), 6)},
         )
-        name = f"live_sess_{uuid.uuid4().hex[:8]}"
-        q = (
-            out.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .option("checkpointLocation", f"{root}/ck")
-            .trigger(availableNow=True)
-            .start()
-        )
-        _await_stream(q, 300)
         return (
-            spark.table(name)
+            _drain_to_memory(out, root)
             .where(F.col("user_id") != 99)
             .select("user_id", "session_start", "session_end",
                     F.col("n_events").cast("long").alias("n_events"), "sum_v")
         )
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
 
 
 _BAR_MS = 6 * 3600 * 1000  # OHLC bar width: 6 hours
@@ -2258,7 +2238,7 @@ def q_doc_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc_logprob): mean log p(token) under the corpus distribution."""
     from janus_spark.datapipe.text import doc_logprob
 
-    docs = _read_wide(spark, f"{sf_dir}/documents.parquet")
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     out = doc_logprob(docs)
     return out.select("doc_id", "n_tokens", F.round("avg_logprob", 6).alias("avg_logprob"))
 
@@ -2269,7 +2249,7 @@ def q_tfidf_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scores rounded before ranking so the k-cut is engine-reproducible."""
     from janus_spark.datapipe.similarity import tfidf_topk_pairs
 
-    docs = _read_wide(spark, f"{sf_dir}/documents.parquet")
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     # max_df scales with the corpus so the hot-term guard stays a guard
     # instead of filtering out the whole (replicated) vocabulary at 10x
     max_df = max(1000, docs.count() // 5)
@@ -2441,7 +2421,7 @@ def q_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle — together they pin the prefix lemma's output equivalence."""
     from janus_spark.datapipe.dedup import jaccard_similarity_join
 
-    docs = _read_wide(spark, f"{sf_dir}/documents.parquet")
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     return jaccard_similarity_join(docs, shingle_k=3, threshold=0.5, prefix_filter=False)
 
 
@@ -2630,7 +2610,7 @@ def q_token_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     signal: low entropy at high length = degenerate text)."""
     from janus_spark.datapipe.text import token_entropy
 
-    return token_entropy(_read_wide(spark, f"{sf_dir}/documents.parquet"))
+    return token_entropy(spark.read.parquet(f"{sf_dir}/documents.parquet"))
 
 
 _LOCF_SLOT_MS = 6 * 3_600_000
@@ -2699,7 +2679,7 @@ def q_edit_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
     from janus_spark.datapipe.dedup import jaccard_similarity_join
     from janus_spark.datapipe.text import normalize
 
-    docs = _read_wide(spark, f"{sf_dir}/documents.parquet")
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     norm = docs.select("doc_id", normalize(F.col("text")).alias("nt"))
     cand = jaccard_similarity_join(docs, shingle_k=3, threshold=0.5).select("a", "b")
     return (
@@ -2723,7 +2703,7 @@ def q_quality_ntile(spark: SparkSession, sf_dir: str) -> DataFrame:
     curation step."""
     from janus_spark.datapipe.text import quality_features
 
-    docs = _read_wide(spark, f"{sf_dir}/documents.parquet")
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     scored = quality_features(docs).select("doc_id", "q_score", "n_chars")
     from pyspark.sql import Window as W
 
@@ -2757,14 +2737,27 @@ ORACLES["q_quality_ntile"] = f"""
     FROM b GROUP BY quartile"""
 
 
+def _unique_sensor_parts(spark: SparkSession) -> list[DataFrame]:
+    """Unique-value sensor quads (ts 500..30000, values 1..60) in two data
+    files plus a far-future closer that fires every data window."""
+    fixture = spark.range(1, 61).select(
+        (F.col("id") * 500).alias("ts"),
+        F.concat(F.lit("http://example.org/sensor"), (F.col("id") % 3).cast("string")).alias("subject"),
+        F.lit("http://example.org/temperature").alias("predicate"),
+        F.col("id").cast("string").alias("object"),
+        F.lit("g").alias("graph"),
+    )
+    closer = fixture.where("ts = 500").selectExpr(
+        "CAST(35000 AS LONG) AS ts", "subject", "predicate", "object", "graph"
+    )
+    return [fixture.where("ts <= 15000"), fixture.where("ts > 15000"), closer]
+
+
 def _live_delta_gate(spark: SparkSession, operator: str) -> DataFrame:
     """Shared harness for the IStream/DStream exact gates: a unique-value
     sensor fixture flows through a real Structured Streaming run (file
     source → foreachBatch live runtime → sliding 4s/2s windows) and the
     per-window delta emissions are returned as one frame."""
-    import shutil
-    import tempfile
-
     from janus_spark.model import QUAD_SCHEMA
     from janus_spark.parsing import parse_janusql
     from janus_spark.streaming import ListSink, LiveQueryRunner
@@ -2776,26 +2769,8 @@ def _live_delta_gate(spark: SparkSession, operator: str) -> DataFrame:
     FROM NAMED WINDOW ex:w ON STREAM ex:sensors [RANGE 4000 STEP 2000]
     WHERE {{ WINDOW ex:w {{ ?s ex:temperature ?t . }} }}
     """
-    fixture = spark.range(1, 61).select(
-        (F.col("id") * 500).alias("ts"),
-        F.concat(F.lit("http://example.org/sensor"), (F.col("id") % 3).cast("string")).alias("subject"),
-        F.lit("http://example.org/temperature").alias("predicate"),
-        F.col("id").cast("string").alias("object"),
-        F.lit("g").alias("graph"),
-    )
-    closer = fixture.where("ts = 500").selectExpr(
-        "CAST(35000 AS LONG) AS ts", "subject", "predicate", "object", "graph"
-    )
-    root = tempfile.mkdtemp(prefix=f"live_{operator.lower()}_")
-    try:
-        fixture.where("ts <= 15000").coalesce(1).write.parquet(f"{root}/f1.parquet")
-        fixture.where("ts > 15000").coalesce(1).write.parquet(f"{root}/f2.parquet")
-        closer.coalesce(1).write.parquet(f"{root}/f3.parquet")
-        stream = (
-            spark.readStream.schema(QUAD_SCHEMA)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(f"{root}/f*.parquet")
-        )
+    with _scratch_dir(f"live_{operator.lower()}_") as root:
+        stream = _fixture_stream(spark, root, _unique_sensor_parts(spark), QUAD_SCHEMA)
         sink = ListSink()
         runner = LiveQueryRunner(spark, parse_janusql(text), f"{root}/buf", sink=sink)
         q = runner.attach(stream, once=True)
@@ -2808,8 +2783,6 @@ def _live_delta_gate(spark: SparkSession, operator: str) -> DataFrame:
         return spark.createDataFrame(
             rows, "window_start long, window_end long, s string, t string"
         )
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
 
 
 def q_live_sink_parquet(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2821,9 +2794,6 @@ def q_live_sink_parquet(spark: SparkSession, sf_dir: str) -> DataFrame:
     (streaming/live.py::ParquetSink — the at-scale alternative to the
     reference's rows-over-channel contract, src/http/server.rs:473).
     sf_dir is unused: the fixture IS the stream."""
-    import shutil
-    import tempfile
-
     from janus_spark.model import QUAD_SCHEMA
     from janus_spark.parsing import parse_janusql
     from janus_spark.streaming import LiveQueryRunner, ParquetSink
@@ -2835,26 +2805,8 @@ def q_live_sink_parquet(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM NAMED WINDOW ex:w ON STREAM ex:sensors [RANGE 4000 STEP 2000]
     WHERE { WINDOW ex:w { ?s ex:temperature ?t . } }
     """
-    fixture = spark.range(1, 61).select(
-        (F.col("id") * 500).alias("ts"),
-        F.concat(F.lit("http://example.org/sensor"), (F.col("id") % 3).cast("string")).alias("subject"),
-        F.lit("http://example.org/temperature").alias("predicate"),
-        F.col("id").cast("string").alias("object"),
-        F.lit("g").alias("graph"),
-    )
-    closer = fixture.where("ts = 500").selectExpr(
-        "CAST(35000 AS LONG) AS ts", "subject", "predicate", "object", "graph"
-    )
-    root = tempfile.mkdtemp(prefix="live_psink_")
-    try:
-        fixture.where("ts <= 15000").coalesce(1).write.parquet(f"{root}/f1.parquet")
-        fixture.where("ts > 15000").coalesce(1).write.parquet(f"{root}/f2.parquet")
-        closer.coalesce(1).write.parquet(f"{root}/f3.parquet")
-        stream = (
-            spark.readStream.schema(QUAD_SCHEMA)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(f"{root}/f*.parquet")
-        )
+    with _scratch_dir("live_psink_") as root:
+        stream = _fixture_stream(spark, root, _unique_sensor_parts(spark), QUAD_SCHEMA)
         sink = ParquetSink(f"{root}/out")
         runner = LiveQueryRunner(spark, parse_janusql(text), f"{root}/buf", sink=sink)
         q = runner.attach(stream, once=True)
@@ -2867,8 +2819,6 @@ def q_live_sink_parquet(spark: SparkSession, sf_dir: str) -> DataFrame:
         return spark.createDataFrame(
             rows, "window_start long, window_end long, s string, t string"
         )
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
 
 
 QUERIES["q_live_sink_parquet"] = q_live_sink_parquet
@@ -2969,9 +2919,6 @@ def q_live_baseline_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     emissions hash-match a pure-SQL reconstruction (per-sensor historical
     mean joined to per-window live readings).  sf_dir is unused: the
     fixture IS the stream."""
-    import shutil
-    import tempfile
-
     from janus_spark.sources.melt import melt_sensor_fixture
     from janus_spark.streaming import ListSink
 
@@ -2989,8 +2936,7 @@ def q_live_baseline_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     }
     """
     quads = melt_sensor_fixture(spark, 40)  # ts 100..4000
-    root = tempfile.mkdtemp(prefix="live_bl_")
-    try:
+    with _scratch_dir("live_bl_") as root:
         eng = JanusEngine(spark, quads)
         qid = eng.register_query(text, query_id="q_live_baseline_join")
         sink = ListSink()
@@ -3010,8 +2956,6 @@ def q_live_baseline_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("temp").try_cast("double").alias("temp"),
             F.col("v").try_cast("double").alias("baseline_mean"),
         )
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
 
 
 QUERIES["q_live_baseline_join"] = q_live_baseline_join
@@ -3061,7 +3005,7 @@ def q_path_closure(spark: SparkSession, sf_dir: str) -> DataFrame:
     table (depth grows with the table — hop bound set explicitly with headroom); every (descendant,
     ancestor) pair from the bounded semi-naive iteration must match a
     DuckDB recursive CTE."""
-    docs = _read_wide(spark, f"{sf_dir}/documents.parquet")
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     edges = docs.where("doc_id >= 1").select(
         F.lit(0).alias("ts"),
         F.concat(F.lit("urn:doc:"), F.col("doc_id").cast("string")).alias("subject"),
@@ -3093,7 +3037,7 @@ def q_path_deep_closure(spark: SparkSession, sf_dir: str) -> DataFrame:
     hop bound, and the longest path (39 hops) far exceeds the old
     implicit cap of 10, so a silently-truncated closure fails the EXACT
     gate (compiler/compile.py::_path_relation, path_max_hops=None)."""
-    docs = _read_wide(spark, f"{sf_dir}/documents.parquet")
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     edges = docs.where("doc_id >= 1 AND doc_id < 40").select(
         F.lit(0).alias("ts"),
         F.concat(F.lit("urn:n:"), F.col("doc_id").cast("string")).alias("subject"),
@@ -3215,10 +3159,6 @@ def q_comparator_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     reconstruction of comparator.rs:157-236.  Integer-valued fixture
     keeps every threshold comparison away from float boundaries.
     sf_dir is unused: the fixture IS the stream."""
-    import shutil
-    import tempfile
-    import uuid
-
     from janus_spark.streaming.stateful import streaming_comparator
 
     fixture = spark.range(0, 20).selectExpr(
@@ -3231,26 +3171,12 @@ def q_comparator_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows = fixture.selectExpr("'a' AS key", "ts", "live_a AS live", "hist_a AS hist").unionByName(
         fixture.selectExpr("'b' AS key", "ts", "live_b AS live", "hist_b AS hist")
     )
-    root = tempfile.mkdtemp(prefix="cmp_stream_")
-    try:
-        for i, (lo, hi) in enumerate(((0, 7), (7, 14), (14, 20))):
-            rows.where(f"ts >= {lo} AND ts < {hi}").coalesce(1).write.parquet(f"{root}/b{i}.parquet")
-        stream = (
-            spark.readStream.schema("key string, ts double, live double, hist double")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(f"{root}/b*.parquet")
+    with _scratch_dir("cmp_stream_") as root:
+        parts = [rows.where(f"ts >= {lo} AND ts < {hi}") for lo, hi in ((0, 7), (7, 14), (14, 20))]
+        stream = _fixture_stream(
+            spark, root, parts, "key string, ts double, live double, hist double"
         )
-        out = streaming_comparator(stream)
-        name = f"cmp_stream_{uuid.uuid4().hex[:8]}"
-        q = (
-            out.writeStream.format("memory")
-            .queryName(name)
-            .option("checkpointLocation", f"{root}/ck")
-            .trigger(availableNow=True)
-            .start()
-        )
-        _await_stream(q, 300)
-        res = spark.table(name)
+        res = _drain_to_memory(streaming_comparator(stream), root)
         # +0.0 canonicalizes IEEE negative zero (round(-1e-16, 6) -> -0.0,
         # which reprs differently from 0.0 in the value hash)
         return res.select(
@@ -3261,8 +3187,6 @@ def q_comparator_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.round("hist_slope", 6) + F.lit(0.0)).alias("hist_slope"),
             F.concat_ws(",", F.sort_array("anomalies")).alias("anomalies"),
         )
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
 
 
 QUERIES["q_comparator_stream"] = q_comparator_stream
@@ -3311,7 +3235,7 @@ def q_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
         frame_sample,
     )
 
-    docs = _read_wide(spark, f"{sf_dir}/documents.parquet")
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     decoded = decode_media(documents_as_media(docs), fake=True)
     out = frame_sample(decoded, every_n=30)
     return out.select("media_id", F.col("frame_index").cast("long").alias("frame_index"))
@@ -3332,7 +3256,7 @@ def q_jaccard_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
     candidate join over only each doc's rarest ~(1−t)·|A| shingles."""
     from janus_spark.datapipe.dedup import jaccard_prefix_join
 
-    docs = _read_wide(spark, f"{sf_dir}/documents.parquet")
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     return jaccard_prefix_join(docs, shingle_k=3, threshold=0.5)
 
 
@@ -3388,7 +3312,7 @@ def q_passage_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact substring dedup; see duplicate_passages)."""
     from janus_spark.datapipe.dedup import duplicate_passages
 
-    docs = _read_wide(spark, f"{sf_dir}/documents.parquet")
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     out = duplicate_passages(docs, k=5)
     return out.select(
         "id",
@@ -3469,7 +3393,7 @@ def q_tpch_local_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     no extra shuffle appears."""
     rg = spark.read.parquet(f"{sf_dir}/region.parquet").where(F.col("r_name") == "ASIA")
     na = spark.read.parquet(f"{sf_dir}/nation.parquet")
-    cu = _read_wide(spark, f"{sf_dir}/customer.parquet")
+    cu = spark.read.parquet(f"{sf_dir}/customer.parquet")
     su = spark.read.parquet(f"{sf_dir}/supplier.parquet")
     od = spark.read.parquet(f"{sf_dir}/orders.parquet").where(
         (F.col("o_orderdate") >= F.lit("1996-01-01").cast("timestamp"))
@@ -3520,7 +3444,7 @@ def q_tpch_small_quantity(spark: SparkSession, sf_dir: str) -> DataFrame:
     distributed form; Catalyst cannot decorrelate a per-row rescan).
     The per-part averages are computed once over the brand-filtered part
     set, so the agg input is pre-pruned by the broadcast semi join."""
-    pa = _read_wide(spark, f"{sf_dir}/part.parquet").where(F.col("p_brand") == "Brand#23")
+    pa = spark.read.parquet(f"{sf_dir}/part.parquet").where(F.col("p_brand") == "Brand#23")
     li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
     brand_lines = li.join(F.broadcast(pa.select("p_partkey")), li.l_partkey == F.col("p_partkey"))
     avgq = brand_lines.groupBy("p_partkey").agg((F.avg("l_quantity") * 0.2).alias("qcut"))
@@ -3560,14 +3484,9 @@ def q_live_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     equals the initial watermark (0) is discarded as late by the
     late-row filter — boundary pinned here so nobody "simplifies" the
     base away.  sf_dir is unused: the fixture IS the stream."""
-    import shutil
-    import tempfile
-    import uuid
-
     from janus_spark.streaming.joins import interval_join_stream
 
-    root = tempfile.mkdtemp(prefix="live_ij_")
-    try:
+    with _scratch_dir("live_ij_") as root:
         clicks = spark.range(0, 40).select(
             F.col("id").alias("click_id"),
             (F.col("id") % 5).alias("user_id"),
@@ -3580,34 +3499,18 @@ def q_live_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("id") * 10).cast("double").alias("amount"),
         )
         # split each side into two files so the join spans micro-batches
-        clicks.where("click_id < 20").coalesce(1).write.parquet(f"{root}/c/f1.parquet")
-        clicks.where("click_id >= 20").coalesce(1).write.parquet(f"{root}/c/f2.parquet")
-        buys.where("buy_id < 15").coalesce(1).write.parquet(f"{root}/b/f1.parquet")
-        buys.where("buy_id >= 15").coalesce(1).write.parquet(f"{root}/b/f2.parquet")
-        cs = (
-            spark.readStream.schema(clicks.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(f"{root}/c/*.parquet")
+        cs = _fixture_stream(
+            spark, root, [clicks.where("click_id < 20"), clicks.where("click_id >= 20")],
+            clicks.schema, sub="c/f",
         )
-        bs = (
-            spark.readStream.schema(buys.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(f"{root}/b/*.parquet")
+        bs = _fixture_stream(
+            spark, root, [buys.where("buy_id < 15"), buys.where("buy_id >= 15")],
+            buys.schema, sub="b/f",
         )
         out = interval_join_stream(
             cs, bs, ["user_id"], "cts", "bts", lower_ms=0, upper_ms=3000
         )
-        name = f"live_ij_{uuid.uuid4().hex[:8]}"
-        q = (
-            out.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .option("checkpointLocation", f"{root}/ck")
-            .trigger(availableNow=True)
-            .start()
-        )
-        _await_stream(q, 300)
-        return spark.table(name).select(
+        return _drain_to_memory(out, root).select(
             "click_id",
             "buy_id",
             "user_id",
@@ -3615,8 +3518,6 @@ def q_live_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.unix_millis("bts").alias("bts_ms"),
             "amount",
         )
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
 
 
 QUERIES["q_live_interval_join"] = q_live_interval_join
@@ -3665,7 +3566,7 @@ def q_dedup_cross_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     reference set without any crawl x crawl or ref x ref candidates."""
     from janus_spark.datapipe.dedup import minhash_lsh_join
 
-    docs = _read_wide(spark, f"{sf_dir}/documents.parquet")
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     reference = docs.where("doc_id < 150")
     crawl = docs.where("doc_id < 200 AND doc_id % 2 = 0").select(
         (F.col("doc_id") + 5000000).alias("doc_id"),
@@ -3733,7 +3634,7 @@ def q_window_path_closure(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges exist (edge ts = doc id), then `parent+` closes over only
     those.  Exercises the engine path window-slice → compiler → bounded
     semi-naive iteration end-to-end."""
-    docs = _read_wide(spark, f"{sf_dir}/documents.parquet")
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     edges = docs.where("doc_id >= 1").select(
         F.col("doc_id").alias("ts"),
         F.concat(F.lit("urn:doc:"), F.col("doc_id").cast("string")).alias("subject"),
@@ -3772,7 +3673,7 @@ def q_pack_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     datapipe/text.py::pack_token_stream."""
     from janus_spark.datapipe.text import pack_token_stream
 
-    docs = _read_wide(spark, f"{sf_dir}/documents.parquet")
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     out = pack_token_stream(docs, budget_tokens=512, n_shards=4)
     return out.select(
         "id",
@@ -3822,7 +3723,7 @@ def q_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     see datapipe/dedup.py::containment_join."""
     from janus_spark.datapipe.dedup import containment_join
 
-    docs = _read_wide(spark, f"{sf_dir}/documents.parquet")
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     return containment_join(docs, shingle_k=3, threshold=0.8)
 
 
@@ -3873,7 +3774,7 @@ def q_temperature_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     sqrt(n_s); see datapipe/sampling.py::temperature_mix."""
     from janus_spark.datapipe.sampling import temperature_mix
 
-    docs = _read_wide(spark, f"{sf_dir}/documents.parquet")
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     out = temperature_mix(docs, budget=_MIX_BUDGET, alpha=0.5)
     return out.select("doc_id", "source", F.col("n_chars").cast("long").alias("n_chars"))
 
@@ -3896,7 +3797,7 @@ def q_bigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     quality filtering); see datapipe/text.py::bigram_logprob."""
     from janus_spark.datapipe.text import bigram_logprob
 
-    docs = _read_wide(spark, f"{sf_dir}/documents.parquet")
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     return bigram_logprob(docs, lam=0.75)
 
 
@@ -3971,7 +3872,7 @@ def q_ann_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     datapipe/similarity.py::pq_topk."""
     from janus_spark.datapipe.similarity import pq_topk
 
-    embs = _read_wide(spark, f"{sf_dir}/embeddings.parquet")
+    embs = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     queries = embs.where("vec_id < 5")
     out = pq_topk(embs, queries, k=10, m=4, k_codes=16)
     return out.select(
@@ -4195,7 +4096,7 @@ def q_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     see datapipe/text.py::novelty_scores."""
     from janus_spark.datapipe.text import novelty_scores
 
-    docs = _read_wide(spark, f"{sf_dir}/documents.parquet")
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     return novelty_scores(docs, shingle_k=3)
 
 
@@ -4224,7 +4125,7 @@ def q_embedding_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     curation pipeline reads before balancing by cluster."""
     from janus_spark.datapipe.similarity import _cell_sims, ivf_train
 
-    embs = _read_wide(spark, f"{sf_dir}/embeddings.parquet")
+    embs = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     centroids = ivf_train(embs, n_cells=16, iters=0)
     best = F.array_max(_cell_sims(F.col("embedding"), centroids))
     return (
@@ -4357,7 +4258,7 @@ def q_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     from janus_spark.datapipe.sampling import split_train_eval, temperature_mix
     from janus_spark.datapipe.text import repetition_features
 
-    docs = _read_wide(spark, f"{sf_dir}/documents.parquet")
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     keepers = exact_dedup(docs).select(F.col("keep_id").alias("doc_id"))
     # stage boundaries are materialized, exactly as a production curation
     # run stages to parquet between steps — without this the dedup
@@ -4472,7 +4373,7 @@ def q_ann_ivfadc(spark: SparkSession, sf_dir: str) -> DataFrame:
     reductions compose; see datapipe/similarity.py::ivfadc_topk."""
     from janus_spark.datapipe.similarity import ivfadc_topk
 
-    embs = _read_wide(spark, f"{sf_dir}/embeddings.parquet")
+    embs = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     queries = embs.where("vec_id < 5")
     out = ivfadc_topk(embs, queries, k=10, n_cells=16, nprobe=4, m=4, k_codes=16)
     return out.select(
@@ -4537,10 +4438,6 @@ def q_live_percentile(spark: SparkSession, sf_dir: str) -> DataFrame:
     incremental state (append mode, watermark-closed), and the quantiles
     read off the sunk counts in batch.  Deterministic integer counting →
     EXACT oracle.  sf_dir unused: the fixture IS the stream."""
-    import shutil
-    import tempfile
-    import uuid
-
     from janus_spark.operators.timeseries import quantiles_from_binned
     from janus_spark.streaming.native_agg import histogram_quantile_stream
 
@@ -4554,33 +4451,17 @@ def q_live_percentile(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit("9").alias("sensor"),
         F.lit(25.0).alias("value"),
     )
-    root = tempfile.mkdtemp(prefix="live_pct_")
-    name = f"live_pct_{uuid.uuid4().hex[:8]}"
-    try:
-        fixture.where("ts <= 15000").coalesce(1).write.parquet(f"{root}/f1.parquet")
-        fixture.where("ts > 15000").coalesce(1).write.parquet(f"{root}/f2.parquet")
-        closer.coalesce(1).write.parquet(f"{root}/f3.parquet")
-        stream = (
-            spark.readStream.schema("ts long, sensor string, value double")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(f"{root}/f*.parquet")
+    with _scratch_dir("live_pct_") as root:
+        stream = _fixture_stream(
+            spark, root,
+            [fixture.where("ts <= 15000"), fixture.where("ts > 15000"), closer],
+            "ts long, sensor string, value double",
         )
         hist = histogram_quantile_stream(
             stream, [], ts_col="ts", value_col="value",
             window_ms=4_000, vmin=20.0, vmax=30.0, n_bins=10,
         )
-        q = (
-            hist.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(name)
-            .option("checkpointLocation", f"{root}/ckpt")
-            .trigger(availableNow=True)
-            .start()
-        )
-        _await_stream(q, 300)
-        counts = spark.table(name).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+        counts = _drain_to_memory(hist, root).localCheckpoint(eager=True)
     out = quantiles_from_binned(counts, ["window_start"], (0.5, 0.95), 20.0, 1.0)
     # the closer's own window never finalizes (nothing after it) — only
     # fixture windows are in the sink, which is exactly what the oracle
@@ -4614,7 +4495,7 @@ def q_path_star(spark: SparkSession, sf_dir: str) -> DataFrame:
     closure over the doc→doc//2 ancestor tree PLUS the zero-length
     identity over the predicate's nodes (documented divergence from the
     spec's all-graph-terms identity: the practical, bounded reading)."""
-    docs = _read_wide(spark, f"{sf_dir}/documents.parquet")
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     edges = docs.where("doc_id >= 1").select(
         F.lit(0).alias("ts"),
         F.concat(F.lit("urn:doc:"), F.col("doc_id").cast("string")).alias("subject"),
@@ -4649,10 +4530,6 @@ def q_live_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     off the sunk counts in batch — the same state-vs-readout split as
     q_live_percentile (rank sets aren't incrementally mergeable; bounded
     per-key counts are).  sf_dir unused: the fixture IS the stream."""
-    import shutil
-    import tempfile
-    import uuid
-
     from pyspark.sql import Window
 
     fixture = spark.range(1, 61).select(
@@ -4663,16 +4540,11 @@ def q_live_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     closer = spark.range(1).select(
         F.lit(95_000).cast("long").alias("ts"), F.lit("9").alias("sensor")
     )
-    root = tempfile.mkdtemp(prefix="live_topk_")
-    name = f"live_topk_{uuid.uuid4().hex[:8]}"
-    try:
-        fixture.where("ts <= 15000").coalesce(1).write.parquet(f"{root}/f1.parquet")
-        fixture.where("ts > 15000").coalesce(1).write.parquet(f"{root}/f2.parquet")
-        closer.coalesce(1).write.parquet(f"{root}/f3.parquet")
-        stream = (
-            spark.readStream.schema("ts long, sensor string")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(f"{root}/f*.parquet")
+    with _scratch_dir("live_topk_") as root:
+        stream = _fixture_stream(
+            spark, root,
+            [fixture.where("ts <= 15000"), fixture.where("ts > 15000"), closer],
+            "ts long, sensor string",
         )
         counts = (
             stream.withColumn("__evt", F.timestamp_millis(F.col("ts")))
@@ -4681,18 +4553,7 @@ def q_live_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             .agg(F.count("*").alias("n"))
             .select(F.unix_millis(F.col("window.start")).alias("window_start"), "sensor", "n")
         )
-        q = (
-            counts.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(name)
-            .option("checkpointLocation", f"{root}/ckpt")
-            .trigger(availableNow=True)
-            .start()
-        )
-        _await_stream(q, 300)
-        sunk = spark.table(name).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+        sunk = _drain_to_memory(counts, root).localCheckpoint(eager=True)
     w = Window.partitionBy("window_start").orderBy(F.desc("n"), F.asc("sensor"))
     return (
         sunk.withColumn("rank", F.row_number().over(w))
@@ -4722,10 +4583,6 @@ def q_live_ingest_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``dedup_quad_stream`` in a real Structured Streaming run; the sink
     must hold each quad exactly once.  sf_dir unused: the fixture IS the
     stream."""
-    import shutil
-    import tempfile
-    import uuid
-
     from janus_spark.sources.stream import dedup_quad_stream
 
     fixture = spark.range(1, 41).select(
@@ -4735,33 +4592,15 @@ def q_live_ingest_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("id").cast("string").alias("object"),
         F.lit("g").alias("graph"),
     )
-    root = tempfile.mkdtemp(prefix="live_dedup_")
-    name = f"live_dedup_{uuid.uuid4().hex[:8]}"
-    try:
+    with _scratch_dir("live_dedup_") as root:
         # batch 1: originals; batch 2: full redelivery + the tail half
         # again — duplicates arrive both within and across micro-batches
-        fixture.coalesce(1).write.parquet(f"{root}/f1.parquet")
-        fixture.unionByName(fixture.where("ts > 10000")).coalesce(1).write.parquet(
-            f"{root}/f2.parquet"
-        )
-        stream = (
-            spark.readStream.schema("ts long, subject string, predicate string, object string, graph string")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(f"{root}/f*.parquet")
+        stream = _fixture_stream(
+            spark, root, [fixture, fixture.unionByName(fixture.where("ts > 10000"))],
+            "ts long, subject string, predicate string, object string, graph string",
         )
         deduped = dedup_quad_stream(stream, within="10 minutes")
-        q = (
-            deduped.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(name)
-            .option("checkpointLocation", f"{root}/ckpt")
-            .trigger(availableNow=True)
-            .start()
-        )
-        _await_stream(q, 300)
-        sunk = spark.table(name).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+        sunk = _drain_to_memory(deduped, root).localCheckpoint(eager=True)
     return sunk.select("ts", "subject", "object")
 
 
@@ -4778,7 +4617,7 @@ def q_corpus_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     dominant language + share); see datapipe/text.py::corpus_report."""
     from janus_spark.datapipe.text import corpus_report
 
-    docs = _read_wide(spark, f"{sf_dir}/documents.parquet")
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     return corpus_report(docs)
 
 
@@ -4810,7 +4649,7 @@ def q_multimodal_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     from janus_spark.datapipe.multimodal import documents_as_media, extract_features
     from janus_spark.datapipe.similarity import cosine_topk
 
-    docs = _read_wide(spark, f"{sf_dir}/documents.parquet")
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     feats = extract_features(documents_as_media(docs), dim=8)
     embs = feats.select(F.col("media_id").alias("vec_id"), "embedding")
     out = cosine_topk(embs, embs.where("vec_id < 3"), k=5)
@@ -4965,7 +4804,7 @@ def q_bfs_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
     recursive-CTE MIN oracle."""
     from janus_spark.operators.graph import bfs_hops
 
-    docs = _read_wide(spark, f"{sf_dir}/documents.parquet").select("doc_id")
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id")
     e2 = docs.where("doc_id >= 1").select(
         (F.col("doc_id") / 2).cast("long").alias("src"), F.col("doc_id").alias("dst")
     )
@@ -5000,7 +4839,7 @@ def q_tpch_returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:
     nation broadcast; deterministic tiebreak on custkey for the top-20."""
     li = spark.read.parquet(f"{sf_dir}/lineitem.parquet").where(F.col("l_returnflag") == "R")
     orders = spark.read.parquet(f"{sf_dir}/orders.parquet").select("o_orderkey", "o_custkey")
-    cust = _read_wide(spark, f"{sf_dir}/customer.parquet").select(
+    cust = spark.read.parquet(f"{sf_dir}/customer.parquet").select(
         "c_custkey", "c_name", "c_nationkey", "c_acctbal"
     )
     nation = spark.read.parquet(f"{sf_dir}/nation.parquet").select("n_nationkey", "n_name")
@@ -5038,7 +4877,7 @@ def q_tpch_large_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = spark.read.parquet(f"{sf_dir}/orders.parquet").select(
         "o_orderkey", "o_custkey", "o_orderdate", "o_totalprice"
     )
-    cust = _read_wide(spark, f"{sf_dir}/customer.parquet").select("c_custkey", "c_name")
+    cust = spark.read.parquet(f"{sf_dir}/customer.parquet").select("c_custkey", "c_name")
     big = (
         li.groupBy("l_orderkey")
         .agg(F.round(F.sum("l_quantity"), 2).alias("total_qty"))
@@ -5075,7 +4914,7 @@ def q_shortest_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
     recursive-CTE MIN oracle.  operators/graph.py::shortest_paths."""
     from janus_spark.operators.graph import shortest_paths
 
-    docs = _read_wide(spark, f"{sf_dir}/documents.parquet").select("doc_id")
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id")
     e2 = docs.where("doc_id >= 1").select(
         (F.col("doc_id") / 2).cast("long").alias("src"),
         F.col("doc_id").alias("dst"),
@@ -5197,7 +5036,7 @@ def q_vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     (datapipe/text.py::vocab_coverage)."""
     from janus_spark.datapipe.text import vocab_coverage
 
-    docs = _read_wide(spark, f"{sf_dir}/documents.parquet")
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     out = vocab_coverage(docs, vocab_size=100)
     return out.select(
         "doc_id",
@@ -5257,10 +5096,6 @@ def q_live_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
     watermark-closed); point estimates for the probe set read off the
     sunk cells in batch.  Deterministic md5 CMS → the ESTIMATES are
     oracle-EXACT.  sf_dir unused: the fixture IS the stream."""
-    import shutil
-    import tempfile
-    import uuid
-
     from janus_spark.functions.sketches import cms_estimate
     from janus_spark.streaming.native_agg import cms_count_stream
 
@@ -5271,33 +5106,17 @@ def q_live_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
     closer = spark.range(1).select(
         F.lit(95_000).cast("long").alias("ts"), F.lit("z").alias("user")
     )
-    root = tempfile.mkdtemp(prefix="live_cms_")
-    name = f"live_cms_{uuid.uuid4().hex[:8]}"
-    try:
-        fixture.where("ts <= 15000").coalesce(1).write.parquet(f"{root}/f1.parquet")
-        fixture.where("ts > 15000").coalesce(1).write.parquet(f"{root}/f2.parquet")
-        closer.coalesce(1).write.parquet(f"{root}/f3.parquet")
-        stream = (
-            spark.readStream.schema("ts long, user string")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(f"{root}/f*.parquet")
+    with _scratch_dir("live_cms_") as root:
+        stream = _fixture_stream(
+            spark, root,
+            [fixture.where("ts <= 15000"), fixture.where("ts > 15000"), closer],
+            "ts long, user string",
         )
         cells = cms_count_stream(
             stream, [], ts_col="ts", value_col="user",
             window_ms=4_000, depth=4, width=64,
         )
-        q = (
-            cells.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(name)
-            .option("checkpointLocation", f"{root}/ckpt")
-            .trigger(availableNow=True)
-            .start()
-        )
-        _await_stream(q, 300)
-        sunk = spark.table(name).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+        sunk = _drain_to_memory(cells, root).localCheckpoint(eager=True)
     probes = spark.range(7).select(F.col("id").cast("string").alias("user"))
     out = cms_estimate(sunk, probes, "user", ["window_start"], depth=4, width=64)
     return out.select("window_start", F.col("item").alias("user"), "est")
@@ -5325,7 +5144,7 @@ def q_audio_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     (datapipe/multimodal.py::audio_window_features)."""
     from janus_spark.datapipe.multimodal import audio_window_features
 
-    docs = _read_wide(spark, f"{sf_dir}/documents.parquet")
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     audio = docs.where(F.col("doc_id") % 3 == 1).select(F.col("doc_id").alias("media_id"))
     return audio_window_features(audio, frame=100)
 
@@ -5431,7 +5250,7 @@ def q_tpch_promo(spark: SparkSession, sf_dir: str) -> DataFrame:
     one conditional-aggregate pass over the fact; decimal(18,2) cents
     keep the ratio engine-exact."""
     li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    part = _read_wide(spark, f"{sf_dir}/part.parquet").select("p_partkey", "p_type")
+    part = spark.read.parquet(f"{sf_dir}/part.parquet").select("p_partkey", "p_type")
     # decimal(18,4): the 4th decimal of the price product sits ~5 orders
     # of magnitude above double ulp, so both engines round identically
     # (a ,2 cast lands ON half-cent boundaries and diverges)
@@ -5538,7 +5357,7 @@ def q_corpus_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     cross the shuffle) — datapipe/dedup.py::corpus_diff."""
     from janus_spark.datapipe.dedup import corpus_diff
 
-    docs = _read_wide(spark, f"{sf_dir}/documents.parquet")
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     old = docs.where(F.col("doc_id") % 11 != 0)  # new crawl drops these
     new = docs.where(F.col("doc_id") % 13 != 0).withColumn(
         "text",
@@ -5570,7 +5389,7 @@ def q_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     recursive-CTE reachability oracle."""
     from janus_spark.datapipe.dedup import dedup_clusters
 
-    docs = _read_wide(spark, f"{sf_dir}/documents.parquet").select("doc_id")
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id")
     # chains of length 5 (doc -> doc+1 within each 5-block) over a
     # sparse subset, plus long-range edges stitching blocks that share
     # doc_id % 97
@@ -5647,10 +5466,6 @@ def q_live_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     progress state crosses every boundary, and exactly the u%6==0 users
     complete, emitted once at their purchase instant.  sf_dir unused:
     the fixture IS the stream."""
-    import shutil
-    import tempfile
-    import uuid
-
     from janus_spark.streaming.stateful import streaming_funnel
 
     u = spark.range(0, 50)
@@ -5667,32 +5482,11 @@ def q_live_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     dup_purchases = u.where("id % 6 = 0").selectExpr(
         "CAST(id AS STRING) AS user", "CAST(100*id + 40 AS DOUBLE) AS ts", "'purchase' AS event"
     )  # second conversion: must not double-emit
-    batch1 = early_clicks.unionByName(views)
-    batch2 = clicks
-    batch3 = purchases.unionByName(dup_purchases)
-    root = tempfile.mkdtemp(prefix="live_funnel_")
-    name = f"live_funnel_{uuid.uuid4().hex[:8]}"
-    try:
-        batch1.coalesce(1).write.parquet(f"{root}/b0.parquet")
-        batch2.coalesce(1).write.parquet(f"{root}/b1.parquet")
-        batch3.coalesce(1).write.parquet(f"{root}/b2.parquet")
-        stream = (
-            spark.readStream.schema("user string, ts double, event string")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(f"{root}/b*.parquet")
-        )
+    batches = [early_clicks.unionByName(views), clicks, purchases.unionByName(dup_purchases)]
+    with _scratch_dir("live_funnel_") as root:
+        stream = _fixture_stream(spark, root, batches, "user string, ts double, event string")
         out = streaming_funnel(stream, ["view", "click", "purchase"])
-        q = (
-            out.writeStream.format("memory")
-            .queryName(name)
-            .option("checkpointLocation", f"{root}/ck")
-            .trigger(availableNow=True)
-            .start()
-        )
-        _await_stream(q, 300)
-        res = spark.table(name).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+        res = _drain_to_memory(out, root).localCheckpoint(eager=True)
     return res.select("user", "t1", "completed_at")
 
 
@@ -5794,7 +5588,7 @@ def q_path_alt_closure(spark: SparkSession, sf_dir: str) -> DataFrame:
     plus operators — the union relation is closed, not each branch
     separately (doc//2 edges are p1, doc//3 edges are p2, so mixed-label
     paths exist); recursive-CTE oracle."""
-    docs = _read_wide(spark, f"{sf_dir}/documents.parquet").where("doc_id >= 1 AND doc_id < 200")
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").where("doc_id >= 1 AND doc_id < 200")
     e1 = docs.select(
         F.lit(0).alias("ts"),
         F.concat(F.lit("urn:doc:"), F.col("doc_id").cast("string")).alias("subject"),
@@ -5836,7 +5630,7 @@ def q_zipf_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     (datapipe/text.py::zipf_fit)."""
     from janus_spark.datapipe.text import zipf_fit
 
-    docs = _read_wide(spark, f"{sf_dir}/documents.parquet")
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     return zipf_fit(docs)
 
 
@@ -5861,7 +5655,7 @@ def q_tpch_custdist(spark: SparkSession, sf_dir: str) -> DataFrame:
     join's right side (pre-filtered before the join ≡ ON-clause
     predicate), then a double aggregation.  One shuffle join on custkey
     + two small aggs."""
-    cust = _read_wide(spark, f"{sf_dir}/customer.parquet").select("c_custkey")
+    cust = spark.read.parquet(f"{sf_dir}/customer.parquet").select("c_custkey")
     orders = (
         spark.read.parquet(f"{sf_dir}/orders.parquet")
         .where(F.col("o_orderpriority") != "1-URGENT")
@@ -5892,7 +5686,7 @@ def q_tpch_disjunctive(spark: SparkSession, sf_dir: str) -> DataFrame:
     common l_quantity bound to the lineitem scan; the disjunction is
     evaluated post-join.  Money in exact decimals."""
     li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    part = _read_wide(spark, f"{sf_dir}/part.parquet")
+    part = spark.read.parquet(f"{sf_dir}/part.parquet")
     j = li.join(F.broadcast(part), li.l_partkey == part.p_partkey)
     qty = F.col("l_quantity")
     c1 = (F.col("p_brand") == "Brand#11") & F.col("p_size").between(1, 15) & qty.between(1, 11)
@@ -5976,7 +5770,7 @@ def q_tpch_idle_rich(spark: SparkSession, sf_dir: str) -> DataFrame:
     scalar AVG threshold is compared by integer cross-multiplication
     (acctbal_cents · n_pos > total_pos_cents) so the boundary is exact in
     both engines; the no-recent-orders test is a left-anti join."""
-    cust = _read_wide(spark, f"{sf_dir}/customer.parquet")
+    cust = spark.read.parquet(f"{sf_dir}/customer.parquet")
     orders = (
         spark.read.parquet(f"{sf_dir}/orders.parquet")
         .where(F.col("o_orderdate") >= F.lit("2001-01-01"))
@@ -6088,7 +5882,7 @@ def q_skyline(spark: SparkSession, sf_dir: str) -> DataFrame:
     prune + exact frontier pass (operators/analytics.py::skyline2d)."""
     from janus_spark.operators.analytics import skyline2d
 
-    part = _read_wide(spark, f"{sf_dir}/part.parquet")
+    part = spark.read.parquet(f"{sf_dir}/part.parquet")
     out = skyline2d(part, "p_retailprice", "p_size")
     return out.select(F.col("x").alias("price"), F.col("y").cast("long").alias("size"))
 
@@ -6119,7 +5913,7 @@ def q_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     inverted index (datapipe/retrieval.py::bm25_topk)."""
     from janus_spark.datapipe.retrieval import bm25_topk
 
-    docs = _read_wide(spark, f"{sf_dir}/documents.parquet")
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     return bm25_topk(docs, _bm25_query_df(spark), k=10)
 
 
@@ -6170,8 +5964,8 @@ def q_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     from janus_spark.datapipe.retrieval import bm25_topk, rrf_fuse
     from janus_spark.datapipe.similarity import cosine_topk
 
-    docs = _read_wide(spark, f"{sf_dir}/documents.parquet")
-    embs = _read_wide(spark, f"{sf_dir}/embeddings.parquet")
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    embs = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     qdocs = docs.where("doc_id < 3").select(
         F.concat(F.lit("d"), F.col("doc_id")).alias("query_id"),
         F.col("doc_id").alias("__self"),
@@ -6201,15 +5995,14 @@ def q_bm25_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     the reference recomputes per refresh,
     src/execution/historical_executor.rs — this is the Spark-first
     maintained alternative)."""
-    import tempfile
-
     from janus_spark.datapipe.retrieval import IncrementalBM25Index
 
-    docs = _read_wide(spark, f"{sf_dir}/documents.parquet")
-    idx = IncrementalBM25Index(spark, tempfile.mkdtemp(prefix="bm25_inc_"))
-    idx.update(docs.where("doc_id % 2 = 0"))
-    idx.update(docs.where("doc_id % 2 = 1"))
-    return idx.query(_bm25_query_df(spark), k=7)
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    with _scratch_dir("bm25_inc_") as root:
+        idx = IncrementalBM25Index(spark, root)
+        idx.update(docs.where("doc_id % 2 = 0"))
+        idx.update(docs.where("doc_id % 2 = 1"))
+        return idx.query(_bm25_query_df(spark), k=7).localCheckpoint(eager=True)
 
 
 QUERIES["q_bm25_incremental"] = q_bm25_incremental
@@ -6300,14 +6093,10 @@ def q_incremental_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     versioned partial-agg store ≡ one full recompute (count/sum/avg/
     min/max in exact cents + det-HLL distinct users)
     (operators/incremental.py::IncrementalAgg)."""
-    import shutil
-    import tempfile
-
     from janus_spark.operators.incremental import IncrementalAgg
 
     ev = read_events(spark, sf_dir)
-    root = tempfile.mkdtemp(prefix="janus_incr_")
-    try:
+    with _scratch_dir("janus_incr_") as root:
         inc = IncrementalAgg(
             spark, f"{root}/rollup", ["event_type"], value_col="value",
             distinct_col="user_id",
@@ -6317,8 +6106,6 @@ def q_incremental_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
         out = inc.read()
         out = spark.createDataFrame(out.collect(), out.schema)  # detach from tmp files
         return out
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
 
 
 QUERIES["q_incremental_agg"] = q_incremental_agg
@@ -6349,10 +6136,6 @@ def q_live_linreg(spark: SparkSession, sf_dir: str) -> DataFrame:
     r² finish in batch off the sink (streaming/native_agg.py::
     moment_stream + operators/timeseries.py::ols_from_moments).
     sf_dir unused: the fixture IS the stream."""
-    import shutil
-    import tempfile
-    import uuid
-
     from janus_spark.operators.timeseries import ols_from_moments
     from janus_spark.streaming.native_agg import moment_stream
 
@@ -6366,30 +6149,14 @@ def q_live_linreg(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit("9").alias("sensor"),
         F.lit(25.0).alias("value"),
     )
-    root = tempfile.mkdtemp(prefix="live_ols_")
-    name = f"live_ols_{uuid.uuid4().hex[:8]}"
-    try:
-        fixture.where("ts <= 15000").coalesce(1).write.parquet(f"{root}/f1.parquet")
-        fixture.where("ts > 15000").coalesce(1).write.parquet(f"{root}/f2.parquet")
-        closer.coalesce(1).write.parquet(f"{root}/f3.parquet")
-        stream = (
-            spark.readStream.schema("ts long, sensor string, value double")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(f"{root}/f*.parquet")
+    with _scratch_dir("live_ols_") as root:
+        stream = _fixture_stream(
+            spark, root,
+            [fixture.where("ts <= 15000"), fixture.where("ts > 15000"), closer],
+            "ts long, sensor string, value double",
         )
         mom = moment_stream(stream, ["sensor"], window_ms=4_000)
-        q = (
-            mom.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(name)
-            .option("checkpointLocation", f"{root}/ckpt")
-            .trigger(availableNow=True)
-            .start()
-        )
-        _await_stream(q, 300)
-        sunk = spark.table(name).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+        sunk = _drain_to_memory(mom, root).localCheckpoint(eager=True)
     return ols_from_moments(sunk, ["window_start", "sensor"], slope_unit=1000)
 
 
@@ -6429,7 +6196,7 @@ def q_harmonic_centrality(spark: SparkSession, sf_dir: str) -> DataFrame:
     (operators/graph.py::harmonic_centrality)."""
     from janus_spark.operators.graph import harmonic_centrality
 
-    docs = _read_wide(spark, f"{sf_dir}/documents.parquet").select("doc_id").where(
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id").where(
         "doc_id < 400"
     )
     e2 = docs.where("doc_id >= 1").select(
@@ -6582,7 +6349,7 @@ def q_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     ANN gates."""
     from janus_spark.datapipe.similarity import cosine_topk
 
-    embs = _read_wide(spark, f"{sf_dir}/embeddings.parquet")
+    embs = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     anchors = embs.where("vec_id < 5")
     sims = cosine_topk(embs, anchors, k=None)  # all ranked candidates
     labels = embs.select("vec_id", "label")
@@ -6630,10 +6397,6 @@ def q_live_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     early purchases in b2 + a campaign switch for u%3==0, late purchases
     in b3 falling outside the 100ms lookback).  sf_dir unused: the
     fixture IS the stream (streaming/stateful.py::streaming_attribution)."""
-    import shutil
-    import tempfile
-    import uuid
-
     from janus_spark.streaming.stateful import streaming_attribution
 
     u = spark.range(0, 40)
@@ -6663,30 +6426,13 @@ def q_live_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
             "CAST(1.0 AS DOUBLE) AS value",
         )
     )
-    root = tempfile.mkdtemp(prefix="live_attr_")
-    name = f"live_attr_{uuid.uuid4().hex[:8]}"
-    try:
-        for i, b in enumerate([b1, b2, b3]):
-            b.coalesce(1).write.parquet(f"{root}/b{i}.parquet")
-        stream = (
-            spark.readStream.schema(
-                "user string, ts double, event string, campaign string, value double"
-            )
-            .option("maxFilesPerTrigger", 1)
-            .parquet(f"{root}/b*.parquet")
+    with _scratch_dir("live_attr_") as root:
+        stream = _fixture_stream(
+            spark, root, [b1, b2, b3],
+            "user string, ts double, event string, campaign string, value double",
         )
         out = streaming_attribution(stream, "purchase", "click", lookback_ms=100.0)
-        q = (
-            out.writeStream.format("memory")
-            .queryName(name)
-            .option("checkpointLocation", f"{root}/ck")
-            .trigger(availableNow=True)
-            .start()
-        )
-        _await_stream(q, 300)
-        res = spark.table(name).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+        res = _drain_to_memory(out, root).localCheckpoint(eager=True)
     return res.select("user", "ts", "campaign", "value")
 
 
@@ -6730,7 +6476,7 @@ def q_bpe_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     merge-candidate table; one map+aggregate pass, no UDFs."""
     from janus_spark.datapipe.text import char_pair_counts
 
-    docs = _read_wide(spark, f"{sf_dir}/documents.parquet")
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     return char_pair_counts(docs, k=30)
 
 
@@ -6753,7 +6499,7 @@ def q_skyline3d(spark: SparkSession, sf_dir: str) -> DataFrame:
     from janus_spark.operators.analytics import skyline
 
     li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    part = _read_wide(spark, f"{sf_dir}/part.parquet")
+    part = spark.read.parquet(f"{sf_dir}/part.parquet")
     stats = li.groupBy("l_partkey").agg(
         F.min("l_extendedprice").alias("min_price"),
         F.min("l_discount").alias("min_disc"),
@@ -6791,7 +6537,7 @@ def q_scene_changes(spark: SparkSession, sf_dir: str) -> DataFrame:
     Feature model is the shared md5 hash family, so the gate is EXACT."""
     from janus_spark.datapipe.multimodal import decode_media, documents_as_media, scene_changes
 
-    docs = _read_wide(spark, f"{sf_dir}/documents.parquet").where("doc_id < 30")
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").where("doc_id < 30")
     decoded = decode_media(documents_as_media(docs)).where(
         F.col("media_type") == "video"
     )
@@ -6831,10 +6577,6 @@ def q_live_ohlc(spark: SparkSession, sf_dir: str) -> DataFrame:
     (min_by/max_by witness structs, append mode, watermark-closed) —
     the continuous form of q_ohlc_resample
     (streaming/native_agg.py::ohlc_stream).  sf_dir unused."""
-    import shutil
-    import tempfile
-    import uuid
-
     from janus_spark.streaming.native_agg import ohlc_stream
 
     fixture = spark.range(1, 61).select(
@@ -6849,30 +6591,14 @@ def q_live_ohlc(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit("9").alias("sensor"),
         F.lit(25.0).alias("value"),
     )
-    root = tempfile.mkdtemp(prefix="live_ohlc_")
-    name = f"live_ohlc_{uuid.uuid4().hex[:8]}"
-    try:
-        fixture.where("ts <= 15000").coalesce(1).write.parquet(f"{root}/f1.parquet")
-        fixture.where("ts > 15000").coalesce(1).write.parquet(f"{root}/f2.parquet")
-        closer.coalesce(1).write.parquet(f"{root}/f3.parquet")
-        stream = (
-            spark.readStream.schema("ts long, event_id long, sensor string, value double")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(f"{root}/f*.parquet")
+    with _scratch_dir("live_ohlc_") as root:
+        stream = _fixture_stream(
+            spark, root,
+            [fixture.where("ts <= 15000"), fixture.where("ts > 15000"), closer],
+            "ts long, event_id long, sensor string, value double",
         )
         bars = ohlc_stream(stream, ["sensor"], window_ms=4_000)
-        q = (
-            bars.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(name)
-            .option("checkpointLocation", f"{root}/ckpt")
-            .trigger(availableNow=True)
-            .start()
-        )
-        _await_stream(q, 300)
-        res = spark.table(name).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+        res = _drain_to_memory(bars, root).localCheckpoint(eager=True)
     return res.select("window_start", "sensor", "n", "open", "high", "low", "close")
 
 
@@ -6901,10 +6627,6 @@ def q_live_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
     sink and are oracle-EXACT because the sketch is the engine-portable
     md5-family one (streaming/native_agg.py::hll_register_stream).
     sf_dir unused."""
-    import shutil
-    import tempfile
-    import uuid
-
     from janus_spark.functions.sketches import hll_det_estimate
     from janus_spark.streaming.native_agg import hll_register_stream
 
@@ -6918,30 +6640,14 @@ def q_live_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit("9").alias("sensor"),
         F.lit("z").alias("value"),
     )
-    root = tempfile.mkdtemp(prefix="live_hll_")
-    name = f"live_hll_{uuid.uuid4().hex[:8]}"
-    try:
-        fixture.where("ts <= 15000").coalesce(1).write.parquet(f"{root}/f1.parquet")
-        fixture.where("ts > 15000").coalesce(1).write.parquet(f"{root}/f2.parquet")
-        closer.coalesce(1).write.parquet(f"{root}/f3.parquet")
-        stream = (
-            spark.readStream.schema("ts long, sensor string, value string")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(f"{root}/f*.parquet")
+    with _scratch_dir("live_hll_") as root:
+        stream = _fixture_stream(
+            spark, root,
+            [fixture.where("ts <= 15000"), fixture.where("ts > 15000"), closer],
+            "ts long, sensor string, value string",
         )
         regs = hll_register_stream(stream, ["sensor"], window_ms=4_000)
-        q = (
-            regs.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(name)
-            .option("checkpointLocation", f"{root}/ckpt")
-            .trigger(availableNow=True)
-            .start()
-        )
-        _await_stream(q, 300)
-        sunk = spark.table(name).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+        sunk = _drain_to_memory(regs, root).localCheckpoint(eager=True)
     return hll_det_estimate(sunk, ["window_start", "sensor"])
 
 
@@ -6998,10 +6704,6 @@ def q_live_match_pattern(spark: SparkSession, sf_dir: str) -> DataFrame:
     complete ACROSS three real micro-batches (clicks land one per
     batch; per-user suffix state carries the partial match)
     (streaming/stateful.py::streaming_match_pattern).  sf_dir unused."""
-    import shutil
-    import tempfile
-    import uuid
-
     from janus_spark.streaming.stateful import streaming_match_pattern
 
     u = spark.range(0, 20)
@@ -7026,30 +6728,12 @@ def q_live_match_pattern(spark: SparkSession, sf_dir: str) -> DataFrame:
             "CAST(id AS STRING) AS user", "CAST(60 AS DOUBLE) AS ts", "'purchase' AS event"
         )  # no click ever: must NOT match
     )
-    root = tempfile.mkdtemp(prefix="live_cep_")
-    name = f"live_cep_{uuid.uuid4().hex[:8]}"
-    try:
-        for i, b in enumerate([b1, b2, b3]):
-            b.coalesce(1).write.parquet(f"{root}/b{i}.parquet")
-        stream = (
-            spark.readStream.schema("user string, ts double, event string")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(f"{root}/b*.parquet")
-        )
+    with _scratch_dir("live_cep_") as root:
+        stream = _fixture_stream(spark, root, [b1, b2, b3], "user string, ts double, event string")
         out = streaming_match_pattern(
             stream, "vc+p", {"view": "v", "click": "c", "purchase": "p"}
         )
-        q = (
-            out.writeStream.format("memory")
-            .queryName(name)
-            .option("checkpointLocation", f"{root}/ck")
-            .trigger(availableNow=True)
-            .start()
-        )
-        _await_stream(q, 300)
-        res = spark.table(name).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+        res = _drain_to_memory(out, root).localCheckpoint(eager=True)
     return res.select("user", "ts", "n_new", "n_total")
 
 
@@ -7072,10 +6756,6 @@ def q_live_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     associative across batches).  Final read() ≡ full recompute, which
     is what the oracle checks.  sf_dir unused: the fixture IS the
     stream."""
-    import shutil
-    import tempfile
-    import uuid
-
     from janus_spark.operators.incremental import IncrementalAgg
 
     fixture = spark.range(1, 61).select(
@@ -7084,32 +6764,27 @@ def q_live_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         (20.0 + (F.col("id") % 10)).alias("value"),
         (F.col("id") % 7).alias("user_id"),
     )
-    root = tempfile.mkdtemp(prefix="live_mv_")
-    name = f"live_mv_{uuid.uuid4().hex[:8]}"
-    try:
-        for i, cond in enumerate(["ts <= 10000", "ts > 10000 AND ts <= 20000", "ts > 20000"]):
-            fixture.where(cond).coalesce(1).write.parquet(f"{root}/b{i}.parquet")
+    with _scratch_dir("live_mv_") as root:
+        parts = [
+            fixture.where(cond)
+            for cond in ["ts <= 10000", "ts > 10000 AND ts <= 20000", "ts > 20000"]
+        ]
+        stream = _fixture_stream(
+            spark, root, parts, "ts long, sensor string, value double, user_id long"
+        )
         inc = IncrementalAgg(
             spark, f"{root}/rollup", ["sensor"], value_col="value",
             distinct_col="user_id",
         )
-        stream = (
-            spark.readStream.schema("ts long, sensor string, value double, user_id long")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(f"{root}/b*.parquet")
-        )
         q = (
             stream.writeStream.foreachBatch(lambda df, _id: inc.update(df))
             .option("checkpointLocation", f"{root}/ck")
-            .queryName(name)
             .trigger(availableNow=True)
             .start()
         )
         _await_stream(q, 300)
         out = inc.read()
         return spark.createDataFrame(out.collect(), out.schema)  # detach from tmp
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
 
 
 QUERIES["q_live_rollup"] = q_live_rollup
@@ -7147,7 +6822,7 @@ def q_contamination_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast, corpus scanned once map-side."""
     from janus_spark.datapipe.similarity import semantic_contamination
 
-    embs = _read_wide(spark, f"{sf_dir}/embeddings.parquet")
+    embs = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     mx = embs.agg(F.max("vec_id")).collect()[0][0]
     bench = embs.where(F.col("vec_id") > mx - 5)
     corpus = embs.where(F.col("vec_id") <= mx - 5)
@@ -7447,12 +7122,8 @@ def q_jsonl_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregates of round-tripped fields (text length survives JSON
     escaping; doubles deliberately excluded — JSON float round-trip is
     a different contract)."""
-    import shutil
-    import tempfile
-
-    docs = _read_wide(spark, f"{sf_dir}/documents.parquet")
-    root = tempfile.mkdtemp(prefix="jsonl_")
-    try:
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    with _scratch_dir("jsonl_") as root:
         docs.select("doc_id", "text", "lang", "source").coalesce(4).write.mode(
             "overwrite"
         ).json(f"{root}/docs")
@@ -7466,8 +7137,6 @@ def q_jsonl_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(F.col("doc_id")).alias("id_checksum"),
         )
         return spark.createDataFrame(out.collect(), out.schema)  # detach from tmp
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
 
 
 QUERIES["q_jsonl_roundtrip"] = q_jsonl_roundtrip
@@ -7601,7 +7270,7 @@ def q_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc-level summary view of the corpus inverted index."""
     from janus_spark.datapipe.text import clean_tokens
 
-    docs = _read_wide(spark, f"{sf_dir}/documents.parquet")
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     words = docs.select(
         F.col("doc_id").alias("id"), F.explode(clean_tokens("text")).alias("t")
     )
@@ -7732,10 +7401,6 @@ def q_live_validate(spark: SparkSession, sf_dir: str) -> DataFrame:
     nulls / out-of-range / bad-enum rows stream through a real run;
     per-window violation counts emit on close
     (streaming/native_agg.py::rule_violation_stream).  sf_dir unused."""
-    import shutil
-    import tempfile
-    import uuid
-
     from janus_spark.streaming.native_agg import rule_violation_stream
 
     fixture = spark.range(1, 61).selectExpr(
@@ -7746,16 +7411,11 @@ def q_live_validate(spark: SparkSession, sf_dir: str) -> DataFrame:
     closer = spark.range(1).selectExpr(
         "CAST(95000 AS LONG) AS ts", "CAST(25.0 AS DOUBLE) AS value", "'0' AS sensor"
     )
-    root = tempfile.mkdtemp(prefix="live_dq_")
-    name = f"live_dq_{uuid.uuid4().hex[:8]}"
-    try:
-        fixture.where("ts <= 15000").coalesce(1).write.parquet(f"{root}/f1.parquet")
-        fixture.where("ts > 15000").coalesce(1).write.parquet(f"{root}/f2.parquet")
-        closer.coalesce(1).write.parquet(f"{root}/f3.parquet")
-        stream = (
-            spark.readStream.schema("ts long, value double, sensor string")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(f"{root}/f*.parquet")
+    with _scratch_dir("live_dq_") as root:
+        stream = _fixture_stream(
+            spark, root,
+            [fixture.where("ts <= 15000"), fixture.where("ts > 15000"), closer],
+            "ts long, value double, sensor string",
         )
         out = rule_violation_stream(
             stream,
@@ -7763,18 +7423,7 @@ def q_live_validate(spark: SparkSession, sf_dir: str) -> DataFrame:
              ("in_set", "sensor", ["0", "1", "2"])],
             window_ms=4_000,
         )
-        q = (
-            out.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(name)
-            .option("checkpointLocation", f"{root}/ckpt")
-            .trigger(availableNow=True)
-            .start()
-        )
-        _await_stream(q, 300)
-        res = spark.table(name).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+        res = _drain_to_memory(out, root).localCheckpoint(eager=True)
     return res
 
 
@@ -8000,7 +7649,7 @@ def q_tpch_ship_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     (cents × (100−disc_pct)) so the ranking and the emitted doubles are
     engine-exact — ties impossible under the unique orderkey tiebreak."""
     cu = (
-        _read_wide(spark, f"{sf_dir}/customer.parquet")
+        spark.read.parquet(f"{sf_dir}/customer.parquet")
         .where(F.col("c_mktsegment") == "BUILDING")
         .select("c_custkey")
     )
@@ -8098,7 +7747,7 @@ def q_tpch_nation_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("n_name").isin("NATION_1", "NATION_2")
     )
     cu = (
-        _read_wide(spark, f"{sf_dir}/customer.parquet")
+        spark.read.parquet(f"{sf_dir}/customer.parquet")
         .join(F.broadcast(na), F.col("c_nationkey") == F.col("n_nationkey"))
         .select("c_custkey", F.col("n_name").alias("cust_nation"))
     )
@@ -8214,7 +7863,7 @@ def q_khop_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     from janus_spark.operators.graph import khop_neighbor_agg
 
     li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    pa = _read_wide(spark, f"{sf_dir}/part.parquet")
+    pa = spark.read.parquet(f"{sf_dir}/part.parquet")
     lp = li.select(F.col("l_orderkey").alias("o"), F.col("l_partkey").alias("p")).distinct()
     edges = (
         lp.alias("x")
@@ -8258,7 +7907,7 @@ def q_negative_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     from janus_spark.operators.graph import negative_edges
 
     li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    pa = _read_wide(spark, f"{sf_dir}/part.parquet")
+    pa = spark.read.parquet(f"{sf_dir}/part.parquet")
     edges = li.select(
         F.col("l_suppkey").alias("src"), F.col("l_partkey").alias("dst")
     ).distinct()
@@ -8478,7 +8127,7 @@ def q_feature_hashing(spark: SparkSession, sf_dir: str) -> DataFrame:
     index and sign hashes make the vectors engine-reproducible."""
     from janus_spark.datapipe.features import feature_hash
 
-    docs = _read_wide(spark, f"{sf_dir}/documents.parquet")
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     out = feature_hash(docs, "text", "doc_id", n_features=4096)
     return out.select("doc_id", F.col("idx").cast("long").alias("idx"), "val")
 
@@ -8575,10 +8224,6 @@ def q_live_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     (datapipe/features.py::drift_chi2_from_binned).  Deterministic
     integer counting + exact integer chi-square terms → EXACT oracle.
     sf_dir unused: the fixture IS the stream."""
-    import shutil
-    import tempfile
-    import uuid
-
     from janus_spark.datapipe.features import drift_chi2_from_binned
     from janus_spark.streaming.native_agg import histogram_quantile_stream
 
@@ -8589,33 +8234,17 @@ def q_live_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     closer = spark.range(1).select(
         F.lit(95_000).cast("long").alias("ts"), F.lit(25.0).alias("value")
     )
-    root = tempfile.mkdtemp(prefix="live_drift_")
-    name = f"live_drift_{uuid.uuid4().hex[:8]}"
-    try:
-        fixture.where("ts <= 15000").coalesce(1).write.parquet(f"{root}/f1.parquet")
-        fixture.where("ts > 15000").coalesce(1).write.parquet(f"{root}/f2.parquet")
-        closer.coalesce(1).write.parquet(f"{root}/f3.parquet")
-        stream = (
-            spark.readStream.schema("ts long, value double")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(f"{root}/f*.parquet")
+    with _scratch_dir("live_drift_") as root:
+        stream = _fixture_stream(
+            spark, root,
+            [fixture.where("ts <= 15000"), fixture.where("ts > 15000"), closer],
+            "ts long, value double",
         )
         hist = histogram_quantile_stream(
             stream, [], ts_col="ts", value_col="value",
             window_ms=4_000, vmin=20.0, vmax=30.0, n_bins=10,
         )
-        q = (
-            hist.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(name)
-            .option("checkpointLocation", f"{root}/ckpt")
-            .trigger(availableNow=True)
-            .start()
-        )
-        _await_stream(q, 300)
-        counts = spark.table(name).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+        counts = _drain_to_memory(hist, root).localCheckpoint(eager=True)
     ref = (
         spark.range(1, 41)
         .select((F.col("id") % 10).alias("bin"))
@@ -8709,7 +8338,7 @@ def q_line_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     pinned, not just the counts."""
     from janus_spark.datapipe.dedup import line_dedup
 
-    docs = _read_wide(spark, f"{sf_dir}/documents.parquet")
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     toks = F.split(F.col("text"), " ")
     nchunks = F.ceil(F.size(toks) / F.lit(10.0)).cast("int")
     lines = F.when(
@@ -8806,7 +8435,7 @@ def q_tpch_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
     the one real shuffle is lineitem⋈orders; profit in exact 1e-4
     units (revenue cents×(100−disc) minus cost cents×qty×100) summed
     as DECIMAL(38,0) — sign-safe and order-free."""
-    pa = _read_wide(spark, f"{sf_dir}/part.parquet").where(
+    pa = spark.read.parquet(f"{sf_dir}/part.parquet").where(
         F.col("p_name").like("%red%")
     ).select("p_partkey", F.round(F.col("p_retailprice") * 100, 0).cast("long").alias("retail_c"))
     su = (
@@ -8885,7 +8514,7 @@ def q_tpch_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(re), F.col("n_regionkey") == F.col("r_regionkey"))
         .select("s_suppkey", "s_name", "s_acctbal", F.col("n_name").alias("nation"))
     )
-    pa = _read_wide(spark, f"{sf_dir}/part.parquet").where(
+    pa = spark.read.parquet(f"{sf_dir}/part.parquet").where(
         (F.col("p_size") < 10) & (F.col("p_type") == "LARGE")
     ).select("p_partkey", "p_name")
     eligible = supply.join(F.broadcast(su), supply.l_suppkey == su.s_suppkey).withColumn(
@@ -8992,7 +8621,7 @@ def q_tpch_parts_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     bad = spark.read.parquet(f"{sf_dir}/supplier.parquet").where(
         F.col("s_acctbal") < 0
     ).select("s_suppkey")
-    pa = _read_wide(spark, f"{sf_dir}/part.parquet").where(
+    pa = spark.read.parquet(f"{sf_dir}/part.parquet").where(
         (F.col("p_brand") != "Brand#1")
         & (F.col("p_type") != "ECONOMY")
         & F.col("p_size").isin(1, 4, 9, 14, 23, 36, 45, 49)
@@ -9026,7 +8655,7 @@ def q_tpch_part_promotion(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate → per-part threshold join → supplier semi-join, Q20's
     shape; quantities are exact bigints so the ×2 comparison never
     touches a float."""
-    pa = _read_wide(spark, f"{sf_dir}/part.parquet").where(
+    pa = spark.read.parquet(f"{sf_dir}/part.parquet").where(
         F.col("p_name").like("red%")
     ).select("p_partkey")
     li = spark.read.parquet(f"{sf_dir}/lineitem.parquet").where(
@@ -9092,7 +8721,7 @@ def q_split_leakage_safe(spark: SparkSession, sf_dir: str) -> DataFrame:
     the split itself is map-side arithmetic on the rep id."""
     from janus_spark.datapipe.dedup import dedup_clusters, minhash_lsh_pairs, shared_hash64
 
-    docs = _read_wide(spark, f"{sf_dir}/documents.parquet").where("doc_id < 200")
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").where("doc_id < 200")
     mutated = docs.select(
         (F.col("doc_id") + 1000000).alias("doc_id"),
         F.concat(F.col("text"), F.lit(" tailmarker")).alias("text"),
@@ -9301,23 +8930,21 @@ def q_dedup_incremental_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``_minhash_pair_ctes`` template as q_dedup_minhash (no frozen copy
     to drift).  The fuzzy counterpart of the exact fingerprint store
     (``incremental_dedup``); reference recomputes per run."""
-    import tempfile
-
     from janus_spark.datapipe.dedup import incremental_minhash_dedup
 
-    docs = _read_wide(spark, f"{sf_dir}/documents.parquet").where("doc_id < 200")
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").where("doc_id < 200")
     mutated = docs.select(
         (F.col("doc_id") + 1000000).alias("doc_id"),
         F.concat(F.col("text"), F.lit(" tailmarker")).alias("text"),
         "lang", "source", "n_chars",
     )
     corpus = docs.unionByName(mutated)
-    store = tempfile.mkdtemp(prefix="mh_inc_")
     surv = None
-    for lo, hi in ((0, 100), (100, 200), (1000000, 2000000)):
-        batch = corpus.where((F.col("doc_id") >= lo) & (F.col("doc_id") < hi))
-        s = incremental_minhash_dedup(batch, store, hash_fn="md5")
-        surv = s if surv is None else surv.unionByName(s)
+    with _scratch_dir("mh_inc_") as store:  # survivors are checkpointed
+        for lo, hi in ((0, 100), (100, 200), (1000000, 2000000)):
+            batch = corpus.where((F.col("doc_id") >= lo) & (F.col("doc_id") < hi))
+            s = incremental_minhash_dedup(batch, store, hash_fn="md5")
+            surv = s if surv is None else surv.unionByName(s)
     return surv.select(F.col("doc_id").cast("long").alias("doc_id"))
 
 
@@ -9338,7 +8965,7 @@ def q_shuffle_shard(spark: SparkSession, sf_dir: str) -> DataFrame:
     shard so no single-partition global sort exists in the plan."""
     from janus_spark.datapipe.sampling import shuffle_shard
 
-    docs = _read_wide(spark, f"{sf_dir}/documents.parquet").select("doc_id")
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id")
     return shuffle_shard(docs, n_shards=8, seed=1).select(
         F.col("doc_id").cast("long").alias("doc_id"), "shard", "pos"
     )
@@ -9366,7 +8993,7 @@ def _entity_recs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _entity_recs_build(spark: SparkSession, sf_dir: str) -> DataFrame:
-    p = _read_wide(spark, f"{sf_dir}/part.parquet")
+    p = spark.read.parquet(f"{sf_dir}/part.parquet")
     toks = F.split(F.lower(F.col("p_name")), " ")
     base = p.select(
         F.col("p_partkey").alias("rec_id"),
@@ -9590,20 +9217,18 @@ def q_entity_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     (same ``_entity_ctes`` template — no frozen copy to drift).
     Old-old pairs are never re-scored across batches; labels recompute
     over the accumulated edge set only."""
-    import tempfile
-
     from janus_spark.datapipe.entity import incremental_entity_resolution
 
     recs = _entity_recs(spark, sf_dir)
-    store = tempfile.mkdtemp(prefix="ent_inc_")
     out = None
-    for lo, hi in ((0, 700), (700, 1400), (1400, 200_000_000)):
-        batch = recs.where((F.col("rec_id") >= lo) & (F.col("rec_id") < hi))
-        out = incremental_entity_resolution(
-            batch, store, "rec_id", "toks",
-            blocking=[["brand", "noun"], ["ptype", "psize"]], threshold=0.7,
-            numeric_col="price", numeric_scale=100.0, w_tokens=0.8, w_numeric=0.2,
-        )
+    with _scratch_dir("ent_inc_") as store:  # the assignment is checkpointed
+        for lo, hi in ((0, 700), (700, 1400), (1400, 200_000_000)):
+            batch = recs.where((F.col("rec_id") >= lo) & (F.col("rec_id") < hi))
+            out = incremental_entity_resolution(
+                batch, store, "rec_id", "toks",
+                blocking=[["brand", "noun"], ["ptype", "psize"]], threshold=0.7,
+                numeric_col="price", numeric_scale=100.0, w_tokens=0.8, w_numeric=0.2,
+            )
     return out.select(
         F.col("rec_id").cast("long").alias("rec_id"),
         F.col("entity_id").cast("long").alias("entity_id"),
@@ -9688,40 +9313,31 @@ def q_live_entity_resolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-batch atomic publish of the full assignment).  Batch-split
     invariance means the drained stream's published state must equal the
     single-shot run, so the oracle IS q_entity_resolution's."""
-    import shutil
-    import tempfile
-
     from janus_spark.datapipe.entity import entity_resolution_sink
 
     recs = _entity_recs(spark, sf_dir)
-    root = tempfile.mkdtemp(prefix="live_ent_")
-    for i, (lo, hi) in enumerate(((0, 700), (700, 1400), (1400, 200_000_000))):
-        recs.where((F.col("rec_id") >= lo) & (F.col("rec_id") < hi)).coalesce(
-            1
-        ).write.parquet(f"{root}/in/b{i}.parquet")
-    stream = (
-        spark.readStream.schema(recs.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{root}/in/b*.parquet")
-    )
-    q = entity_resolution_sink(
-        stream, f"{root}/store", f"{root}/out", f"{root}/ckpt",
-        "rec_id", "toks",
-        blocking=[["brand", "noun"], ["ptype", "psize"]], threshold=0.7,
-        numeric_col="price", numeric_scale=100.0, w_tokens=0.8, w_numeric=0.2,
-    )
-    _await_stream(q, 600)
-    out = (
-        spark.read.parquet(f"{root}/out")
-        .select(
-            F.col("rec_id").cast("long").alias("rec_id"),
-            F.col("entity_id").cast("long").alias("entity_id"),
-            F.col("canonical_id").cast("long").alias("canonical_id"),
+    parts = [
+        recs.where((F.col("rec_id") >= lo) & (F.col("rec_id") < hi))
+        for lo, hi in ((0, 700), (700, 1400), (1400, 200_000_000))
+    ]
+    with _scratch_dir("live_ent_") as root:
+        stream = _fixture_stream(spark, root, parts, recs.schema, sub="in/f")
+        q = entity_resolution_sink(
+            stream, f"{root}/store", f"{root}/out", f"{root}/ckpt",
+            "rec_id", "toks",
+            blocking=[["brand", "noun"], ["ptype", "psize"]], threshold=0.7,
+            numeric_col="price", numeric_scale=100.0, w_tokens=0.8, w_numeric=0.2,
         )
-        .localCheckpoint(eager=True)
-    )
-    shutil.rmtree(root, ignore_errors=True)
-    return out
+        _await_stream(q, 600)
+        return (
+            spark.read.parquet(f"{root}/out")
+            .select(
+                F.col("rec_id").cast("long").alias("rec_id"),
+                F.col("entity_id").cast("long").alias("entity_id"),
+                F.col("canonical_id").cast("long").alias("canonical_id"),
+            )
+            .localCheckpoint(eager=True)
+        )
 
 
 QUERIES["q_live_entity_resolution"] = q_live_entity_resolution
@@ -9867,7 +9483,7 @@ def q_entity_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     from janus_spark.datapipe.entity import evaluate_resolution
 
     out = _entity_resolved(spark, sf_dir)
-    base_ids = _read_wide(spark, f"{sf_dir}/part.parquet").select(
+    base_ids = spark.read.parquet(f"{sf_dir}/part.parquet").select(
         F.col("p_partkey").alias("a")
     ).where(F.col("a") % 5 == 0)
     truth = base_ids.select("a", (F.col("a") + 100_000_000).alias("b"))
@@ -10100,7 +9716,7 @@ def q_dsir_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     # docs feeds the one fused tokenize+hash pass and the join-back —
     # cut once (r10: dsir_flagged_scores trains AND scores in one pass;
     # bit-identical to dsir_weights + dsir_scores by construction)
-    docs = _read_wide(spark, f"{sf_dir}/documents.parquet").localCheckpoint(
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").localCheckpoint(
         eager=True
     )
     _, scores = dsir_flagged_scores(
@@ -10127,7 +9743,7 @@ def q_dsir_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     scores; only the final draw differs)."""
     from janus_spark.datapipe.selection import dsir_flagged_scores
 
-    docs = _read_wide(spark, f"{sf_dir}/documents.parquet").localCheckpoint(
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").localCheckpoint(
         eager=True
     )
     # r10: fused one-pass train+score; the top-k tail is verbatim
@@ -10208,7 +9824,7 @@ def q_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     the decision, so the split is bit-identical across engines."""
     from janus_spark.datapipe.selection import dsir_flagged_scores
 
-    docs = _read_wide(spark, f"{sf_dir}/documents.parquet").localCheckpoint(
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").localCheckpoint(
         eager=True
     )
     # r10: fused one-pass train+score (bit-identical to
@@ -10243,7 +9859,7 @@ def q_quality_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus size, no float, no ROUND boundary."""
     from janus_spark.datapipe.quality import quality_filter_relative_split
 
-    docs = _read_wide(spark, f"{sf_dir}/documents.parquet").localCheckpoint(
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").localCheckpoint(
         eager=True
     )
     # r10: fused one-pass train+score+cut (bit-identical to
@@ -10273,13 +9889,9 @@ def q_live_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     NB log-odds weights trained batch-side.  Stateless scoring is
     micro-batch invariant, so the streamed result must equal the batch
     classifier bit-for-bit — the oracle IS q_quality_classifier's."""
-    import shutil
-    import tempfile
-    import uuid
-
     from janus_spark.datapipe.quality import nb_quality_weights, quality_stream_scores
 
-    docs = _read_wide(spark, f"{sf_dir}/documents.parquet").localCheckpoint(
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").localCheckpoint(
         eager=True
     )
     pos = docs.where(F.col("lang") == "en")
@@ -10288,38 +9900,16 @@ def q_live_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     witems = [
         (r["b"], r["w"]) for r in nb_quality_weights(pos, neg, n_buckets=4096).collect()
     ]
-    root = tempfile.mkdtemp(prefix="live_quality_")
-    name = f"live_quality_{uuid.uuid4().hex[:8]}"
-    try:
-        third = docs.select(F.max("doc_id").alias("m")).head()["m"] // 3
-        docs.where(F.col("doc_id") <= third).coalesce(1).write.parquet(
-            f"{root}/f1.parquet"
-        )
-        docs.where(
-            (F.col("doc_id") > third) & (F.col("doc_id") <= 2 * third)
-        ).coalesce(1).write.parquet(f"{root}/f2.parquet")
-        docs.where(F.col("doc_id") > 2 * third).coalesce(1).write.parquet(
-            f"{root}/f3.parquet"
-        )
-        stream = (
-            spark.readStream.schema(docs.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(f"{root}/f*.parquet")
-        )
+    third = docs.select(F.max("doc_id").alias("m")).head()["m"] // 3
+    parts = [
+        docs.where(F.col("doc_id") <= third),
+        docs.where((F.col("doc_id") > third) & (F.col("doc_id") <= 2 * third)),
+        docs.where(F.col("doc_id") > 2 * third),
+    ]
+    with _scratch_dir("live_quality_") as root:
+        stream = _fixture_stream(spark, root, parts, docs.schema)
         out = quality_stream_scores(stream, witems, n_buckets=4096)
-        q = (
-            out.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(name)
-            .option("checkpointLocation", f"{root}/ckpt")
-            .trigger(availableNow=True)
-            .start()
-        )
-        _await_stream(q, 300)
-        res = spark.table(name).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
-    return res
+        return _drain_to_memory(out, root).localCheckpoint(eager=True)
 
 
 QUERIES["q_live_quality"] = q_live_quality
@@ -10333,7 +9923,7 @@ def q_dup_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     0-based inclusive token offsets; all columns exact integers."""
     from janus_spark.datapipe.dedup import duplicate_spans
 
-    docs = _read_wide(spark, f"{sf_dir}/documents.parquet")
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     return duplicate_spans(docs, k=8).select(
         "doc_id", "span_start", "span_end", "span_tokens"
     )
@@ -10374,7 +9964,7 @@ def q_gopher_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     comparison."""
     from janus_spark.datapipe.quality import gopher_quality
 
-    docs = _read_wide(spark, f"{sf_dir}/documents.parquet")
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     return gopher_quality(
         docs, min_tok=20, top2_max=(1, 10), min_stopwords=1
     )
@@ -10452,7 +10042,7 @@ def q_dup_cut(spark: SparkSession, sf_dir: str) -> DataFrame:
     cleaned token stream per document."""
     from janus_spark.datapipe.dedup import cut_duplicate_spans
 
-    docs = _read_wide(spark, f"{sf_dir}/documents.parquet")
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     return cut_duplicate_spans(docs, k=8).select(
         "doc_id", "n_tok", "kept_tok", "clean_text"
     )
@@ -10527,7 +10117,7 @@ def q_domain_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
     literal target weights — no float quotas anywhere."""
     from janus_spark.datapipe.sampling import domain_mixture
 
-    docs = _read_wide(spark, f"{sf_dir}/documents.parquet")
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     return domain_mixture(docs, _MIX_TARGET, _MIX_BUDGET).select(
         "source", "w", "n_avail", "alloc"
     )
@@ -10545,7 +10135,7 @@ def q_mixture_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     ties) — reproducible across engines and partitionings."""
     from janus_spark.datapipe.sampling import mixture_sample
 
-    docs = _read_wide(spark, f"{sf_dir}/documents.parquet")
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     return mixture_sample(docs, _MIX_TARGET, _MIX_BUDGET).select(
         "doc_id", "source"
     )
@@ -10573,7 +10163,7 @@ def q_curation_full(spark: SparkSession, sf_dir: str) -> DataFrame:
     gates verify (no drift possible)."""
     from janus_spark.datapipe.curation import curation_pipeline
 
-    docs = _read_wide(spark, f"{sf_dir}/documents.parquet")
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     out = curation_pipeline(
         docs, k_top=100, budget_tokens=512, n_shards=4
     )
@@ -10627,7 +10217,7 @@ def q_curation_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     can never disagree."""
     from janus_spark.datapipe.curation import curation_funnel
 
-    docs = _read_wide(spark, f"{sf_dir}/documents.parquet")
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     return curation_funnel(docs, k_top=100).select(
         "stage_no", "stage", "n_docs"
     )
@@ -10654,7 +10244,7 @@ def q_unimax_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
     redistribution path, not just the uniform split."""
     from janus_spark.datapipe.sampling import unimax_allocations
 
-    docs = _read_wide(spark, f"{sf_dir}/documents.parquet")
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     return unimax_allocations(
         docs, budget=400, max_epochs=1, source_col="lang"
     ).select("lang", "n_avail", "cap", "alloc")
@@ -10702,7 +10292,7 @@ def q_mixture_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     granularity)."""
     from janus_spark.datapipe.sampling import mixture_sample_tokens
 
-    docs = _read_wide(spark, f"{sf_dir}/documents.parquet")
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     return mixture_sample_tokens(docs, _MIX_TARGET, 20000).select(
         "doc_id", "source", "n_tok", "tok_before"
     )
@@ -10736,7 +10326,7 @@ def q_sample_quota_prefiltered(spark: SparkSession, sf_dir: str) -> DataFrame:
     path executes at every SF."""
     from janus_spark.datapipe.sampling import quota_sample_prefiltered
 
-    docs = _read_wide(spark, f"{sf_dir}/documents.parquet")
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     return quota_sample_prefiltered(
         docs, 5, strata_col="source", ratio=1
     ).select("doc_id", "source")
@@ -10764,7 +10354,7 @@ def q_mixture_sample_prefiltered(spark: SparkSession, sf_dir: str) -> DataFrame:
     path executes at every SF."""
     from janus_spark.datapipe.sampling import mixture_sample_prefiltered
 
-    docs = _read_wide(spark, f"{sf_dir}/documents.parquet")
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     return mixture_sample_prefiltered(
         docs, _MIX_TARGET, _MIX_BUDGET, ratio=1
     ).select("doc_id", "source")
@@ -10786,7 +10376,7 @@ def q_mixture_tokens_prefiltered(spark: SparkSession, sf_dir: str) -> DataFrame:
     at every SF."""
     from janus_spark.datapipe.sampling import mixture_sample_tokens_prefiltered
 
-    docs = _read_wide(spark, f"{sf_dir}/documents.parquet")
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     return mixture_sample_tokens_prefiltered(
         docs, _MIX_TARGET, 20000, ratio=1
     ).select("doc_id", "source", "n_tok", "tok_before")
@@ -10806,17 +10396,15 @@ def q_curation_increment(spark: SparkSession, sf_dir: str) -> DataFrame:
     EXACT match is the cross-engine proof of the incrementality
     theorem (per-document frozen stages + a store that keeps dropped
     signatures reproduce the single-shot keep-lowest-id pair graph)."""
-    import tempfile
-
     from janus_spark.datapipe.curation import (
         curation_bootstrap,
         curation_increment,
     )
 
-    docs = _read_wide(spark, f"{sf_dir}/documents.parquet")
-    store = tempfile.mkdtemp(prefix="cur_inc_")
-    surv0, model = curation_bootstrap(docs.where("doc_id < 250"), store)
-    surv1 = curation_increment(docs.where("doc_id >= 250"), store, model)
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    with _scratch_dir("cur_inc_") as store:  # survivors are checkpointed
+        surv0, model = curation_bootstrap(docs.where("doc_id < 250"), store)
+        surv1 = curation_increment(docs.where("doc_id >= 250"), store, model)
     return surv0.unionByName(surv1).select(
         F.col("doc_id").cast("long").alias("doc_id")
     )
@@ -10849,47 +10437,33 @@ def q_live_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
     slice as q_curation_increment — so the union of the published
     batches must equal the ONE-SHOT batch SQL over the full corpus:
     the oracle IS q_curation_increment's."""
-    import shutil
-    import tempfile
-
     from janus_spark.datapipe.curation import (
         curation_stream,
         train_curation_model,
     )
 
-    docs = _read_wide(spark, f"{sf_dir}/documents.parquet").localCheckpoint(
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").localCheckpoint(
         eager=True
     )
     model = train_curation_model(docs.where("doc_id < 250"))
-    root = tempfile.mkdtemp(prefix="live_curation_")
-    try:
-        hi = docs.select(F.max("doc_id").alias("m")).head()["m"]
-        third = max(1, (hi - 250) // 3)
-        cuts = [250, 250 + third, 250 + 2 * third, hi + 1]
-        docs.where(F.col("doc_id") < 250).coalesce(1).write.parquet(
-            f"{root}/f0.parquet"
-        )
-        for i in range(3):
-            docs.where(
-                (F.col("doc_id") >= cuts[i]) & (F.col("doc_id") < cuts[i + 1])
-            ).coalesce(1).write.parquet(f"{root}/f{i + 1}.parquet")
-        stream = (
-            spark.readStream.schema(docs.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(f"{root}/f*.parquet")
-        )
+    hi = docs.select(F.max("doc_id").alias("m")).head()["m"]
+    third = max(1, (hi - 250) // 3)
+    cuts = [250, 250 + third, 250 + 2 * third, hi + 1]
+    parts = [docs.where(F.col("doc_id") < 250)] + [
+        docs.where((F.col("doc_id") >= cuts[i]) & (F.col("doc_id") < cuts[i + 1]))
+        for i in range(3)
+    ]
+    with _scratch_dir("live_curation_") as root:
+        stream = _fixture_stream(spark, root, parts, docs.schema)
         q = curation_stream(
             stream, f"{root}/store", model, f"{root}/out", f"{root}/ckpt"
         )
         _await_stream(q, 600)
-        res = (
+        return (
             spark.read.parquet(f"{root}/out")
             .select(F.col("doc_id").cast("long").alias("doc_id"))
             .localCheckpoint(eager=True)
         )
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
-    return res
 
 
 QUERIES["q_live_curation"] = q_live_curation
@@ -10905,19 +10479,17 @@ def q_curation_increment_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     Selection is per-document and applied after the store append, so it
     commutes with dedup and the oracle stays the ONE-SHOT batch SQL
     (batch dedup, then the same frozen selection)."""
-    import tempfile
-
     from janus_spark.datapipe.curation import (
         curation_bootstrap,
         curation_increment,
     )
 
-    docs = _read_wide(spark, f"{sf_dir}/documents.parquet")
-    store = tempfile.mkdtemp(prefix="cur_incsel_")
-    surv0, model = curation_bootstrap(
-        docs.where("doc_id < 250"), store, select=True
-    )
-    surv1 = curation_increment(docs.where("doc_id >= 250"), store, model)
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    with _scratch_dir("cur_incsel_") as store:  # survivors are checkpointed
+        surv0, model = curation_bootstrap(
+            docs.where("doc_id < 250"), store, select=True
+        )
+        surv1 = curation_increment(docs.where("doc_id >= 250"), store, model)
     return surv0.unionByName(surv1).select(
         F.col("doc_id").cast("long").alias("doc_id")
     )

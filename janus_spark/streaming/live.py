@@ -42,6 +42,9 @@ from janus_spark.compiler.compile import compile_sparql
 from janus_spark.model import QUAD_SCHEMA
 from janus_spark.parsing.janusql import JanusQuery, WindowDef
 
+# rows of one fired window collected to the driver; ParquetSink has no cap
+COLLECT_LIMIT = 100_000
+
 
 class ListSink:
     """Collects emitted result batches driver-side (test/QueryHandle use)."""
@@ -62,7 +65,7 @@ class ListSink:
 
 class ParquetSink:
     """Distributed RStream result delivery — the at-scale escape hatch
-    for ``collect_limit``: each fired window's FULL result is written as
+    for ``COLLECT_LIMIT``: each fired window's FULL result is written as
     parquet by the executors (one directory per fire), and only a
     manifest row (window bounds, path, row count) crosses to the driver
     channel.  The reference's results-to-channel contract
@@ -123,7 +126,6 @@ class LiveQueryRunner:
         sink=None,
         registry: dict | None = None,
         max_windows_per_batch: int = 100,
-        collect_limit: int = 100_000,
     ):
         self.spark = spark
         self.parsed = parsed
@@ -133,7 +135,6 @@ class LiveQueryRunner:
         self.sink = sink if sink is not None else ListSink()
         self.registry = registry
         self.max_windows_per_batch = max_windows_per_batch
-        self.collect_limit = collect_limit
         self.windows = [_WindowState(w) for w in parsed.live_windows]
         if not self.windows:
             raise ValueError("query has no live windows")
@@ -263,10 +264,10 @@ class LiveQueryRunner:
         )
         if getattr(self.sink, "wants_dataframe", False):
             # distributed delivery: executors write the full result; only
-            # the manifest reaches the driver (no collect_limit bound)
+            # the manifest reaches the driver (no COLLECT_LIMIT bound)
             self.sink.write(ws.spec.name, s, e, result)
             return
-        rows = result.limit(self.collect_limit).collect()
+        rows = result.limit(COLLECT_LIMIT).collect()
         if self.operator in ("ISTREAM", "DSTREAM"):
             # bag (multiset) semantics: a solution's multiplicity delta
             # determines how many copies are inserted/deleted

@@ -561,3 +561,22 @@ def test_datetime_tz_uuid_langmatches_builtins(spark):
     assert re.fullmatch(r"[0-9a-f-]{36}", rows["urn:e:ms"]["su"])
     # distinct draws across rows
     assert rows["urn:e:iso"]["u"] != rows["urn:e:ms"]["u"]
+
+
+def test_untagged_static_quads_under_partition_cols_raise(quads):
+    """Static quads without the partition column would join no window;
+    the compiler must refuse them instead of silently dropping them."""
+    tagged = quads.withColumn("__window_id", F.lit(0).cast("long"))
+    static = quads.where("ts = 100").select(
+        "ts", "subject", F.lit(f"{EX}zone").alias("predicate"),
+        F.lit("z1").alias("object"), "graph",
+    )
+    text = f"SELECT ?s ?t ?z WHERE {{ ?s <{EX}temperature> ?t . ?s <{EX}zone> ?z . }}"
+    with pytest.raises(ValueError, match="partition column"):
+        run(tagged, text, partition_cols=["__window_id"], static_quads=static)
+    # tagged static quads are accepted and joined per window
+    rows = run(
+        tagged, text, partition_cols=["__window_id"],
+        static_quads=static.withColumn("__window_id", F.lit(0).cast("long")),
+    ).collect()
+    assert len(rows) == 20 and {r["z"] for r in rows} == {"z1"}

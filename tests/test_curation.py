@@ -309,3 +309,25 @@ def test_select_model_increment_equals_frozen_batch(spark, tmp_path):
         for r in spark.read.parquet(out3).select("doc_id").collect()
     }
     assert sink_ids == got
+
+
+def test_garbage_store_raises_instead_of_reading_as_fresh(spark, tmp_path, inc_setup):
+    """An unreadable store is not "no store yet": read as fresh, it would
+    let copies of already-seen documents through.  Every incremental
+    store reader must surface the read error."""
+    from janus_spark.datapipe.curation import curation_increment
+    from janus_spark.datapipe.dedup import incremental_dedup, incremental_minhash_dedup
+
+    _, _, arr, _, model, _, _ = inc_setup
+    garbage = tmp_path / "garbage_store"
+    garbage.mkdir()
+    (garbage / "part-00000.parquet").write_bytes(b"this is not parquet")
+    docs = spark.createDataFrame(
+        [(1, "alpha beta gamma delta epsilon")], "doc_id long, text string"
+    )
+    with pytest.raises(Exception, match="(?i)footer|parquet"):
+        curation_increment(arr, str(garbage), model)
+    with pytest.raises(Exception, match="(?i)footer|parquet"):
+        incremental_minhash_dedup(docs, str(garbage), hash_fn="md5")
+    with pytest.raises(Exception, match="(?i)footer|parquet"):
+        incremental_dedup(docs, str(garbage))

@@ -320,21 +320,21 @@ def test_store_read_error_is_not_swallowed(spark, tmp_path):
     path-missing means 'fresh store'."""
     import pytest
 
-    from janus_spark.datapipe.entity import _read_store
+    from janus_spark.datapipe.dedup import read_store
 
     missing = str(tmp_path / "nope")
-    assert _read_store(spark, missing) is None
+    assert read_store(spark, missing) is None
 
     empty = tmp_path / "empty"  # pre-created dir, no data files: fresh store
     empty.mkdir()
-    assert _read_store(spark, str(empty)) is None
+    assert read_store(spark, str(empty)) is None
 
     corrupt = tmp_path / "corrupt"
     corrupt.mkdir()
     (corrupt / "part-00000.parquet").write_bytes(b"this is not parquet")
     with pytest.raises(Exception):
         # schema inference hits the garbage footer and must propagate
-        df = _read_store(spark, str(corrupt))
+        df = read_store(spark, str(corrupt), merge_schema=True)
         assert df is not None
         df.collect()
 

@@ -223,3 +223,29 @@ def test_replay_stop_interrupts_inflight(client):
     assert status["stopped"] is True
     assert status["batches"] < 100, "stop must interrupt before the full replay"
     client.post(f"/api/queries/{qid}/stop")
+
+
+def test_lag_reports_drops_published_while_a_lag_line_is_read(client, monkeypatch):
+    """A drop that lands after one lag notice was read must show up in the
+    next notice — the count is taken and zeroed in one locked step, not
+    read, yielded, then reset."""
+    from janus_spark import http_api
+
+    monkeypatch.setattr(http_api, "RESULT_QUEUE_CAP", 2)
+    hub = client.application.extensions["janus"]["hub"]
+    for i in range(5):  # cap 2: results 0-2 dropped, 3-4 queued
+        hub.publish("q", {"type": "result", "i": i})
+    r = client.get("/api/queries/q/results?timeout=30&max=3", buffered=False)
+    lines = (json.loads(chunk) for chunk in r.response)
+    assert next(lines) == {"type": "lag", "dropped": 3}
+    for i in range(5, 8):  # drops 4 and 5 while the stream is suspended
+        hub.publish("q", {"type": "result", "i": i})
+    rest = list(lines)
+    r.close()
+    assert rest == [
+        {"type": "result", "i": 3},
+        {"type": "lag", "dropped": 2},
+        {"type": "result", "i": 6},
+        {"type": "result", "i": 7},
+    ]
+    assert hub.dropped["q"] == 0

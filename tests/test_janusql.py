@@ -13,6 +13,7 @@ from janus_spark.operators.baseline import build_baseline
 from janus_spark.operators.historical import sliding_window_bounds
 from janus_spark.parsing import HIST_FIXED, HIST_SLIDING, LIVE_SLIDING, parse_janusql
 from janus_spark.sources.melt import melt_sensor_fixture
+from janus_spark.streaming import ListSink
 
 EX = "http://example.org/"
 
@@ -163,20 +164,23 @@ def test_baseline_non_numeric_keeps_last(spark):
     assert rows[(f"{EX}s1", "state")] == "high"
 
 
-def test_hybrid_baseline_flow(spark):
+def test_hybrid_baseline_flow(spark, tmp_path):
     """End-to-end W8: historical window -> baseline quads -> live join."""
     quads = melt_sensor_fixture(spark, 30)  # ts 100..3000
     eng = JanusEngine(spark, quads)
     qid = eng.register_query(HYBRID.replace("ex:mean ?mean", "ex:temperature ?mean"))
-    static = eng.warm_baseline(qid)
-    srows = static.collect()
+    sink = ListSink()
+    runner = eng.start_live(qid, str(tmp_path / "buf"), sink=sink)  # warms the baseline
+    srows = runner.static_quads.collect()
     assert all(r["predicate"] == "https://janus.rs/baseline#mean" for r in srows)
     assert len(srows) == 5  # one baseline triple per sensor
-    # live batch: join live temps against baseline means
-    live = eng.run_live_batch(qid, quads.limit(50), static_quads=static)
-    lrows = live.collect()
+    # live windows: join live temps against baseline means
+    runner.on_batch(quads.limit(50))
+    runner.close(10_000)
+    means = {r["subject"]: r["object"] for r in srows}
+    lrows = [r for b in sink.batches for r in b["rows"]]
     assert len(lrows) > 0
-    assert all(r["source"] == "live" for r in lrows)
+    assert all(r["mean"] == means[r["sensor"]] for r in lrows)
 
 
 def test_sliding_window_limit_is_per_window(spark):
