@@ -26,7 +26,9 @@ two can never drift.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+import weakref
+
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 __all__ = [
@@ -369,37 +371,71 @@ def _frozen_stage2(docs: DataFrame, model: dict) -> DataFrame:
     """Gopher rules + FROZEN quality filter — the stateless per-document
     prefix shared by :func:`curation_increment` and
     :func:`curation_frozen_batch` (one definition, so the incremental
-    path and the batch reference cannot drift).  The quality decision is
-    the exact-integer comparison ``score_int·tn > ts·n + τ·n·tn`` in
-    decimal(38,0) — identical to ``quality_filter_relative`` with the
-    corpus totals pinned at training time."""
-    from janus_spark.datapipe.quality import gopher_quality, quality_scores
+    path and the batch reference cannot drift).  One narrow projection:
+    both decisions are per-row expressions (see
+    :func:`_frozen_quality_keep`), so the result is a filter of ``docs``
+    with no shuffle and no materialization of its own."""
+    from janus_spark.datapipe.quality import gopher_quality
 
-    text_col, id_col = model["text_col"], model["id_col"]
-    s1 = (
+    return (
         gopher_quality(
-            docs, text_col, id_col, keep_cols=docs.columns,
+            docs, model["text_col"], model["id_col"], keep_cols=docs.columns,
             **model["gopher_kwargs"],
         )
-        .where("pred")
+        .where(F.col("pred") & _frozen_quality_keep(model))
         .select(*docs.columns)
-        .localCheckpoint(eager=True)
-    )
-    scores = quality_scores(
-        s1, model["weights"], text_col, id_col, model["n_buckets"]
     )
 
-    def dec(c):
-        return c.cast("decimal(38,0)")
 
-    keep2 = scores.where(
-        dec(F.col("score_int")) * dec(F.lit(int(model["tn"])))
-        > dec(F.lit(int(model["ts"]))) * dec(F.col("n_tok"))
-        + F.lit(int(model["tau_micro"])).cast("decimal(38,0)")
-        * dec(F.col("n_tok"))
-        * dec(F.lit(int(model["tn"])))
-    ).select(id_col)
-    return s1.join(keep2, id_col, "semi")
+# model weights frame -> (n_buckets, its weight-lookup SQL over the token
+# bucket): collected and packed once per model, not once per batch
+_WEIGHT_LOOKUPS: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+
+
+def _frozen_quality_keep(model: dict) -> Column:
+    """The frozen quality decision of one document as a per-row
+    expression: ``score_int·tn > ts·n_tok + τ·n_tok·tn`` in
+    decimal(38,0), where ``score_int`` sums the weights of the document's
+    token buckets and ``n_tok`` counts the tokens whose bucket HAS a
+    weight — exactly ``quality_scores``' explode → weights join → groupBy,
+    evaluated as one lookup per token in the model (``weight_lookup_sql``,
+    at most ``n_buckets`` entries).  Tokenless documents compare 0 > 0
+    and are rejected, as before.  Pinned row for row against the
+    ``quality_scores`` form by
+    ``test_frozen_quality_keep_matches_quality_scores``."""
+    from janus_spark.datapipe.dedup import shared_hash64_spark_sql
+    from janus_spark.datapipe.exprcache import cached_expr, qident
+    from janus_spark.datapipe.quality import weight_lookup_sql
+    from janus_spark.datapipe.text import clean_tokens_sql
+
+    weights, n_buckets = model["weights"], int(model["n_buckets"])
+    cached = _WEIGHT_LOOKUPS.get(weights)
+    if cached is None or cached[0] != n_buckets:
+        items = [(r["b"], r["w"]) for r in weights.collect()]
+        bucket = f"{shared_hash64_spark_sql('t')} % {n_buckets}"
+        cached = (n_buckets, weight_lookup_sql(items, n_buckets, bucket))
+        _WEIGHT_LOOKUPS[weights] = cached
+
+    def dec(x) -> str:
+        return f"CAST({x} AS DECIMAL(38,0))"
+
+    tn, ts, tau = (int(model[k]) for k in ("tn", "ts", "tau_micro"))
+    lookup = (
+        f"transform({clean_tokens_sql(qident(model['text_col']))}, "
+        f"t -> {cached[1]})"
+    )
+    step = (
+        "named_struct('s', acc.s + coalesce(w, 0L), "
+        "'n', acc.n + CASE WHEN w IS NULL THEN 0L ELSE 1L END)"
+    )
+    decide = (
+        f"{dec('acc.s')} * {dec(tn)} > {dec(ts)} * {dec('acc.n')} "
+        f"+ {dec(tau)} * {dec('acc.n')} * {dec(tn)}"
+    )
+    return cached_expr(
+        f"aggregate({lookup}, named_struct('s', 0L, 'n', 0L), "
+        f"(acc, w) -> {step}, acc -> {decide})"
+    )
 
 
 def curation_select(df: DataFrame, model: dict) -> DataFrame:
@@ -445,10 +481,11 @@ def curation_increment(
 
     Replay-safe: arrivals whose id already has signatures in the store
     were processed by an earlier (possibly crashed-after-append) run —
-    they are dropped up front, so a retried batch returns nothing new
-    and the store does not grow (the ``incremental_entity_resolution``
-    discipline).  Gopher/quality REJECTS are not in the store and are
-    re-evaluated on replay — deterministic, they reject again.
+    they are neither returned nor appended again, so a retried batch
+    returns nothing new and the store does not grow (the
+    ``incremental_entity_resolution`` discipline).  Gopher/quality
+    REJECTS are not in the store and are re-evaluated on replay —
+    deterministic, they reject again.
 
     Incrementality theorem (pinned by the q_curation_increment gate,
     whose DuckDB oracle is the one-shot BATCH SQL over the full
@@ -463,34 +500,43 @@ def curation_increment(
     ``incremental_minhash_dedup`` — near-dup similarity is not
     transitive).
 
-    Scale shape (100 TB corpus, TB-scale daily increment): gopher +
-    frozen scoring touch ONLY the increment (map-side vs a broadcast
-    weights table); the store join is banded-signature equi-join —
-    increment bands against history bands — never a rescan of corpus
-    text; the append is one partitioned parquet write."""
-    from janus_spark.datapipe.dedup import incremental_minhash_dedup, read_store
+    Plan shape: two plans and the append, whatever the batch size.
+    (1) ONE narrow pass over the arrivals, materialized once: gopher
+    rules, the frozen quality decision (a weight lookup per token — no
+    shuffle), shingles, MinHash signature and band keys
+    (``_sign_documents``).  (2) ONE candidate/verify plan against the
+    store, read once with its known schema: band-key matches against
+    the batch and the store, exact Jaccard verify, replayed ids, all
+    anti-joined off the batch and materialized
+    (``_dedup_against_store``).  (3) The append of the batch's
+    signatures.  Only the increment is ever scored or signed; history
+    enters as band rows and, for candidates only, its shingle sets —
+    never corpus text.  On the bench shape (about 160 documents, 4
+    cores) that is 8 Spark jobs; see docs/SCALE.md."""
+    from janus_spark.datapipe.dedup import (
+        _dedup_against_store,
+        _sign_documents,
+        minhash_store_schema,
+        read_store,
+    )
 
     id_col = model["id_col"]
-    spark = new_docs.sparkSession
-    hist = read_store(spark, store_path)
-    if hist is None:  # first batch: no store yet
-        fresh = new_docs
-    else:
-        seen = hist.select(F.col("id").alias("__seen_id")).distinct()
-        fresh = new_docs.join(
-            seen, new_docs[id_col] == F.col("__seen_id"), "left_anti"
-        )
-    s2 = _frozen_stage2(fresh, model)
-    survivors = incremental_minhash_dedup(
-        s2,
+    hist = read_store(
+        new_docs.sparkSession,
         store_path,
+        schema=minhash_store_schema(new_docs, id_col, model["hash_fn"]),
+    )
+    signed, stats = _sign_documents(
+        _frozen_stage2(new_docs, model),
         model["text_col"],
-        id_col,
         model["num_perm"],
         model["bands"],
         model["shingle_k"],
-        model["jaccard_threshold"],
         model["hash_fn"],
+    )
+    survivors = _dedup_against_store(
+        signed, stats, new_docs.columns, hist, store_path, id_col,
+        model["bands"], model["jaccard_threshold"], drop_seen=True,
     )
     if "dsir_weights" in model:
         # AFTER the dedup: the store has already received the full s2

@@ -19,7 +19,7 @@ from __future__ import annotations
 import os
 
 from pyspark.errors import AnalysisException
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from janus_spark.datapipe.text import normalize, tokens
@@ -29,7 +29,10 @@ STORE_APPEND_ROWS = 250_000
 
 
 def read_store(
-    spark: SparkSession, store_path: str, merge_schema: bool = False
+    spark: SparkSession,
+    store_path: str,
+    merge_schema: bool = False,
+    schema: str | None = None,
 ) -> DataFrame | None:
     """Read a persistent parquet store, or None if it does not exist yet.
     ONLY the path-missing case maps to "fresh store" — corruption,
@@ -37,8 +40,12 @@ def read_store(
     treating them as an empty history would reset the state and admit
     documents (or publish assignments) built from the current batch
     alone.  ``merge_schema`` tolerates stores whose early appends predate
-    a later-added column (e.g. batch_id)."""
+    a later-added column (e.g. batch_id).  A caller that knows the
+    store's ``schema`` (DDL) passes it and skips schema inference, a
+    Spark job per read; corrupt files then raise when the frame runs."""
     reader = spark.read.option("mergeSchema", "true") if merge_schema else spark.read
+    if schema is not None:
+        reader = reader.schema(schema)
     try:
         return reader.parquet(store_path)
     except AnalysisException as exc:
@@ -296,31 +303,39 @@ def _minhash_banded(
     return _banded_from_shingles(sh, num_perm, bands, hash_fn)
 
 
+def _band_keys_sql(sig: str, num_perm: int, bands: int, hash_fn: str) -> str:
+    """SQL text of the per-band LSH keys of a signature expression:
+    ``array(key_0, …, key_{bands-1})`` where key_b joins the band's
+    ``num_perm // bands`` minima with commas — the raw string for the md5
+    family (so the DuckDB oracle reproduces the buckets), its xxhash64
+    otherwise.  The signature is let-bound, so it is evaluated once."""
+    rows = num_perm // bands
+
+    def band_key(b: int) -> str:
+        parts = ", ".join(f"CAST(g[{b * rows + r}] AS STRING)" for r in range(rows))
+        concat = f"concat_ws(',', {parts})"
+        return concat if hash_fn == "md5" else f"xxhash64({concat})"
+
+    keys = ", ".join(band_key(b) for b in range(bands))
+    return f"element_at(transform(array({sig}), g -> array({keys})), 1)"
+
+
+def _band_keys(sh: str, num_perm: int, bands: int, hash_fn: str) -> Column:
+    """The per-band LSH key array of the shingle-array column ``sh``."""
+    from janus_spark.datapipe.exprcache import cached_expr, qident
+
+    sig = minhash_signature_sql(qident(sh), num_perm, hash_fn)
+    return cached_expr(_band_keys_sql(sig, num_perm, bands, hash_fn))
+
+
 def _banded_from_shingles(
     sh: DataFrame, num_perm: int, bands: int, hash_fn: str
 ) -> DataFrame:
     """(id, sh, band, bh) from a pre-built (id, sh) shingle frame — split
     out so callers can collapse exact duplicates BEFORE paying for
     signature construction (the CPU-dense stage)."""
-    rows = num_perm // bands
-    base = sh.withColumn("sig", minhash_signature("sh", num_perm, hash_fn))
-
-    def band_key(b: int) -> Column:
-        concat = F.concat_ws(",", *[F.col("sig")[b * rows + r].cast("string") for r in range(rows)])
-        return concat if hash_fn == "md5" else F.xxhash64(concat)
-
-    return base.select(
-        "id",
-        "sh",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(F.lit(b).alias("band"), band_key(b).alias("bh"))
-                    for b in range(bands)
-                ]
-            )
-        ).alias("bb"),
-    ).select("id", "sh", F.col("bb.band").alias("band"), F.col("bb.bh").alias("bh"))
+    keys = _band_keys("sh", num_perm, bands, hash_fn)
+    return sh.select("id", "sh", F.posexplode(keys).alias("band", "bh"))
 
 
 def minhash_lsh_pairs(
@@ -1481,98 +1496,203 @@ def incremental_minhash_dedup(
     sh)`` with the shingle array carried ONLY on band 0, so one append
     commits bands and shingles together (no two-file torn state) while
     the wide column is stored once per document.  Size: ``bands`` short
-    rows + one shingle array per doc; the candidate join shuffles only
-    (band, bh, id) — shingle arrays join back per verified candidate
-    side, never ride the band replicas (same discipline as
-    ``minhash_lsh_pairs``).  Restart-safe by construction: state lives
-    in the store files; the append inherits Spark's output-commit
-    protocol (staged task files + rename).
+    rows + one shingle array per doc; the store's shingle arrays are read
+    only for candidate pairs (see :func:`_dedup_against_store` for the
+    plan).  Restart-safe by construction: state lives in the store
+    files; the append inherits Spark's output-commit protocol (staged
+    task files + rename).
 
     Returns the surviving (never-near-duplicated) rows of ``new_docs``.
     """
-    spark = new_docs.sparkSession
-    banded = _minhash_banded(
-        new_docs, text_col, id_col, num_perm, bands, shingle_k, hash_fn
-    ).localCheckpoint(eager=True)  # feeds collision join, verify join, store append
-    new_bands = banded.select("id", "band", "bh")
-    new_sh = banded.where(F.col("band") == 0).select("id", "sh")
-    replayed = False
-    hist = read_store(spark, store_path)
-    if hist is None:
-        all_bands, all_sh = new_bands, new_sh
-    else:
-        if batch_id is not None:
-            if "batch_id" not in hist.columns:
-                import warnings
+    schema = None
+    if batch_id is None:  # marked mode inspects the store's own columns
+        schema = minhash_store_schema(new_docs, id_col, hash_fn)
+    hist = read_store(new_docs.sparkSession, store_path, schema=schema)
+    append = True
+    if hist is not None and batch_id is not None:
+        if "batch_id" not in hist.columns:
+            import warnings
 
-                warnings.warn(
-                    f"minhash store {store_path} predates the batch-marker "
-                    "scheme — replay detection is impossible for it; this "
-                    "append is NOT idempotent",
-                    RuntimeWarning,
-                    stacklevel=2,
-                )
-            else:
-                # replay = this marker already committed; history is the
-                # strict marker PREFIX, so a retried batch recomputes its
-                # survivors against exactly the store it first saw
-                # (append-only + monotone markers).  Legacy null markers
-                # sort earliest.
-                replayed = (
-                    hist.where(
-                        F.col("batch_id") == int(batch_id)
-                    ).head() is not None
-                )
-                hist = hist.where(
-                    F.coalesce(F.col("batch_id"), F.lit(-1)) < int(batch_id)
-                )
-        all_bands = new_bands.unionByName(hist.select("id", "band", "bh"))
-        all_sh = new_sh.unionByName(
-            hist.where(F.col("band") == 0).select("id", "sh")
-        )
-    cand = (
-        new_bands.select("band", "bh", F.col("id").alias("b"))
-        .join(all_bands.select("band", "bh", F.col("id").alias("a")), ["band", "bh"])
-        .where(F.col("a") < F.col("b"))
-        .select("a", "b")
-        .dropDuplicates(["a", "b"])
-        .join(all_sh.select(F.col("id").alias("a"), F.col("sh").alias("sha")), "a")
-        .join(new_sh.select(F.col("id").alias("b"), F.col("sh").alias("shb")), "b")
+            warnings.warn(
+                f"minhash store {store_path} predates the batch-marker "
+                "scheme — replay detection is impossible for it; this "
+                "append is NOT idempotent",
+                RuntimeWarning,
+                stacklevel=2,
+            )
+        else:
+            # replay = this marker already committed; history is the
+            # strict marker PREFIX, so a retried batch recomputes its
+            # survivors against exactly the store it first saw
+            # (append-only + monotone markers).  Legacy null markers
+            # sort earliest.
+            append = hist.where(F.col("batch_id") == int(batch_id)).head() is None
+            hist = hist.where(
+                F.coalesce(F.col("batch_id"), F.lit(-1)) < int(batch_id)
+            )
+    signed, stats = _sign_documents(
+        new_docs, text_col, num_perm, bands, shingle_k, hash_fn
     )
-    inter = F.size(F.array_intersect(F.col("sha"), F.col("shb")))
-    union = F.size(F.array_union(F.col("sha"), F.col("shb")))
-    dropped = (
-        cand.where(
-            F.when(union > 0, inter / union).otherwise(F.lit(0.0))
-            >= F.lit(jaccard_threshold)
-        )
-        .select(F.col("b").alias("__dup_id"))
-        .distinct()
+    return _dedup_against_store(
+        signed, stats, new_docs.columns, hist, store_path, id_col,
+        bands, jaccard_threshold, batch_id, append,
     )
-    survivors = new_docs.join(
-        dropped, new_docs[id_col] == F.col("__dup_id"), "left_anti"
-    ).localCheckpoint(eager=True)
-    sig = banded.select(
-        "id", "band", "bh", F.when(F.col("band") == 0, F.col("sh")).alias("sh")
-    )
-    # Right-size the append (guide §6, r11): sig inherits banded's
-    # compute layout (defaultParallelism partitions), so a small batch
-    # appended one near-empty parquet file PER CORE per call — at the
-    # bench shape 32 files × 3 batches, with footer/committer overhead
-    # dominating the store I/O (profiled 10.4 s task-CPU for ~800 rows).
-    # Scale-adaptive: one file per STORE_APPEND_ROWS signature rows,
-    # never more than the current partition count — a TB-scale daily
-    # increment still writes hundreds of files.  The count is one cheap
-    # job over the already-materialized checkpoint.
-    if batch_id is None or not replayed:
-        n_files = max(
-            1,
-            min(banded.rdd.getNumPartitions(), -(-banded.count() // STORE_APPEND_ROWS)),
+
+
+def minhash_store_schema(docs: DataFrame, id_col: str, hash_fn: str) -> str:
+    """DDL of the minhash store's unmarked columns for documents shaped
+    like ``docs`` — what :func:`_dedup_against_store` appends: one row
+    per (id, band), ``bh`` the band key (the raw signature string for the
+    md5 family), ``sh`` the shingle set on band 0 only."""
+    id_type = docs.schema[id_col].dataType.simpleString()
+    bh_type = "STRING" if hash_fn == "md5" else "BIGINT"
+    return f"id {id_type}, band INT, bh {bh_type}, sh ARRAY<STRING>"
+
+
+def _sign_documents(
+    df: DataFrame,
+    text_col: str,
+    num_perm: int,
+    bands: int,
+    shingle_k: int,
+    hash_fn: str,
+) -> tuple[DataFrame, dict]:
+    """Materialize ``df`` with each row's shingle set (``__sh``) and LSH
+    band keys (``__bh``) — one narrow pass, so ``df`` is scanned once
+    however many consumers the result feeds.  Returns the checkpoint and
+    ``{"n": rows, "sh_bytes": characters in all shingle sets}``, observed
+    on the same job.  The pass keeps ``df``'s partitioning: a repartition
+    here would add a shuffle to every call, and an input at scale already
+    arrives in many file splits."""
+    from janus_spark.datapipe.exprcache import cached_expr
+
+    obs = Observation()
+    signed = (
+        df.select("*", word_shingles(text_col, shingle_k).alias("__sh"))
+        .select("*", _band_keys("__sh", num_perm, bands, hash_fn).alias("__bh"))
+        .observe(
+            obs,
+            F.count(F.lit(1)).alias("n"),
+            cached_expr(
+                "coalesce(sum(aggregate(__sh, 0L, (acc, x) -> acc + length(x))), 0L)"
+            ).alias("sh_bytes"),
         )
-        sig = sig.coalesce(n_files)
+        .localCheckpoint(eager=True)
+    )
+    return signed, obs.get
+
+
+def _dedup_against_store(
+    signed: DataFrame,
+    stats: dict,
+    cols: list[str],
+    hist: DataFrame | None,
+    store_path: str,
+    id_col: str,
+    bands: int,
+    jaccard_threshold: float,
+    batch_id: int | None = None,
+    append: bool = True,
+    drop_seen: bool = False,
+) -> DataFrame:
+    """The store half of :func:`incremental_minhash_dedup` over a
+    :func:`_sign_documents` checkpoint: one candidate/verify plan against
+    ``hist`` (the store as read, or None), whose survivors (``cols`` of
+    ``signed``) are materialized BEFORE the batch's signatures are
+    appended (unless ``append`` is false).
+
+    ``drop_seen`` is the replay filter of ``curation_increment``: batch
+    documents whose id the store already holds are neither returned nor
+    appended again.  They are anti-joined off inside the same plan, and
+    a count of the rest observed on it keeps the append a plain write of
+    the batch when nothing was replayed.  Under the doc-key contract a
+    replayed id carries the document the store holds, so as a candidate
+    for another batch document it matches as the store's copy does.
+
+    Candidates are band-key matches ``a < b`` with ``b`` in the batch and
+    ``a`` in the store or the batch.  The batch side — ``bands`` rows per
+    document, each carrying the document's shingle set — is broadcast
+    when it fits Spark's own broadcast threshold (the planner cannot see
+    a checkpoint's size, so the observed ``stats`` decide), and so are
+    the frames derived from it: store-side candidates, dropped ids, the
+    batch's ids.  No hint broadcasts the store: it is scanned for band
+    matches, and its band-0 rows (the shingle sets) are read only for
+    the candidates.  An anti join needs no distinct right side, so duplicate
+    candidate pairs cost a repeated verify, not a shuffle."""
+    from janus_spark.datapipe.exprcache import cached_expr, qident
+
+    n_docs = int(stats["n"])
+    conf = signed.sparkSession._jsparkSession.sessionState().conf()
+    limit = conf.autoBroadcastJoinThreshold()
+    # each band row: its keys (~64 bytes) plus the document's shingle set
+    small = 0 <= bands * (64 * n_docs + int(stats["sh_bytes"])) <= limit
+
+    def bc(df: DataFrame) -> DataFrame:
+        return F.broadcast(df) if small else df
+
+    new = signed.selectExpr(
+        f"{qident(id_col)} AS b", "posexplode(__bh) AS (band, bh)", "__sh AS shb"
+    )
+    new_bc = bc(new)
+    pairs = (
+        new.selectExpr("b AS a", "band", "bh", "shb AS sha")
+        .join(new_bc, ["band", "bh"])
+        .where("a < b")
+        .select("a", "b", "sha", "shb")
+    )
+    if hist is not None:
+        cand = (
+            hist.selectExpr("id AS a", "band", "bh")
+            .join(new_bc, ["band", "bh"])
+            .where("a < b")
+            .select("a", "b", "shb")
+        )
+        pairs = pairs.unionByName(
+            hist.where("band = 0").selectExpr("id AS a", "sh AS sha").join(bc(cand), "a")
+        )
+    t = repr(float(jaccard_threshold))
+    dropped = pairs.where(
+        cached_expr(
+            "CASE WHEN size(array_union(sha, shb)) > 0 THEN "
+            "size(array_intersect(sha, shb)) / size(array_union(sha, shb)) "
+            f"ELSE 0.0D END >= {t}D"
+        )
+    ).selectExpr(f"b AS {qident(id_col)}")
+    fresh, counted = signed, None
+    if drop_seen and hist is not None:
+        seen = (
+            hist.where("band = 0")
+            .selectExpr(f"id AS {qident(id_col)}")
+            .join(bc(signed.select(id_col)), id_col)
+        )
+        fresh = signed.join(bc(seen), id_col, "left_anti")
+        if small:
+            # counted on the final stage's streamed side, which adaptive
+            # execution never rewrites away (an empty broadcast side only
+            # removes its join); under shuffles the exact path is taken
+            counted = Observation()
+            fresh = fresh.observe(counted, F.count(F.lit(1)).alias("n"))
+    survivors = (
+        fresh.join(bc(dropped), id_col, "left_anti")
+        .select(*cols)
+        .localCheckpoint(eager=True)
+    )
+    if append:
+        # right-sized append (guide §6): one file per STORE_APPEND_ROWS
+        # signature rows — a small batch writes one file, a TB-scale one
+        # hundreds; coalesce never raises the partition count
+        batch = signed
+        if fresh is not signed and (counted is None or counted.get["n"] != n_docs):
+            batch = signed.join(
+                hist.selectExpr(f"id AS {qident(id_col)}"), id_col, "left_anti"
+            )
+        sig = batch.selectExpr(
+            f"{qident(id_col)} AS id", "posexplode(__bh) AS (band, bh)", "__sh"
+        ).selectExpr("id", "band", "bh", "CASE WHEN band = 0 THEN __sh END AS sh")
         if batch_id is not None:
             sig = sig.withColumn("batch_id", F.lit(int(batch_id)))
-        sig.write.mode("append").parquet(store_path)
+        n_files = max(1, -(-(n_docs * bands) // STORE_APPEND_ROWS))
+        sig.coalesce(n_files).write.mode("append").parquet(store_path)
     return survivors
 
 

@@ -26,6 +26,7 @@ cost change, not a semantic one.
 from __future__ import annotations
 
 import hashlib
+import threading
 from collections import OrderedDict
 
 from pyspark.sql import Column
@@ -42,19 +43,26 @@ __all__ = ["cached_expr", "qident", "sql_str"]
 # bounded by the entry cap.
 _CACHE: OrderedDict[bytes, Column] = OrderedDict()
 _CACHE_MAX = 1024
+# one lock over lookup, insert and eviction: without it a thread could
+# find a key that another thread evicts before its move_to_end (KeyError)
+_LOCK = threading.Lock()
 
 
 def cached_expr(sql: str) -> Column:
-    """Parse ``sql`` into a Column once per process and reuse it."""
+    """Parse ``sql`` into a Column once per process and reuse it.
+    Thread-safe; a miss parses outside the lock, so two threads may both
+    parse the same text and the later insert wins (equal Columns)."""
     key = hashlib.sha256(sql.encode("utf-8")).digest()
-    col = _CACHE.get(key)
-    if col is None:
-        col = F.expr(sql)
+    with _LOCK:
+        col = _CACHE.get(key)
+        if col is not None:
+            _CACHE.move_to_end(key)
+            return col
+    col = F.expr(sql)
+    with _LOCK:
         _CACHE[key] = col
         if len(_CACHE) > _CACHE_MAX:
             _CACHE.popitem(last=False)
-    else:
-        _CACHE.move_to_end(key)
     return col
 
 

@@ -54,6 +54,7 @@ __all__ = [
     "quality_filter_relative_split",
     "quality_score_columns",
     "quality_stream_scores",
+    "weight_lookup_sql",
     "gopher_quality",
     "GOPHER_STOPWORDS",
 ]
@@ -338,6 +339,29 @@ def quality_score_columns(
     }
 
 
+def weight_lookup_sql(
+    weight_items: Sequence[tuple[int, int]], n_buckets: int, bucket: str
+) -> str:
+    """SQL text of the weight a ``(b, w)`` model gives the bucket
+    expression ``bucket`` (in ``[0, n_buckets)``), NULL where the model
+    has no weight for it.  The model rides the plan as ONE fixed-width
+    binary literal (space-padded decimal cells), and a lookup is a byte
+    slice and a cast: O(1) per token — a STRING literal would not do, its
+    substring walks the characters up to the offset — and analysis and
+    optimization see a single leaf.  An ``array(…)`` of 4096 literals
+    costs about 125 ms of analysis per use, and even folded to one array
+    literal about 90 ms of optimization."""
+    cells = [""] * int(n_buckets)
+    for b, w in weight_items:
+        cells[int(b)] = str(int(w))
+    width = max(1, *(len(c) for c in cells))
+    packed = "".join(c.rjust(width) for c in cells).encode("ascii").hex()
+    return (
+        f"try_cast(CAST(substring(X'{packed}', CAST({bucket} AS INT) * {width} "
+        f"+ 1, {width}) AS STRING) AS BIGINT)"
+    )
+
+
 def quality_stream_scores(
     stream: DataFrame,
     weight_items: Sequence[tuple[int, int]],
@@ -505,21 +529,19 @@ def gopher_quality(
         *extra,
         "n_tok",
         "word_chars",
-        F.col("__s2")["maxrun"].alias("top2_count"),
-        F.col("__s5")["dup"].alias("dup5_instances"),
-        F.col("__s5")["n"].alias("n5"),
+        cached_expr("__s2.maxrun").alias("top2_count"),
+        cached_expr("__s5.dup").alias("dup5_instances"),
+        cached_expr("__s5.n").alias("n5"),
         "stop_hits",
     )
+    # the rules as one cached SQL predicate: built from Column ops it was
+    # ~50 Py4J-bound calls per construction
     pred = (
-        (F.col("n_tok") >= min_tok)
-        & (F.col("n_tok") <= max_tok)
-        & (F.col("word_chars") >= min_mean_word_len * F.col("n_tok"))
-        & (F.col("word_chars") <= max_mean_word_len * F.col("n_tok"))
-        & (2 * F.col("top2_count") * t2d < F.col("n_tok") * t2n)
-        & (
-            (F.col("n5") == 0)
-            | (F.col("dup5_instances") * d5d < F.col("n5") * d5n)
-        )
-        & (F.col("stop_hits") >= min_stopwords)
+        f"n_tok >= {int(min_tok)} AND n_tok <= {int(max_tok)}"
+        f" AND word_chars >= {int(min_mean_word_len)} * n_tok"
+        f" AND word_chars <= {int(max_mean_word_len)} * n_tok"
+        f" AND 2 * top2_count * {t2d} < n_tok * {t2n}"
+        f" AND (n5 = 0 OR dup5_instances * {d5d} < n5 * {d5n})"
+        f" AND stop_hits >= {int(min_stopwords)}"
     )
-    return out.select("*", pred.alias("pred"))
+    return out.select("*", cached_expr(pred).alias("pred"))

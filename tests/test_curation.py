@@ -331,3 +331,147 @@ def test_garbage_store_raises_instead_of_reading_as_fresh(spark, tmp_path, inc_s
         incremental_minhash_dedup(docs, str(garbage), hash_fn="md5")
     with pytest.raises(Exception, match="(?i)footer|parquet"):
         incremental_dedup(docs, str(garbage))
+
+
+def _bucket(word: str, n_buckets: int) -> int:
+    """Python spelling of ``shared_hash64(token) % n_buckets``."""
+    import hashlib
+
+    return int(hashlib.md5(word.encode()).hexdigest()[:15], 16) % n_buckets
+
+
+def test_frozen_quality_keep_matches_quality_scores(spark):
+    """The narrow frozen decision (one weight lookup per token) equals the
+    ``quality_scores`` explode → weights join → groupBy form, row for row:
+    on tokenless documents, on tokens whose bucket has no weight (they
+    count toward neither the score nor n_tok), and across totals and
+    margins that put documents on both sides of the threshold."""
+    from janus_spark.datapipe.curation import _frozen_quality_keep
+    from janus_spark.datapipe.quality import quality_scores, weights_from_literal
+
+    nb = 64
+    weighted = ["alpha", "beta", "gamma", "delta", "eps"]
+    unweighted = [w for w in ("zeta", "eta", "theta", "iota", "kappa")
+                  if _bucket(w, nb) not in {_bucket(x, nb) for x in weighted}]
+    assert len(unweighted) >= 3
+    items = {}
+    for i, w in enumerate(weighted):
+        items[_bucket(w, nb)] = (-1) ** i * (i + 1) * 123_457
+    texts = [
+        "", "   ", None,                           # tokenless
+        " ".join(unweighted),                      # tokens, none weighted
+        "alpha beta", "beta beta gamma", "delta eps eps",
+        "Alpha  GAMMA\tdelta " + unweighted[0],
+        "eps " + " ".join(unweighted) + " alpha",
+        "gamma " * 7, "beta " * 3 + "alpha",
+    ]
+    docs = spark.createDataFrame(
+        list(enumerate(texts)), "doc_id long, text string"
+    )
+    weights = weights_from_literal(spark, list(items.items()))
+    for ts, tn, tau in [(0, 1, 0), (-250_000, 40, 0), (900_000, 7, -30_000),
+                        (3, 3, 123_456)]:
+        model = {"weights": weights, "n_buckets": nb, "text_col": "text",
+                 "id_col": "doc_id", "ts": ts, "tn": tn, "tau_micro": tau}
+
+        def dec(c):
+            return c.cast("decimal(38,0)")
+
+        old = {
+            r["doc_id"]: r["keep"]
+            for r in quality_scores(docs, weights, n_buckets=nb).select(
+                "doc_id",
+                (dec(F.col("score_int")) * dec(F.lit(tn))
+                 > dec(F.lit(ts)) * dec(F.col("n_tok"))
+                 + dec(F.lit(tau)) * dec(F.col("n_tok")) * dec(F.lit(tn))
+                 ).alias("keep"),
+            ).collect()
+        }
+        new = {
+            r["doc_id"]: bool(r["keep"])  # NULL text: a filter drops it too
+            for r in docs.select(
+                "doc_id", _frozen_quality_keep(model).alias("keep")
+            ).collect()
+        }
+        assert new == old, (ts, tn, tau)
+        assert set(old.values()) == {True, False} or tau == 123_456
+
+
+def test_increment_job_budget_and_contracts(spark, tmp_path, inc_setup):
+    """One increment against a non-empty store: at most 12 Spark jobs,
+    the arrivals scanned exactly once, a returned frame that still
+    collects after the store is deleted, and a replay that returns
+    nothing and leaves the store's row count unchanged.  The store keeps
+    its format: one row per (id, band), the shingle set on band 0 only."""
+    import shutil
+
+    from janus_spark.datapipe.curation import curation_increment
+
+    docs, boot, arr, _, model, _, surv1 = inc_setup
+    store = str(tmp_path / "store")
+    curation_increment(boot, store, model)  # found the store
+    rows = [tuple(r) for r in arr.collect()]
+    scanned = spark.sparkContext.accumulator(0)
+
+    def counted(row):
+        scanned.add(1)
+        return row
+
+    arrivals = spark.createDataFrame(
+        spark.sparkContext.parallelize(rows, 4).map(counted), arr.schema
+    )
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
+    before = dag.numTotalJobs()
+    out = curation_increment(arrivals, store, model)
+    assert dag.numTotalJobs() - before <= 12
+    assert scanned.value == len(rows)
+
+    st = spark.read.parquet(store)
+    assert st.schema.simpleString() == (
+        "struct<id:bigint,band:int,bh:string,sh:array<string>>"
+    )
+    per_id = st.groupBy("id").agg(
+        F.count(F.lit(1)).alias("n"),
+        F.countDistinct("band").alias("nb"),
+        F.count("sh").alias("n_sh"),
+        F.min(F.when(F.col("sh").isNotNull(), F.col("band"))).alias("sh_band"),
+    )
+    bad = per_id.where(
+        f"n != {model['bands']} OR nb != {model['bands']} OR n_sh != 1 OR sh_band != 0"
+    )
+    assert bad.count() == 0
+    n_store = st.count()
+
+    replay = curation_increment(arrivals, store, model)
+    assert replay.count() == 0
+    assert spark.read.parquet(store).count() == n_store
+
+    shutil.rmtree(store)
+    assert _ids(out) == _ids(surv1)
+
+
+@pytest.mark.parametrize("broadcast_limit", [None, "-1"])
+def test_increment_partial_replay(spark, tmp_path, inc_setup, broadcast_limit):
+    """A batch that overlaps an applied one: the overlap is neither
+    returned nor appended again, the rest is curated as usual, so the
+    survivors still equal the single-increment ones.  With broadcasts
+    disabled the dedup plan shuffles instead and the append takes its
+    exact replay path; the result must not change."""
+    from janus_spark.datapipe.curation import curation_increment
+
+    _, boot, arr, _, model, _, surv1 = inc_setup
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    if broadcast_limit is not None:
+        spark.conf.set(key, broadcast_limit)
+    try:
+        store = str(tmp_path / "store")
+        curation_increment(boot, store, model)
+        first = _ids(curation_increment(arr.where("doc_id < 300"), store, model))
+        second = _ids(curation_increment(arr.where("doc_id >= 280"), store, model))
+    finally:
+        spark.conf.set(key, old)
+    assert not (first & second)
+    assert first | second == _ids(surv1)
+    st = spark.read.parquet(store)
+    assert st.count() == st.select("id", "band").distinct().count()

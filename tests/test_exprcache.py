@@ -103,3 +103,43 @@ def test_shifted_grams_sql_matches_column(spark, sf_dir):
         a = toks.select(cached_expr(_shifted_grams_sql("toks", k)).alias("x"))
         b = toks.select(_shifted_grams(F.col("toks"), k).alias("x"))
         assert _frames_equal(a, b), f"k={k}"
+
+
+def test_cached_expr_is_thread_safe(monkeypatch):
+    """Concurrent lookups while other threads evict: a lookup must never
+    find a key that is gone by the time it is moved to the LRU end.
+    ``F.expr`` is stubbed, so no Spark session is needed and the threads
+    spend their time in the cache itself."""
+    import random
+    import sys
+    import threading
+
+    from janus_spark.datapipe import exprcache
+
+    monkeypatch.setattr(exprcache.F, "expr", lambda sql: object())
+    monkeypatch.setattr(exprcache, "_CACHE", type(exprcache._CACHE)())
+    # a working set just above the cap: most lookups hit, and the key a
+    # lookup hits is often the next one another thread evicts
+    monkeypatch.setattr(exprcache, "_CACHE_MAX", 8)
+    errors = []
+
+    def hammer(seed: int) -> None:
+        rng = random.Random(seed)
+        try:
+            for _ in range(20000):
+                exprcache.cached_expr(f"k{rng.randrange(10)}")
+        except Exception as exc:  # noqa: BLE001 — the failure under test
+            errors.append(exc)
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=hammer, args=(s,)) for s in range(4)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join()
+    finally:
+        sys.setswitchinterval(old)
+    assert errors == []
+    assert len(exprcache._CACHE) <= exprcache._CACHE_MAX

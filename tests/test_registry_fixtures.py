@@ -1,7 +1,8 @@
 """Registry gates whose fixture is generated in code (``sf_dir`` unused)
-checked against their DuckDB oracles, plus a guard that every gate's
-temp-dir / file-stream / memory-sink plumbing goes through the three
-helpers in ``janus_spark/queries.py``."""
+and the incremental-store gates (over the sf0.001 documents) checked
+against their DuckDB oracles, plus a guard that every gate's temp-dir /
+file-stream / memory-sink plumbing goes through the three helpers in
+``janus_spark/queries.py``."""
 
 import inspect
 
@@ -41,14 +42,43 @@ def test_self_contained_gate_matches_oracle(spark, name):
     (row count, Σ md5(row)) multiset digests on both engines."""
     import duckdb
 
-    sdf = queries.QUERIES[name](spark, "unused: the fixture is the stream")
+    _assert_oracle_match(
+        spark, name, "unused: the fixture is the stream", duckdb.connect()
+    )
+
+
+# gates that read, extend and dedup against a persistent MinHash store
+STORE_GATES = [
+    "q_curation_increment",
+    "q_curation_increment_select",
+    "q_dedup_incremental_minhash",
+    "q_live_curation",
+]
+
+
+def _assert_oracle_match(spark, name, sf_dir, con):
+    sdf = queries.QUERIES[name](spark, sf_dir)
     srows = [tuple(r) for r in sdf.collect()]
-    cur = duckdb.connect().execute(queries.ORACLES[name])
+    cur = con.execute(queries.ORACLES[name])
     ocols = [d[0] for d in cur.description]
     orows = cur.fetchall()
     assert sorted(sdf.columns) == sorted(ocols)
     assert srows, "an empty result would make the compare vacuous"
     assert multiset_digest(srows, sdf.columns) == multiset_digest(orows, ocols)
+
+
+@pytest.mark.parametrize("name", STORE_GATES)
+def test_store_gate_matches_oracle(spark, sf_dir, name):
+    """The same order-free compare over the sf0.001 documents, with the
+    DuckDB view built as ``scripts/check_correctness.py`` builds it."""
+    import duckdb
+
+    con = duckdb.connect()
+    con.execute(
+        "CREATE VIEW documents AS SELECT * FROM "
+        f"read_parquet('{sf_dir}/documents.parquet')"
+    )
+    _assert_oracle_match(spark, name, sf_dir, con)
 
 
 def test_gate_fixture_plumbing_goes_through_helpers():
