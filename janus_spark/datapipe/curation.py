@@ -387,9 +387,9 @@ def _frozen_stage2(docs: DataFrame, model: dict) -> DataFrame:
     )
 
 
-# model weights frame -> (n_buckets, its weight-lookup SQL over the token
-# bucket): collected and packed once per model, not once per batch
-_WEIGHT_LOOKUPS: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+# model weights frame -> its collected (b, w) items: collected once per
+# model, not once per batch
+_WEIGHT_ITEMS: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
 
 
 def _frozen_quality_keep(model: dict) -> Column:
@@ -398,43 +398,32 @@ def _frozen_quality_keep(model: dict) -> Column:
     decimal(38,0), where ``score_int`` sums the weights of the document's
     token buckets and ``n_tok`` counts the tokens whose bucket HAS a
     weight — exactly ``quality_scores``' explode → weights join → groupBy,
-    evaluated as one lookup per token in the model (``weight_lookup_sql``,
-    at most ``n_buckets`` entries).  Tokenless documents compare 0 > 0
-    and are rejected, as before.  Pinned row for row against the
-    ``quality_scores`` form by
+    evaluated as one lookup per token in the model
+    (``token_weight_sum_sql``, at most ``n_buckets`` entries).  Tokenless
+    documents compare 0 > 0 and are rejected, as before.  Pinned row for
+    row against the ``quality_scores`` form by
     ``test_frozen_quality_keep_matches_quality_scores``."""
-    from janus_spark.datapipe.dedup import shared_hash64_spark_sql
     from janus_spark.datapipe.exprcache import cached_expr, qident
-    from janus_spark.datapipe.quality import weight_lookup_sql
-    from janus_spark.datapipe.text import clean_tokens_sql
+    from janus_spark.datapipe.quality import token_weight_sum_sql
 
-    weights, n_buckets = model["weights"], int(model["n_buckets"])
-    cached = _WEIGHT_LOOKUPS.get(weights)
-    if cached is None or cached[0] != n_buckets:
+    weights = model["weights"]
+    items = _WEIGHT_ITEMS.get(weights)
+    if items is None:
         items = [(r["b"], r["w"]) for r in weights.collect()]
-        bucket = f"{shared_hash64_spark_sql('t')} % {n_buckets}"
-        cached = (n_buckets, weight_lookup_sql(items, n_buckets, bucket))
-        _WEIGHT_LOOKUPS[weights] = cached
+        _WEIGHT_ITEMS[weights] = items
 
     def dec(x) -> str:
         return f"CAST({x} AS DECIMAL(38,0))"
 
     tn, ts, tau = (int(model[k]) for k in ("tn", "ts", "tau_micro"))
-    lookup = (
-        f"transform({clean_tokens_sql(qident(model['text_col']))}, "
-        f"t -> {cached[1]})"
-    )
-    step = (
-        "named_struct('s', acc.s + coalesce(w, 0L), "
-        "'n', acc.n + CASE WHEN w IS NULL THEN 0L ELSE 1L END)"
-    )
     decide = (
         f"{dec('acc.s')} * {dec(tn)} > {dec(ts)} * {dec('acc.n')} "
         f"+ {dec(tau)} * {dec('acc.n')} * {dec(tn)}"
     )
     return cached_expr(
-        f"aggregate({lookup}, named_struct('s', 0L, 'n', 0L), "
-        f"(acc, w) -> {step}, acc -> {decide})"
+        token_weight_sum_sql(
+            qident(model["text_col"]), items, int(model["n_buckets"]), decide
+        )
     )
 
 

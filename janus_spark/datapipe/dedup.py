@@ -42,7 +42,15 @@ def read_store(
     alone.  ``merge_schema`` tolerates stores whose early appends predate
     a later-added column (e.g. batch_id).  A caller that knows the
     store's ``schema`` (DDL) passes it and skips schema inference, a
-    Spark job per read; corrupt files then raise when the frame runs."""
+    Spark job per read; corrupt files then raise when the frame runs.
+
+    A missing path is checked with the Hadoop ``FileSystem`` BEFORE the
+    read: a failed read would also be re-thrown to the session's query
+    execution listeners (an ``Observation`` registers one) and logged as
+    a listener ERROR with a full trace."""
+    jpath = spark._jvm.org.apache.hadoop.fs.Path(store_path)
+    if not jpath.getFileSystem(spark._jsc.hadoopConfiguration()).exists(jpath):
+        return None
     reader = spark.read.option("mergeSchema", "true") if merge_schema else spark.read
     if schema is not None:
         reader = reader.schema(schema)
@@ -51,6 +59,7 @@ def read_store(
     except AnalysisException as exc:
         msg = str(exc)
         if "PATH_NOT_FOUND" in msg or "Path does not exist" in msg:
+            # deleted between the existence check and the read
             return None
         if "UNABLE_TO_INFER_SCHEMA" in msg:
             # the dir exists but holds no data files (pre-created temp dir,
@@ -65,7 +74,7 @@ def exact_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -
     """Keep the lowest id per identical normalized text.  Returns
     (keep_id, dup_count).  Scale: one shuffle keyed on md5, map-side
     partial aggregation."""
-    key = F.md5(normalize(F.col(text_col)))
+    key = F.md5(normalize(text_col))
     return (
         df.select(F.col(id_col).alias("id"), key.alias("key"))
         .groupBy("key")
@@ -87,8 +96,8 @@ def contamination_flags(
     Returns (id, fp_md5) for contaminated rows only.  Scale: the benchmark
     side is tiny relative to the corpus → distinct its fingerprints and
     broadcast, so the corpus scan is map-only with no shuffle."""
-    fp = F.md5(normalize(F.col(text_col)))
-    bench_fp = benchmark.select(F.md5(normalize(F.col(bench_text_col))).alias("fp_md5")).distinct()
+    fp = F.md5(normalize(text_col))
+    bench_fp = benchmark.select(F.md5(normalize(bench_text_col)).alias("fp_md5")).distinct()
     return (
         df.select(F.col(id_col).alias("id"), fp.alias("fp_md5"))
         .join(F.broadcast(bench_fp), "fp_md5", "semi")
@@ -178,22 +187,8 @@ def shared_hash64_spark_sql(expr: str, seed: int | None = None) -> str:
 
 
 # --------------------------------------------------------------- shingles
-def _let(col: Column, body) -> Column:
-    """Let-binding for Column expressions: evaluate ``col`` ONCE per row
-    and hand it to ``body`` as a higher-order lambda variable, so every
-    reference inside the body is an O(1) variable read instead of a
-    re-evaluation of the subtree (HOF lambdas are interpreted with no
-    codegen subexpression elimination — the single-element transform is
-    the expression-level analogue of the staged-projection discipline)."""
-    return F.element_at(F.transform(F.array(col), body), 1)
-
-
 def word_shingles_sql(text: str, k: int = 3) -> str:
-    """SQL text for :func:`word_shingles` over a text expression —
-    identical spelling to the Column form (same zip-against-shifts
-    build, same let-binding via a single-element transform), emitted as
-    a string so one cached ``F.expr`` replaces ~200 Py4J calls per
-    construction (see exprcache)."""
+    """SQL text for :func:`word_shingles` over a text expression."""
     toks = f"split(trim(lower({text})), '\\\\s+')"
     acc = "t"
     for j in range(1, k):
@@ -206,46 +201,31 @@ def word_shingles_sql(text: str, k: int = 3) -> str:
     return f"element_at(transform(array({toks}), t -> {body}), 1)"
 
 
-def word_shingles(text_col: Column | str, k: int = 3) -> Column:
-    """Distinct k-word shingles (arrays stay JVM-side).
+def word_shingles(text_col: str, k: int = 3) -> Column:
+    """Distinct k-word shingles of the column ``text_col`` (arrays stay
+    JVM-side).
 
     Built by zipping the token array against its k−1 shifts instead of
     slicing per index: an expression subtree referenced INSIDE a
     higher-order lambda is re-evaluated per element (the index-lambda
     form re-tokenized the text O(n) times per row — measured 4.5×
-    slower).  The token array is additionally let-bound (single-element
-    transform), so its k+2 top-level references (size, zip base, shifts,
+    slower).  The token array is let-bound (a single-element
+    ``transform`` evaluates it ONCE per row and hands it to the body as
+    a lambda variable — higher-order lambdas get no subexpression
+    elimination), so its k+2 references (size, zip base, shifts,
     short-doc branch) cost ONE tokenize, not k+2.  The zip pads the tail
-    with NULL and ``concat`` propagates it, so one isNotNull filter
-    leaves exactly n−k+1 shingles.
-
-    Pass the column NAME (str) to get the cached-SQL construction path
-    (one Py4J call after first use); a Column argument takes the
-    equivalent Column-API build."""
+    with NULL and ``concat`` propagates it, so one IS NOT NULL filter
+    leaves exactly n−k+1 shingles."""
     from janus_spark.datapipe.exprcache import cached_expr, qident
 
-    if isinstance(text_col, str):
-        return cached_expr(word_shingles_sql(qident(text_col), k))
-
-    def build(toks: Column) -> Column:
-        n = F.size(toks)
-        acc = toks
-        for j in range(1, k):
-            shifted = F.slice(toks, j + 1, F.greatest(n - j, F.lit(1)))
-            acc = F.zip_with(acc, shifted, lambda a, b: F.concat(a, F.lit(" "), b))
-        return F.when(n < k, F.array(F.concat_ws(" ", toks))).otherwise(
-            F.array_distinct(F.filter(acc, lambda x: x.isNotNull()))
-        )
-
-    return _let(tokens(F.lower(text_col)), build)
+    return cached_expr(word_shingles_sql(qident(text_col), k))
 
 
 # ---------------------------------------------------------------- minhash
 def minhash_signature_sql(shingles: str, num_perm: int = 16, hash_fn: str = "xxhash64") -> str:
     """SQL text for :func:`minhash_signature` over a shingle-array
-    expression — same per-permutation hashes (``shared_hash64_sql`` for
-    the md5 family, two-arg xxhash64 with an int seed literal for the
-    default), emitted as a string for cached construction."""
+    expression: per permutation i, ``shared_hash64_spark_sql`` seeded
+    with i for the md5 family, two-arg ``xxhash64(s, i)`` otherwise."""
 
     def perm_min(i: int) -> str:
         if hash_fn == "md5":
@@ -258,27 +238,15 @@ def minhash_signature_sql(shingles: str, num_perm: int = 16, hash_fn: str = "xxh
 
 
 def minhash_signature(
-    shingles: Column | str, num_perm: int = 16, hash_fn: str = "xxhash64"
+    shingles: str, num_perm: int = 16, hash_fn: str = "xxhash64"
 ) -> Column:
-    """MinHash signature: per permutation i, min over shingles of
-    hash(shingle, i).  ``hash_fn``: "xxhash64" (default, fastest) or
-    "md5" (the cross-engine family ``shared_hash64`` — used by the
-    oracle-exact gate).  Pass the column NAME (str) for the cached-SQL
-    construction path."""
+    """MinHash signature of the shingle-array column ``shingles``: per
+    permutation i, min over shingles of hash(shingle, i).  ``hash_fn``:
+    "xxhash64" (default, fastest) or "md5" (the cross-engine family
+    ``shared_hash64`` — used by the oracle-exact gate)."""
     from janus_spark.datapipe.exprcache import cached_expr, qident
 
-    if isinstance(shingles, str):
-        return cached_expr(minhash_signature_sql(qident(shingles), num_perm, hash_fn))
-
-    def perm_min(i: int) -> Column:
-        # single-param lambda only: a second param would be bound to the
-        # element index by F.transform
-        if hash_fn == "md5":
-            return F.array_min(F.transform(shingles, lambda s: shared_hash64(s, i)))
-        seed = F.lit(i)
-        return F.array_min(F.transform(shingles, lambda s: F.xxhash64(s, seed)))
-
-    return F.array(*[perm_min(i) for i in range(num_perm)])
+    return cached_expr(minhash_signature_sql(qident(shingles), num_perm, hash_fn))
 
 
 def _minhash_banded(
@@ -1391,7 +1359,7 @@ def corpus_diff(
     map-side; no text ever crosses the shuffle (32-byte keys only).
     """
     fp = lambda df: df.select(  # noqa: E731
-        F.col(id_col).alias("id"), F.md5(normalize(F.col(text_col))).alias("fp")
+        F.col(id_col).alias("id"), F.md5(normalize(text_col)).alias("fp")
     )
     o = fp(old).withColumnRenamed("fp", "fp_old")
     n = fp(new).withColumnRenamed("fp", "fp_new")
@@ -1426,7 +1394,7 @@ def incremental_dedup(
     from pyspark.sql.window import Window as W
 
     spark = new_docs.sparkSession
-    fp = F.md5(normalize(F.col(text_col)))
+    fp = F.md5(normalize(text_col))
     batch = (
         new_docs.withColumn("__fp", fp)
         .withColumn(
@@ -1785,17 +1753,6 @@ def _shifted_grams_sql(toks: str, k: int) -> str:
     for j in range(1, k):
         shifted = f"slice({toks}, {j + 1}, greatest(size({toks}) - {j}, 1))"
         acc = f"zip_with({acc}, {shifted}, (a, b) -> concat(a, ' ', b))"
-    return acc
-
-
-def _shifted_grams(toks: Column, k: int) -> Column:
-    """Column form of :func:`_shifted_grams_sql` (kept for Column-typed
-    callers)."""
-    n = F.size(toks)
-    acc = toks
-    for j in range(1, k):
-        shifted = F.slice(toks, j + 1, F.greatest(n - j, F.lit(1)))
-        acc = F.zip_with(acc, shifted, lambda a, b: F.concat(a, F.lit(" "), b))
     return acc
 
 

@@ -16,11 +16,13 @@ and no results — every plan that embeds it is analyzed fresh and every
 action recomputes from the inputs.  The SQL string is the cache key, so
 two semantically different expressions can never collide.
 
-Equivalence discipline: each ``*_sql`` builder in the datapipe modules
-mirrors its former Column-API form token for token (same functions, same
-literal types, same casts), and the gates that consume them are pinned
-EXACT against their DuckDB oracles — the conversion is a construction-
-cost change, not a semantic one.
+Equivalence discipline: the SQL text is the ONLY spelling of each
+datapipe expression — a public builder takes a column NAME, quotes it
+with :func:`qident` and returns the cached parse.  There is no
+Column-API twin to drift from; correctness is pinned by the gates'
+DuckDB oracles and by independent references in the tests (plain
+Python shingles and tokens, ``hashlib`` MinHash, an explode/groupBy
+MinHash).
 """
 
 from __future__ import annotations
@@ -67,7 +69,13 @@ def cached_expr(sql: str) -> Column:
 
 
 def qident(name: str) -> str:
-    """Backtick-quote an identifier for safe embedding in SQL text."""
+    """Backtick-quote an identifier for safe embedding in SQL text.
+    Builders take column NAMES; a ``Column`` here is a caller error."""
+    if not isinstance(name, str):
+        raise TypeError(
+            f"expected a column name (str), got {type(name).__name__}; "
+            "project the expression to a named column and pass the name"
+        )
     return "`" + name.replace("`", "``") + "`"
 
 

@@ -110,7 +110,7 @@ def feature_hash(
     from janus_spark.datapipe.text import clean_tokens
 
     tok = df.select(
-        F.col(id_col), F.explode(clean_tokens(F.col(text_col))).alias("__t")
+        F.col(id_col), F.explode(clean_tokens(text_col)).alias("__t")
     )
     h = shared_hash64(F.col("__t"))
     sgn = F.when(shared_hash64(F.col("__t"), 1) % 2 == 0, F.lit(1)).otherwise(F.lit(-1))

@@ -54,6 +54,7 @@ __all__ = [
     "quality_filter_relative_split",
     "quality_score_columns",
     "quality_stream_scores",
+    "token_weight_sum_sql",
     "weight_lookup_sql",
     "gopher_quality",
     "GOPHER_STOPWORDS",
@@ -273,55 +274,32 @@ def quality_filter_relative_split(
 
 
 def quality_score_columns(
-    text_col,
+    text_col: str,
     weight_items: Sequence[tuple[int, int]],
     n_buckets: int = 4096,
     bias_micro: int = 0,
     tau_micro: int = 0,
     scale: int = 1_000_000,
 ):
-    """Stateless per-ROW scorer: the weight model as a LITERAL map, one
-    `F.aggregate` over the token array — no explode, no join, no groupBy,
-    no state.  This is the streaming form of :func:`quality_scores`: a
-    Structured Streaming pipeline can't run a bare per-doc groupBy in
-    append mode, and it shouldn't — scoring is algebraically per-row, so
-    the model (≤ n_buckets entries, ~tens of KB) rides the plan as a
-    literal and the operator stays map-only at any scale (zero shuffles,
+    """Stateless per-ROW scorer of the column ``text_col``: the weight
+    model rides the plan as a literal (:func:`token_weight_sum_sql`), one
+    ``aggregate`` over the token array — no explode, no join, no
+    groupBy, no state.  This is the streaming form of
+    :func:`quality_scores`: a Structured Streaming pipeline can't run a
+    bare per-doc groupBy in append mode, and it shouldn't — scoring is
+    algebraically per-row, so the model (≤ n_buckets entries) rides the
+    plan and the operator stays map-only at any scale (zero shuffles,
     zero streaming state; works identically on batch frames).
 
     Semantics match :func:`quality_scores` EXACTLY, including the edge
     the two forms could silently disagree on: a token whose bucket is
     absent from the weight table contributes to NEITHER ``score_int``
-    NOR ``n_tok`` (the join path drops it; the map path counts only
-    non-null lookups).  Returns a dict of Columns
+    NOR ``n_tok``.  Returns a dict of Columns
     ``{score_int, n_tok, pred, score}`` to splat into a ``select``.
     """
-    from janus_spark.datapipe.dedup import shared_hash64
-    from janus_spark.datapipe.text import clean_tokens
+    from janus_spark.datapipe.exprcache import cached_expr, qident
 
-    if len(weight_items) > n_buckets:
-        raise ValueError("more weight entries than buckets")
-    zero = F.lit(0).cast("long")
-    if weight_items:
-        wmap = F.map_from_arrays(
-            F.array(*[F.lit(int(b)).cast("long") for b, _ in weight_items]),
-            F.array(*[F.lit(int(w)).cast("long") for _, w in weight_items]),
-        )
-    else:
-        wmap = F.map_from_arrays(
-            F.array().cast("array<long>"), F.array().cast("array<long>")
-        )
-    toks = clean_tokens(text_col)
-    acc0 = F.struct(zero.alias("s"), zero.alias("n"))
-
-    def step(acc, t):
-        w = wmap[shared_hash64(t) % n_buckets]
-        return F.struct(
-            (acc["s"] + F.coalesce(w, zero)).alias("s"),
-            (acc["n"] + w.isNotNull().cast("long")).alias("n"),
-        )
-
-    agg = F.aggregate(toks, acc0, step)
+    agg = cached_expr(token_weight_sum_sql(qident(text_col), weight_items, n_buckets))
     score_int = agg["s"]
     n_tok = agg["n"]
     pred = (n_tok > 0) & (
@@ -350,15 +328,61 @@ def weight_lookup_sql(
     substring walks the characters up to the offset — and analysis and
     optimization see a single leaf.  An ``array(…)`` of 4096 literals
     costs about 125 ms of analysis per use, and even folded to one array
-    literal about 90 ms of optimization."""
-    cells = [""] * int(n_buckets)
+    literal about 90 ms of optimization.
+
+    Bucket ids must be distinct and in ``[0, n_buckets)``: a repeated id
+    would silently keep its last weight, a negative one would fill a cell
+    counted from the end."""
+    n_buckets = int(n_buckets)
+    if len(weight_items) > n_buckets:
+        raise ValueError("more weight entries than buckets")
+    cells = [""] * n_buckets
     for b, w in weight_items:
-        cells[int(b)] = str(int(w))
+        b = int(b)
+        if not 0 <= b < n_buckets:
+            raise ValueError(f"bucket id {b} outside [0, {n_buckets})")
+        if cells[b]:
+            raise ValueError(f"duplicate bucket id {b}")
+        cells[b] = str(int(w))
     width = max(1, *(len(c) for c in cells))
     packed = "".join(c.rjust(width) for c in cells).encode("ascii").hex()
     return (
         f"try_cast(CAST(substring(X'{packed}', CAST({bucket} AS INT) * {width} "
         f"+ 1, {width}) AS STRING) AS BIGINT)"
+    )
+
+
+def token_weight_sum_sql(
+    text: str,
+    weight_items: Sequence[tuple[int, int]],
+    n_buckets: int,
+    finish: str | None = None,
+) -> str:
+    """SQL text of a document's quality sums under a ``(b, w)`` model:
+    ``aggregate`` over the document's clean tokens of
+    ``struct(s, n)`` — ``s`` the BIGINT sum of the token buckets'
+    weights (``shared_hash64 % n_buckets``, looked up by
+    :func:`weight_lookup_sql`), ``n`` the number of tokens whose bucket
+    HAS a weight.  A token whose bucket is absent from the model adds to
+    neither, exactly as :func:`quality_scores`' weights join drops it.
+    ``finish`` is an optional final lambda body over ``acc`` (the
+    struct); without one the struct itself is the value."""
+    from janus_spark.datapipe.dedup import shared_hash64_spark_sql
+    from janus_spark.datapipe.text import clean_tokens_sql
+
+    bucket = f"{shared_hash64_spark_sql('t')} % {int(n_buckets)}"
+    lookup = (
+        f"transform({clean_tokens_sql(text)}, "
+        f"t -> {weight_lookup_sql(weight_items, n_buckets, bucket)})"
+    )
+    step = (
+        "named_struct('s', acc.s + coalesce(w, 0L), "
+        "'n', acc.n + CASE WHEN w IS NULL THEN 0L ELSE 1L END)"
+    )
+    fin = "" if finish is None else f", acc -> {finish}"
+    return (
+        f"aggregate({lookup}, named_struct('s', 0L, 'n', 0L), "
+        f"(acc, w) -> {step}{fin})"
     )
 
 
@@ -380,7 +404,7 @@ def quality_stream_scores(
     ``[(b, w), ...]`` (a bounded model-sized collect — ≤ n_buckets
     rows)."""
     cols = quality_score_columns(
-        F.col(text_col), weight_items, n_buckets, bias_micro, tau_micro, scale
+        text_col, weight_items, n_buckets, bias_micro, tau_micro, scale
     )
     return stream.select(
         F.col(id_col), cols["score_int"], cols["n_tok"], cols["pred"]

@@ -68,7 +68,7 @@ def bm25_topk(
     # bit-for-bit; optimization guide §2.4)
     staged = docs.select(
         F.col(id_col).alias("id"),
-        F.array_sort(clean_tokens(F.col(text_col))).alias("__st"),
+        F.array_sort(clean_tokens(text_col)).alias("__st"),
     ).localCheckpoint(eager=False)
     dl = staged.select("id", F.size("__st").alias("dl"))
     tf = exploded_run_lengths(staged, "__st", keep=["id"]).select(
@@ -114,7 +114,7 @@ def _bm25_score_from_index(
     qterms = (
         queries.select(
             F.col(query_id_col).alias("query_id"),
-            F.explode(clean_tokens(F.col(query_text_col))).alias("t"),
+            F.explode(clean_tokens(query_text_col)).alias("t"),
         )
         .distinct()
     )
@@ -260,7 +260,7 @@ class IncrementalBM25Index:
         shutil.rmtree(stage, ignore_errors=True)
         docs = batch.select(
             F.col(self.id_col).alias("id"),
-            clean_tokens(F.col(self.text_col)).alias("__toks"),
+            clean_tokens(self.text_col).alias("__toks"),
         )
         if cur and skip_existing:
             seen = self.spark.read.parquet(f"{self._vdir(cur)}/doclen").select("id")

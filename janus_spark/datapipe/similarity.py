@@ -88,35 +88,23 @@ def _dot_sql(a: str, b: str) -> str:
     )
 
 
-def lsh_signature(vec: Column | str, planes: list[list[float]]) -> Column:
-    """Sign-bit signature as an int per plane-group caller composes.
-    Pass the vector column NAME (str) for the cached-SQL construction
-    path — the per-plane dot trees cost ~0.1 s of Py4J round-trips per
-    plane group in Column form (see exprcache)."""
+def lsh_signature(vec: str, planes: list[list[float]]) -> Column:
+    """Sign-bit signature of the vector column ``vec``: bit i is set when
+    the vector's dot product with ``planes[i]`` is >= 0 (BIGINT)."""
     from janus_spark.datapipe.exprcache import (
         cached_expr,
         float_array_sql,
         qident,
     )
 
-    if isinstance(vec, str):
-        terms = ["CAST(0 AS BIGINT)"]
-        for i, p in enumerate(planes):
-            bit = (
-                f"CASE WHEN {_dot_sql(qident(vec), float_array_sql(p))} >= 0 "
-                "THEN 1 ELSE 0 END"
-            )
-            terms.append(f"CAST({bit} AS BIGINT) * CAST({1 << i} AS BIGINT)")
-        return cached_expr(" + ".join(terms))
-
-    bits = []
-    for p in planes:
-        arr = cached_expr(float_array_sql(p))
-        bits.append(F.when(_dot(vec, arr) >= 0, F.lit(1)).otherwise(F.lit(0)))
-    sig = F.lit(0).cast("long")
-    for i, b in enumerate(bits):
-        sig = sig + (b.cast("long") * F.lit(1 << i).cast("long"))
-    return sig
+    terms = ["CAST(0 AS BIGINT)"]
+    for i, p in enumerate(planes):
+        bit = (
+            f"CASE WHEN {_dot_sql(qident(vec), float_array_sql(p))} >= 0 "
+            "THEN 1 ELSE 0 END"
+        )
+        terms.append(f"CAST({bit} AS BIGINT) * CAST({1 << i} AS BIGINT)")
+    return cached_expr(" + ".join(terms))
 
 
 def lsh_topk(
@@ -610,7 +598,7 @@ def _banded_signatures_arrow(
     linear algebra belongs in Arrow-batched numpy, not per-element
     Catalyst lambdas (same seam as the multimodal decode).
 
-    Edge parity with the Column fold (pinned by tests):
+    Edge parity with the expression fold (pinned by tests):
     - the id column keeps ITS OWN type — the output schema mirrors the
       input and the repeated id array is built with pyarrow ``take``
       (nulls and strings round-trip);
@@ -719,7 +707,7 @@ def embedding_near_dup_pairs(
     # (the widest column in the pipeline) join back once per side after
     # the (a, b) set is final, instead of riding every LSH band through
     # the shuffle.  use_arrow picks the numpy signature kernel
-    # (bit-identical to the Column fold — see _banded_signatures_arrow);
+    # (bit-identical to the expression fold — see _banded_signatures_arrow);
     # the expression path stays as the pure-JVM fallback and parity pin.
     if use_arrow:
         banded = _banded_signatures_arrow(
@@ -787,7 +775,7 @@ def tfidf_topk_pairs(
     # counts; optimization guide §2.4)
     staged = docs.select(
         F.col(id_col).alias("id"),
-        F.array_sort(clean_tokens(F.col(text_col))).alias("__st"),
+        F.array_sort(clean_tokens(text_col)).alias("__st"),
     ).localCheckpoint(eager=False)
     tf = exploded_run_lengths(staged, "__st", keep=["id"]).select(
         "id", F.col("v").alias("t"), F.col("cnt").alias("tf")

@@ -1,8 +1,13 @@
 """Text analysis operators for large-scale training-data pipelines:
 tokenization, token counting, quality scoring, language ID, document
-fingerprinting.  All native Column expressions — no Python UDFs — so the
-whole pipeline stays inside whole-stage codegen and scales linearly with
-the scan (map-only, no shuffle).
+fingerprinting.  All native Spark expressions — no Python UDFs — so the
+pipeline scales linearly with the scan (map-only, no shuffle).
+
+The shared per-document transforms (:func:`normalize`,
+:func:`clean_tokens`) have one spelling, SQL text (``normalize_sql``,
+``clean_tokens_sql``), and their builders take a column NAME and return
+the cached parse (see exprcache); the SQL forms also compose into larger
+expressions (n-gram decontamination, the frozen quality decision).
 """
 
 from __future__ import annotations
@@ -11,6 +16,8 @@ from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from janus_spark.datapipe.exprcache import cached_expr, qident, sql_str
 
 PUNCT_CLASS = r"""[.,;:!?'"()\[\]{}<>/\\|@#$%^&*_+=~`-]"""
 
@@ -25,15 +32,6 @@ LANG_MARKERS = {
 }
 
 EN_STOPWORDS = ["the", "a", "and", "of", "to", "in", "is", "it", "that", "for"]
-
-
-def normalize(col: Column) -> Column:
-    """Canonical text form: lowercase, punctuation stripped, whitespace
-    collapsed.  The basis for fingerprints and exact dedup."""
-    c = F.lower(col)
-    c = F.regexp_replace(c, PUNCT_CLASS, "")
-    c = F.regexp_replace(c, r"\s+", " ")
-    return F.trim(c)
 
 
 def tokens(col: Column) -> Column:
@@ -112,31 +110,29 @@ def lang_id(df: DataFrame, text_col: str = "text") -> DataFrame:
 
 
 def clean_tokens_sql(text: str) -> str:
-    """SQL text of :func:`clean_tokens` over a text expression (cached-
-    construction path; mirrors the Column form token for token)."""
+    """SQL text of :func:`clean_tokens` over a text expression."""
     return f"filter(split(trim(lower({text})), '\\\\s+'), t -> t != '')"
 
 
 def normalize_sql(text: str) -> str:
-    """SQL text of :func:`normalize` (lowercase, punctuation stripped,
-    whitespace collapsed) — mirrors the Column form token for token."""
-    from janus_spark.datapipe.exprcache import sql_str
-
+    """SQL text of :func:`normalize` over a text expression."""
     return (
         f"trim(regexp_replace(regexp_replace(lower({text}), "
         f"{sql_str(PUNCT_CLASS)}, ''), {sql_str(chr(92) + 's+')}, ' '))"
     )
 
 
-def clean_tokens(col: Column | str) -> Column:
-    """Whitespace tokens with empties dropped (blank text → empty list,
-    not ['']).  Pass the column NAME (str) for the cached-SQL
-    construction path."""
-    if isinstance(col, str):
-        from janus_spark.datapipe.exprcache import cached_expr, qident
+def normalize(text_col: str) -> Column:
+    """Canonical text form of the column ``text_col``: lowercase,
+    punctuation stripped, whitespace collapsed.  The basis for
+    fingerprints and exact dedup."""
+    return cached_expr(normalize_sql(qident(text_col)))
 
-        return cached_expr(clean_tokens_sql(qident(col)))
-    return F.filter(F.split(F.trim(F.lower(col)), r"\s+"), lambda t: t != "")
+
+def clean_tokens(text_col: str) -> Column:
+    """Whitespace tokens of the column ``text_col`` with empties dropped
+    (blank text → empty list, not [''])."""
+    return cached_expr(clean_tokens_sql(qident(text_col)))
 
 
 def exploded_run_lengths(
@@ -161,8 +157,6 @@ def exploded_run_lengths(
 
     Both stage expressions are cached SQL text (exprcache): the Column
     form cost ~0.4 s of Py4J-bound driver time per construction."""
-    from janus_spark.datapipe.exprcache import cached_expr, qident
-
     arr = qident(arr_col)
     # 1-based positions where a run of equal values ends; sequence(1, 0)
     # would generate a DESCENDING [1, 0]: guard empties
@@ -462,7 +456,7 @@ def fingerprint(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -
     """Content fingerprint: md5 over the normalized text (md5 is available
     identically in Spark and DuckDB, making the op oracle-checkable), plus
     a 64-bit xxhash64 convenience fingerprint."""
-    norm = normalize(F.col(text_col))
+    norm = normalize(text_col)
     return df.select(
         id_col,
         F.md5(norm).alias("fp_md5"),

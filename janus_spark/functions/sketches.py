@@ -172,21 +172,28 @@ def hll_det_oracle_sql(value_expr: str, group_expr: str, from_sql: str, p: int =
 # ---------------------------------------------------------------------------
 
 
+def cms_cells(v: Column, depth: int, width: int) -> Column:
+    """The ``depth`` CMS cells of the string value ``v``: an array of
+    ``struct(row, col)`` with ``col = shared_hash64(v, row) % width``.
+    The one cell spelling of the batch build, the probe and the
+    streaming build (``streaming.native_agg``)."""
+    from janus_spark.datapipe.dedup import shared_hash64
+
+    return F.array(
+        *[
+            F.struct(F.lit(r).alias("row"), (shared_hash64(v, r) % width).alias("col"))
+            for r in range(depth)
+        ]
+    )
+
+
 def cms_partials(
     df: DataFrame, value_col: str, by: list[str], depth: int = 4, width: int = 1024
 ) -> DataFrame:
     """Mergeable CMS state: (group..., row, col, cnt) with at most
     ``depth*width`` rows per group crossing the shuffle.  Merge finer
     partials to coarser groups with SUM(cnt) on (row, col)."""
-    from janus_spark.datapipe.dedup import shared_hash64
-
-    v = F.col(value_col).cast("string")
-    pairs = F.array(
-        *[
-            F.struct(F.lit(r).alias("row"), (shared_hash64(v, r) % width).alias("col"))
-            for r in range(depth)
-        ]
-    )
+    pairs = cms_cells(F.col(value_col).cast("string"), depth, width)
     return (
         df.select(*by, F.explode(pairs).alias("p"))
         .select(*by, F.col("p.row").alias("row"), F.col("p.col").alias("col"))
@@ -203,15 +210,7 @@ def cms_estimate(
     sketch: est = min over rows of the probed cell (0 if absent).  The
     probe side is expected small → broadcast; never an overestimate by
     less than the true count (CMS never undercounts)."""
-    from janus_spark.datapipe.dedup import shared_hash64
-
-    v = F.col(probe_col).cast("string")
-    cells = F.array(
-        *[
-            F.struct(F.lit(r).alias("row"), (shared_hash64(v, r) % width).alias("col"))
-            for r in range(depth)
-        ]
-    )
+    cells = cms_cells(F.col(probe_col).cast("string"), depth, width)
     probe_cells = probes.select(
         F.col(probe_col).alias("item"), F.explode(cells).alias("p")
     ).select("item", F.col("p.row").alias("row"), F.col("p.col").alias("col"))

@@ -1432,7 +1432,7 @@ def q_dedup_keeplist(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     corpus = _dup_corpus(spark, sf_dir)
     # derive (a, b) pairs from identical normalized text
-    keyed = corpus.select(F.col("doc_id").alias("id"), F.md5(normalize(F.col("text"))).alias("key"))
+    keyed = corpus.select(F.col("doc_id").alias("id"), F.md5(normalize("text")).alias("key"))
     pairs = (
         keyed.alias("l")
         .join(keyed.alias("r"), on="key")
@@ -2680,7 +2680,7 @@ def q_edit_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
     from janus_spark.datapipe.text import normalize
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    norm = docs.select("doc_id", normalize(F.col("text")).alias("nt"))
+    norm = docs.select("doc_id", normalize("text").alias("nt"))
     cand = jaccard_similarity_join(docs, shingle_k=3, threshold=0.5).select("a", "b")
     return (
         cand.join(norm.select(F.col("doc_id").alias("a"), F.col("nt").alias("ta")), "a")
@@ -5001,7 +5001,7 @@ def q_dedup_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
     # normalize+md5 runs once; both self-join sides read the materialized
     # (id, key) frame — same move as the shingle/signature joins
     keyed = corpus.select(
-        F.col("doc_id").alias("id"), F.md5(normalize(F.col("text"))).alias("key")
+        F.col("doc_id").alias("id"), F.md5(normalize("text")).alias("key")
     ).localCheckpoint(eager=True)
     pairs = (
         keyed.alias("l")
@@ -9884,7 +9884,7 @@ def q_live_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Continuous quality classification under the EXACT gate: the
     documents table streams through a REAL Structured Streaming run in
     three file-source micro-batches; each document is scored by the
-    stateless literal-map form (datapipe/quality.py::
+    stateless per-row form (datapipe/quality.py::
     quality_stream_scores — zero shuffles, zero state, append-mode) with
     NB log-odds weights trained batch-side.  Stateless scoring is
     micro-batch invariant, so the streamed result must equal the batch

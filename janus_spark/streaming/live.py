@@ -222,17 +222,17 @@ class LiveQueryRunner:
         buffer = None
         for ws in self.windows:
             st, rng = ws.spec.step_ms, ws.spec.range_ms
-            # window hops [k*st, k*st + rng); closed when end <= upto_ts
-            last_end = ws.last_fired_end
-            fired = 0
+            # window hops [k*st, k*st + rng); closed when end <= upto_ts.
+            # Fire, oldest first, every closed k whose end is past the
+            # last fired end (k*st + rng > last_fired_end), at most
+            # max_windows_per_batch of the newest
             k_end = (upto_ts - rng) // st  # largest k with k*st+rng <= upto_ts
-            k_start_candidates = []
-            k = k_end
-            while k >= 0 and k * st + rng > last_end and fired < self.max_windows_per_batch:
-                k_start_candidates.append(k)
-                k -= 1
-                fired += 1
-            for k in reversed(k_start_candidates):
+            k_lo = max(
+                0,
+                (ws.last_fired_end - rng) // st + 1,
+                k_end - self.max_windows_per_batch + 1,
+            )
+            for k in range(k_lo, k_end + 1):
                 s, e = k * st, k * st + rng
                 if buffer is None:
                     buffer = self._buffer_df()
@@ -242,20 +242,15 @@ class LiveQueryRunner:
     def _evaluate_window(self, ws: _WindowState, buffer: DataFrame, s: int, e: int) -> None:
         self.metrics["windows_fired"] += 1
         self.metrics["last_fire_window_end"] = e
-        # W4 cross-window merge: union every live window's active slice at
-        # time e (the firing window's own slice is [s, e))
-        slices = [buffer.where((F.col("ts") >= s) & (F.col("ts") < e))]
-        for other in self.windows:
-            if other is ws:
-                continue
-            o_rng = other.spec.range_ms
-            slices.append(buffer.where((F.col("ts") >= e - o_rng) & (F.col("ts") < e)))
-        content = slices[0]
-        for sl in slices[1:]:
-            content = content.unionByName(sl)
-        # window containers have SET semantics (rsp-rs QuadContainer is a
-        # HashSet<Quad>): identical quads collapse, incl. feed duplicates
-        content = content.dropDuplicates(["ts", "subject", "predicate", "object", "graph"])
+        # W4 cross-window merge: the firing window's own slice [s, e)
+        # plus every other live window's active slice [e - range, e).
+        # All end at e, so their union is the widest one, [e - max_range,
+        # e); window containers have SET semantics (rsp-rs QuadContainer
+        # is a HashSet<Quad>): identical quads collapse, incl. feed
+        # duplicates
+        content = buffer.where(
+            (F.col("ts") >= e - self.max_range) & (F.col("ts") < e)
+        ).dropDuplicates(["ts", "subject", "predicate", "object", "graph"])
         result = compile_sparql(
             self._live_query,
             content,

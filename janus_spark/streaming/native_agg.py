@@ -238,15 +238,9 @@ def cms_count_stream(
     unbounded key universes — exact per-key streaming counts would grow
     state with distinct keys; the sketch caps it.
     """
-    from janus_spark.datapipe.dedup import shared_hash64
+    from janus_spark.functions.sketches import cms_cells
 
-    v = F.col(value_col).cast("string")
-    cells = F.array(
-        *[
-            F.struct(F.lit(r).alias("row"), (shared_hash64(v, r) % width).alias("col"))
-            for r in range(depth)
-        ]
-    )
+    cells = cms_cells(F.col(value_col).cast("string"), depth, width)
     ev = (
         stream.withColumn("__evt", F.timestamp_millis(F.col(ts_col).cast("long")))
         .withWatermark("__evt", watermark)

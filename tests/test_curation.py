@@ -397,6 +397,61 @@ def test_frozen_quality_keep_matches_quality_scores(spark):
         assert set(old.values()) == {True, False} or tau == 123_456
 
 
+class _Weights:
+    """A weights frame's ``collect`` without Spark: (b, w) rows."""
+
+    def __init__(self, items):
+        self.items = items
+
+    def collect(self):
+        return [{"b": b, "w": w} for b, w in self.items]
+
+
+# _frozen_quality_keep's SQL text as the curation increment has always
+# planned it: any change to it changes the plan of every increment
+_FROZEN_KEEP_SQL_16 = (
+    "aggregate(transform(filter(split(trim(lower(`text`)), '\\\\s+'), t "
+    "-> t != ''), t -> try_cast(CAST(substring(X'2020202020352020202020"
+    '20202020202020202d313230302020202020202020202020202020202020202020'
+    '202020302020202020202020202020202020202020202020202020202020202020'
+    "20202020202020202020202020393837363534', "
+    'CAST(CAST(conv(substring(md5(t), 1, 15), 16, 10) AS BIGINT) % 16 '
+    "AS INT) * 6 + 1, 6) AS STRING) AS BIGINT)), named_struct('s', 0L, "
+    "'n', 0L), (acc, w) -> named_struct('s', acc.s + coalesce(w, 0L), "
+    "'n', acc.n + CASE WHEN w IS NULL THEN 0L ELSE 1L END), acc -> "
+    'CAST(acc.s AS DECIMAL(38,0)) * CAST(17 AS DECIMAL(38,0)) > '
+    'CAST(-4321 AS DECIMAL(38,0)) * CAST(acc.n AS DECIMAL(38,0)) + '
+    'CAST(250 AS DECIMAL(38,0)) * CAST(acc.n AS DECIMAL(38,0)) * '
+    'CAST(17 AS DECIMAL(38,0)))'
+)
+# sha256 of the same builder's text for a 4096-bucket model
+_FROZEN_KEEP_SQL_4096_LEN = 66124
+_FROZEN_KEEP_SQL_4096_SHA256 = "2992e3f20d65f2ae18110777e9048ac7d0f01591619c3e1e77d9d0df7581814b"
+
+
+def test_frozen_quality_keep_sql_is_unchanged(monkeypatch):
+    """The frozen decision's SQL text is byte-identical to the text the
+    curation increment has planned so far, for a small model and for a
+    curation_daily-shaped one (4096 buckets, text column "text")."""
+    import hashlib
+
+    from janus_spark.datapipe import exprcache
+    from janus_spark.datapipe.curation import _frozen_quality_keep
+
+    monkeypatch.setattr(exprcache, "cached_expr", lambda sql: sql)
+
+    def model(items, n, ts, tn, tau):
+        return {"weights": _Weights(items), "n_buckets": n, "ts": ts, "tn": tn,
+                "tau_micro": tau, "text_col": "text"}
+
+    small = model([(0, 5), (3, -1200), (7, 0), (15, 987654)], 16, -4321, 17, 250)
+    assert _frozen_quality_keep(small) == _FROZEN_KEEP_SQL_16
+    big_items = [(b, (b * 7919) % 2_000_001 - 1_000_000) for b in range(0, 4096, 3)]
+    big = _frozen_quality_keep(model(big_items, 4096, -123_456_789, 98_765, 0))
+    assert len(big) == _FROZEN_KEEP_SQL_4096_LEN
+    assert hashlib.sha256(big.encode()).hexdigest() == _FROZEN_KEEP_SQL_4096_SHA256
+
+
 def test_increment_job_budget_and_contracts(spark, tmp_path, inc_setup):
     """One increment against a non-empty store: at most 12 Spark jobs,
     the arrivals scanned exactly once, a returned frame that still

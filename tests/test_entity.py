@@ -339,6 +339,22 @@ def test_store_read_error_is_not_swallowed(spark, tmp_path):
         df.collect()
 
 
+def test_missing_store_is_not_read(spark, tmp_path, monkeypatch):
+    """A missing store path is answered by a filesystem check, not by a
+    failed read: a failed read is also reported to the session's query
+    listeners, which log it as an ERROR once an Observation has run."""
+    from pyspark.sql import DataFrameReader
+
+    from janus_spark.datapipe.dedup import read_store
+
+    def no_read(self, *paths, **kw):
+        raise AssertionError(f"read attempted: {paths}")
+
+    monkeypatch.setattr(DataFrameReader, "parquet", no_read)
+    assert read_store(spark, str(tmp_path / "nope")) is None
+    assert read_store(spark, str(tmp_path / "nope"), schema="fp_md5 string") is None
+
+
 def test_sink_step_retry_is_idempotent(spark, tmp_path):
     """A re-delivered micro-batch (same batch_id) must not re-append its
     rows: the committed-batch marker written in the same append as the

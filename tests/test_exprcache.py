@@ -1,27 +1,56 @@
-"""The cached-SQL construction paths (datapipe/exprcache.py) must be
-EXPRESSION-identical to the Column-API forms they replaced: same schema,
-same rows, bit-identical floats.  These tests pin that equivalence on
-real fixture data so a drifted SQL spelling cannot silently change an
-operator's results."""
+"""The datapipe's cached SQL-text expressions (datapipe/exprcache.py),
+checked against independent references on real fixture data: plain
+Python shingles, tokens and grams (Spark's ``trim`` strips spaces only,
+``split`` uses Java's ``\\s``), ``hashlib`` MinHash, and an
+explode → ``xxhash64`` → groupBy-min MinHash.  A drifted SQL spelling
+cannot silently change an operator's results."""
 
+import hashlib
+import re
 import struct
 
+import pytest
 from pyspark.sql import functions as F
 
 from janus_spark.datapipe.exprcache import (
     cached_expr,
     float_array_sql,
     nested_float_array_sql,
+    qident,
 )
 
+# Java's \s (Spark's split regex); Python's \s also matches Unicode spaces
+_JAVA_WS = re.compile(r"[ \t\n\x0b\f\r]+")
 
-def _frames_equal(a, b) -> bool:
-    assert a.schema == b.schema
-    return a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
+# whitespace edges the fixture text lacks: tabs (kept by trim), leading
+# and trailing spaces, blank and one-token text
+_EDGE_TEXTS = ["\tA b\tc ", "  x  ", "", "one", "a  b c a b c"]
 
 
-def _docs(spark, sf_dir):
-    return spark.read.parquet(f"{sf_dir}/documents.parquet").limit(200)
+def _py_tokens(text: str) -> list[str]:
+    """split(trim(lower(text)), '\\s+'): trim strips spaces only, and a
+    leading or trailing separator leaves an empty token."""
+    return _JAVA_WS.split(text.lower().strip(" "))
+
+
+def _py_shingles(text: str, k: int) -> list[str]:
+    t = _py_tokens(text)
+    if len(t) < k:
+        return [" ".join(t)]
+    return list(dict.fromkeys(" ".join(t[i : i + k]) for i in range(len(t) - k + 1)))
+
+
+def _texts(spark, sf_dir):
+    """(doc_id, text) of 200 fixture docs plus the edge texts."""
+    docs = (
+        spark.read.parquet(f"{sf_dir}/documents.parquet")
+        .limit(200)
+        .select("doc_id", "text")
+    )
+    edge = spark.createDataFrame(
+        [(-1 - i, t) for i, t in enumerate(_EDGE_TEXTS)], docs.schema
+    )
+    return docs.unionByName(edge)
 
 
 def test_cached_expr_returns_same_object(spark):
@@ -49,60 +78,88 @@ def test_float_array_sql_bit_identical(spark):
     assert [list(r) for r in n] == [vals[:3], vals[3:6]]
 
 
-def test_word_shingles_sql_matches_column(spark, sf_dir):
+def test_qident_rejects_column(spark):
+    assert qident("a`b") == "`a``b`"
+    with pytest.raises(TypeError, match="column name"):
+        qident(F.col("text"))
+
+
+def test_word_shingles_match_python(spark, sf_dir):
     from janus_spark.datapipe.dedup import word_shingles
 
-    docs = _docs(spark, sf_dir)
+    docs = _texts(spark, sf_dir)
     for k in (2, 3, 8):
-        a = docs.select(word_shingles("text", k).alias("x"))
-        b = docs.select(word_shingles(F.col("text"), k).alias("x"))
-        assert _frames_equal(a, b), f"k={k}"
+        rows = docs.select("text", word_shingles("text", k).alias("x")).collect()
+        assert len(rows) == 200 + len(_EDGE_TEXTS)
+        for r in rows:
+            assert r["x"] == _py_shingles(r["text"], k), (k, r["text"])
 
 
-def test_minhash_signature_sql_matches_column(spark, sf_dir):
+def test_minhash_md5_matches_hashlib(spark, sf_dir):
     from janus_spark.datapipe.dedup import minhash_signature, word_shingles
 
-    sh = _docs(spark, sf_dir).select(word_shingles("text", 3).alias("sh"))
-    for hf in ("xxhash64", "md5"):
-        a = sh.select(minhash_signature("sh", 16, hf).alias("x"))
-        b = sh.select(minhash_signature(F.col("sh"), 16, hf).alias("x"))
-        assert _frames_equal(a, b), hf
+    sh = _texts(spark, sf_dir).select(word_shingles("text", 3).alias("sh"))
+    rows = sh.select("sh", minhash_signature("sh", 16, "md5").alias("x")).collect()
+    for r in rows:
+        expected = [
+            min(
+                int(hashlib.md5(f"{i}:{s}".encode()).hexdigest()[:15], 16)
+                for s in r["sh"]
+            )
+            for i in range(16)
+        ]
+        assert r["x"] == expected
 
 
-def test_clean_tokens_sql_matches_column(spark, sf_dir):
-    from janus_spark.datapipe.text import clean_tokens
+def test_minhash_xxhash64_matches_explode_groupby(spark, sf_dir):
+    from janus_spark.datapipe.dedup import minhash_signature, word_shingles
 
-    docs = _docs(spark, sf_dir)
-    a = docs.select(clean_tokens("text").alias("x"))
-    b = docs.select(clean_tokens(F.col("text")).alias("x"))
-    assert _frames_equal(a, b)
-    edge = spark.createDataFrame([("",), ("  ",), ("one two  three",)], "text string")
-    assert _frames_equal(
-        edge.select(clean_tokens("text").alias("x")),
-        edge.select(clean_tokens(F.col("text")).alias("x")),
+    # one cut: the signature and the reference read the same 200 docs
+    sh = _texts(spark, sf_dir).select(
+        "doc_id", word_shingles("text", 3).alias("sh")
+    ).localCheckpoint()
+    sig = {
+        r["doc_id"]: r["x"]
+        for r in sh.select("doc_id", minhash_signature("sh", 16).alias("x")).collect()
+    }
+    ref = (
+        sh.select("doc_id", F.explode("sh").alias("s"))
+        .groupBy("doc_id")
+        .agg(*[F.min(F.xxhash64("s", F.lit(i))).alias(f"m{i}") for i in range(16)])
+        .collect()
     )
+    assert len(ref) == len(sig) == 200 + len(_EDGE_TEXTS)
+    for r in ref:
+        assert sig[r["doc_id"]] == [r[f"m{i}"] for i in range(16)]
 
 
-def test_lsh_signature_sql_matches_column(spark, sf_dir):
-    from janus_spark.datapipe.similarity import hyperplanes, lsh_signature
-
-    embs = spark.read.parquet(f"{sf_dir}/embeddings.parquet").limit(200)
-    dim = len(embs.select("embedding").first()[0])
-    planes = hyperplanes(dim, 8, 42)
-    a = embs.select(lsh_signature("embedding", planes).alias("x"))
-    b = embs.select(lsh_signature(F.col("embedding"), planes).alias("x"))
-    assert _frames_equal(a, b)
-
-
-def test_shifted_grams_sql_matches_column(spark, sf_dir):
-    from janus_spark.datapipe.dedup import _shifted_grams, _shifted_grams_sql
+def test_clean_tokens_edges(spark, sf_dir):
     from janus_spark.datapipe.text import clean_tokens
 
-    toks = _docs(spark, sf_dir).select(clean_tokens("text").alias("toks"))
+    edge = spark.createDataFrame([("",), ("  ",), ("one two  three",)], "text string")
+    assert [r["x"] for r in edge.select(clean_tokens("text").alias("x")).collect()] == [
+        [], [], ["one", "two", "three"]
+    ]
+    for r in _texts(spark, sf_dir).select("text", clean_tokens("text").alias("x")).collect():
+        assert r["x"] == [t for t in _py_tokens(r["text"]) if t], r["text"]
+
+
+def test_shifted_grams_match_python(spark, sf_dir):
+    from janus_spark.datapipe.dedup import _shifted_grams_sql
+    from janus_spark.datapipe.text import clean_tokens
+
+    toks = _texts(spark, sf_dir).select(clean_tokens("text").alias("toks"))
     for k in (2, 8):
-        a = toks.select(cached_expr(_shifted_grams_sql("toks", k)).alias("x"))
-        b = toks.select(_shifted_grams(F.col("toks"), k).alias("x"))
-        assert _frames_equal(a, b), f"k={k}"
+        rows = toks.select(
+            "toks", cached_expr(_shifted_grams_sql("toks", k)).alias("x")
+        ).collect()
+        for r in rows:
+            t = r["toks"]
+            expected = [
+                " ".join(t[i : i + k]) if i + k <= len(t) else None
+                for i in range(len(t))
+            ]
+            assert r["x"] == expected, (k, t)
 
 
 def test_cached_expr_is_thread_safe(monkeypatch):

@@ -101,7 +101,7 @@ _weight = st.integers(-3_000_000, 3_000_000)
     tau=st.integers(-200_000, 200_000),
 )
 def test_quality_scorer_forms_match_brute_force(spark, docs, weights, bias, tau):
-    """Join form, literal-map form, and the Python reference must agree
+    """Join form, per-row literal form, and the Python reference must agree
     on arbitrary corpora and weight tables (16 buckets -> guaranteed
     collisions and unknown-bucket tokens)."""
     rows = list(enumerate(docs))

@@ -59,7 +59,7 @@ def test_ivf_probe_all_matches_bruteforce(sess, vecs):
 
 
 def test_arrow_signature_kernel_bit_identical_to_expression_fold(spark):
-    # the numpy kernel must reproduce the Column-expression left fold
+    # the numpy kernel must reproduce the SQL-expression left fold
     # EXACTLY (np.add.accumulate is a strict sequential sum) — this is
     # what keeps the SQL oracle valid for the arrow default
     from janus_spark.datapipe.dedup import shared_hash64  # noqa: F401 (house import pattern)
@@ -85,7 +85,7 @@ def test_arrow_signature_kernel_bit_identical_to_expression_fold(spark):
 
 def test_arrow_signature_kernel_edge_parity(spark):
     # string ids, NULL vector, ragged vector, NaN component: the kernel
-    # must mirror the Column fold (null fold -> bh 0; Spark NaN >= 0 is
+    # must mirror the expression fold (null fold -> bh 0; Spark NaN >= 0 is
     # TRUE) and keep the id column's own type
     from janus_spark.datapipe.similarity import (
         _banded_signatures_arrow,
@@ -113,7 +113,7 @@ def test_arrow_signature_kernel_edge_parity(spark):
     for b in range(bands):
         ps = planes[b * bits : (b + 1) * bits]
         sig_cols.append(
-            F.struct(F.lit(b).alias("band"), lsh_signature(F.col("embedding"), ps).alias("bh"))
+            F.struct(F.lit(b).alias("band"), lsh_signature("embedding", ps).alias("bh"))
         )
     expr = {
         (r["id"], r["band"]): r["bh"]
@@ -157,7 +157,7 @@ def test_arrow_signature_kernel_compensating_ragged_rows(spark):
     for b in range(bands):
         ps = planes[b * bits : (b + 1) * bits]
         sig_cols.append(
-            F.struct(F.lit(b).alias("band"), lsh_signature(F.col("embedding"), ps).alias("bh"))
+            F.struct(F.lit(b).alias("band"), lsh_signature("embedding", ps).alias("bh"))
         )
     expr = {
         (r["id"], r["band"]): r["bh"]

@@ -148,8 +148,8 @@ def test_relative_filter_tau_offset(spark):
 
 
 def test_literal_map_form_matches_join_form(spark):
-    """quality_score_columns (the stateless streaming form: literal-map
-    lookup + one array aggregate) must equal quality_scores (the batch
+    """quality_score_columns (the stateless streaming form: packed
+    literal lookup + one array aggregate) must equal quality_scores (the batch
     explode/broadcast-join form) bit-for-bit — INCLUDING the edge where
     a scored doc contains tokens whose bucket is absent from the weight
     table (both forms drop them from score_int AND n_tok)."""
@@ -261,7 +261,7 @@ def test_gopher_rules_integer_boundaries(spark):
 
 def test_stream_form_score_respects_scale(spark):
     """A non-default training scale must flow through to the float
-    score in the literal-map form (ADVICE r8: it was hardcoded 1e6),
+    score in the stateless per-row form (ADVICE r8: it was hardcoded 1e6),
     keeping it equal to the join form at the same scale."""
     from janus_spark.datapipe.quality import quality_stream_scores
 
@@ -285,9 +285,29 @@ def test_stream_form_score_respects_scale(spark):
     # the join form carries 'score' too — both must use the passed scale
     assert abs(join_row["score"] - expected) < 1e-12
     from janus_spark.datapipe.quality import quality_score_columns
-    cols = quality_score_columns(F.col("text"), witems, n_buckets=64, scale=1000)
+    cols = quality_score_columns("text", witems, n_buckets=64, scale=1000)
     [s] = score_me.select(cols["score"]).collect()
     assert abs(s["score"] - expected) < 1e-12
+
+
+def test_weight_lookup_rejects_bad_bucket_ids():
+    """A model is at most one weight per bucket, each in [0, n_buckets):
+    the packed lookup would otherwise keep a repeated id's last weight
+    silently, and put a negative id's weight in a cell counted from the
+    end."""
+    import pytest
+
+    from janus_spark.datapipe.quality import weight_lookup_sql
+
+    assert "X'" in weight_lookup_sql([(0, 1), (3, -2)], 4, "b")
+    for items, msg in [
+        ([(1, 5), (1, 6)], "duplicate bucket id 1"),
+        ([(-1, 5)], "outside"),
+        ([(4, 5)], "outside"),
+        ([(0, 1), (1, 1), (2, 1), (3, 1), (0, 2)], "more weight entries"),
+    ]:
+        with pytest.raises(ValueError, match=msg):
+            weight_lookup_sql(items, 4, "b")
 
 
 def test_await_stream_raises_on_timeout():

@@ -84,7 +84,7 @@ def test_prefix_filter_bounds_skewed_candidates(spark):
     assert n_hot >= 60  # every 3rd doc of 200
 
     # unpruned candidate pairs: every pair sharing >= 1 shingle
-    sh = docs.select("doc_id", word_shingles(F.col("text"), 3).alias("sh"))
+    sh = docs.select("doc_id", word_shingles("text", 3).alias("sh"))
     posts = sh.select(F.col("doc_id").alias("id"), F.explode("sh").alias("gram"))
     unpruned = (
         posts.alias("l").join(posts.alias("r"), "gram")

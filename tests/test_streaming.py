@@ -130,6 +130,44 @@ def test_multi_window_cross_merge(spark, tmp_path):
     r = joined[0]["rows"][0]
     assert r["temp"] is not None and r["hum"] is not None
 
+    # sliding windows whose ranges AND steps differ, fed in two batches,
+    # with a per-batch fire cap: every fire sees exactly the quads in
+    # [end - max range, end) — the widest live window ending there
+    from collections import Counter
+
+    text = text.replace("[RANGE 2000 STEP 2000]", "[RANGE 3000 STEP 1000]").replace(
+        "[RANGE 4000 STEP 4000]", "[RANGE 5000 STEP 2000]"
+    )
+    runner, sink = make_runner(spark, tmp_path / "sliding", text)
+    quads = temps.unionByName(hums)
+    runner.on_batch(quads.where("ts <= 2100"))
+    assert sink.batches == []  # no window has closed yet
+    runner.on_batch(quads.where("ts > 2100"))
+    runner.max_windows_per_batch = 4
+    runner.close(9000)
+    fired = [(b["window"], b["window_start"], b["window_end"]) for b in sink.batches]
+    a, b = (w.spec.name for w in runner.windows)
+    assert fired == [
+        (a, 0, 3000),  # closed by ts 3000 in the second batch
+        # close(9000) closes k = 1..6 of a; the cap keeps the newest 4
+        (a, 3000, 6000), (a, 4000, 7000), (a, 5000, 8000), (a, 6000, 9000),
+        (b, 0, 5000), (b, 2000, 7000), (b, 4000, 9000),
+    ]
+    pts = [tuple(q) for q in quads.collect()]
+    temp_q = [q for q in pts if q[2] == f"{EX}temperature"]
+    hum_q = [q for q in pts if q[2] == f"{EX}humidity"]
+    for batch in sink.batches:
+        e = batch["window_end"]
+
+        def live(qs):
+            return [q for q in qs if e - 5000 <= q[0] < e]
+
+        expected = Counter(
+            (t[1], t[3], h[3]) for t in live(temp_q) for h in live(hum_q) if t[1] == h[1]
+        )
+        got = Counter((r["sensor"], r["temp"], r["hum"]) for r in batch["rows"])
+        assert got == expected, (batch["window"], e)
+
 
 def test_replay_with_dual_write(spark, tmp_path):
     from janus_spark.sources.quadstore import QuadStore

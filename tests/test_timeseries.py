@@ -119,7 +119,7 @@ def test_jaccard_join_complete_vs_bruteforce(spark, sf_dir):
     """Inverted-index join finds EVERY pair the quadratic scan finds."""
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet").limit(120)
     got = {(r["a"], r["b"]) for r in jaccard_similarity_join(docs, threshold=0.2).collect()}
-    sh = docs.select("doc_id", word_shingles(F.col("text"), 3).alias("sh"))
+    sh = docs.select("doc_id", word_shingles("text", 3).alias("sh"))
     a = sh.select(F.col("doc_id").alias("a"), F.col("sh").alias("sha"))
     b = sh.select(F.col("doc_id").alias("b"), F.col("sh").alias("shb"))
     inter = F.size(F.array_intersect("sha", "shb"))
