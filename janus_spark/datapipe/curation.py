@@ -489,7 +489,7 @@ def curation_increment(
     ``incremental_minhash_dedup`` — near-dup similarity is not
     transitive).
 
-    Plan shape: two plans and the append, whatever the batch size.
+    Plan shape: two plans and the commit, whatever the batch size.
     (1) ONE narrow pass over the arrivals, materialized once: gopher
     rules, the frozen quality decision (a weight lookup per token — no
     shuffle), shingles, MinHash signature and band keys
@@ -497,8 +497,10 @@ def curation_increment(
     store, read once with its known schema: band-key matches against
     the batch and the store, exact Jaccard verify, replayed ids, all
     anti-joined off the batch and materialized
-    (``_dedup_against_store``).  (3) The append of the batch's
-    signatures.  Only the increment is ever scored or signed; history
+    (``_dedup_against_store``).  (3) The batch's signatures committed
+    as the store's next version (``janus_spark/store.py``: a staging
+    directory and one rename; the store's versions are listed, not
+    read, to decide what history is).  Only the increment is ever scored or signed; history
     enters as band rows and, for candidates only, its shingle sets —
     never corpus text.  On the bench shape (about 160 documents, 4
     cores) that is 8 Spark jobs; see docs/SCALE.md."""
@@ -506,8 +508,8 @@ def curation_increment(
         _dedup_against_store,
         _sign_documents,
         minhash_store_schema,
-        read_store,
     )
+    from janus_spark.store import read_store
 
     id_col = model["id_col"]
     hist = read_store(
@@ -588,13 +590,14 @@ def _curation_sink_step(
     out_path: str,
 ) -> None:
     """One idempotent foreachBatch step of :func:`curation_stream`:
-    frozen per-doc filtering, marker-prefix near-dup against the store
-    (``incremental_minhash_dedup(batch_id=...)`` — history is the strict
-    marker prefix, append skipped on replay), then an OVERWRITE publish
-    to ``out_path/batch_id=N``.  Survivors are recomputable on retry
-    (the store prefix a batch first saw is append-only), so a crash
-    anywhere in the step replays to byte-identical output: the
-    ``incremental_entity_resolution`` at-least-once discipline."""
+    frozen per-doc filtering, near-dup against the store versions whose
+    batch id is smaller (``incremental_minhash_dedup(batch_id=...)`` —
+    the commit is skipped when this batch id is already committed), then
+    an OVERWRITE publish to ``out_path/batch_id=N``.  Survivors are
+    recomputable on retry (the store prefix a batch first saw never
+    changes), so a crash anywhere in the step replays to byte-identical
+    output: the ``incremental_entity_resolution`` at-least-once
+    discipline."""
     from janus_spark.datapipe.dedup import incremental_minhash_dedup
 
     s2 = _frozen_stage2(batch_df, model)
@@ -632,11 +635,11 @@ def curation_stream(
     (``availableNow`` trigger: drain what exists, then stop — the daily
     cron shape; swap the trigger for true continuous ingestion).
 
-    foreachBatch is the right seam — each step needs a store
-    read+append, which no built-in sink expresses — and the batch-marker
-    scheme makes the at-least-once contract exact: a retried batch
-    recomputes identical survivors against the unchanged store prefix
-    and overwrites its own output partition (see
+    foreachBatch is the right seam — each step needs a store read and
+    commit, which no built-in sink expresses — and the batch id each
+    commit carries makes the at-least-once contract exact: a retried
+    batch recomputes identical survivors against the unchanged store
+    prefix and overwrites its own output partition (see
     :func:`_curation_sink_step`).
 
     Equivalence (the q_live_curation gate's cross-engine proof): with

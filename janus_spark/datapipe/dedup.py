@@ -18,55 +18,14 @@ from __future__ import annotations
 
 import os
 
-from pyspark.errors import AnalysisException
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from janus_spark.datapipe.text import normalize, tokens
+from janus_spark.store import commit, history, read_store
 
-# minhash store appends write one parquet file per this many signature rows
+# a minhash store commit writes one parquet file per this many signature rows
 STORE_APPEND_ROWS = 250_000
-
-
-def read_store(
-    spark: SparkSession,
-    store_path: str,
-    merge_schema: bool = False,
-    schema: str | None = None,
-) -> DataFrame | None:
-    """Read a persistent parquet store, or None if it does not exist yet.
-    ONLY the path-missing case maps to "fresh store" — corruption,
-    permission errors and transient IO re-raise, because silently
-    treating them as an empty history would reset the state and admit
-    documents (or publish assignments) built from the current batch
-    alone.  ``merge_schema`` tolerates stores whose early appends predate
-    a later-added column (e.g. batch_id).  A caller that knows the
-    store's ``schema`` (DDL) passes it and skips schema inference, a
-    Spark job per read; corrupt files then raise when the frame runs.
-
-    A missing path is checked with the Hadoop ``FileSystem`` BEFORE the
-    read: a failed read would also be re-thrown to the session's query
-    execution listeners (an ``Observation`` registers one) and logged as
-    a listener ERROR with a full trace."""
-    jpath = spark._jvm.org.apache.hadoop.fs.Path(store_path)
-    if not jpath.getFileSystem(spark._jsc.hadoopConfiguration()).exists(jpath):
-        return None
-    reader = spark.read.option("mergeSchema", "true") if merge_schema else spark.read
-    if schema is not None:
-        reader = reader.schema(schema)
-    try:
-        return reader.parquet(store_path)
-    except AnalysisException as exc:
-        msg = str(exc)
-        if "PATH_NOT_FOUND" in msg or "Path does not exist" in msg:
-            # deleted between the existence check and the read
-            return None
-        if "UNABLE_TO_INFER_SCHEMA" in msg:
-            # the dir exists but holds no data files (pre-created temp dir,
-            # or an append of an all-empty first batch) — a fresh store,
-            # not corruption (corrupt footers raise non-Analysis errors)
-            return None
-        raise
 
 
 # ---------------------------------------------------------------- exact
@@ -1386,10 +1345,12 @@ def incremental_dedup(
     batch dedups against all history without rescanning any corpus.
 
     Returns the fresh (never-seen) rows of ``new_docs``.  The store is
-    an append-only parquet of (fp_md5, first_id) — 48 bytes/doc, i.e.
-    ~50 GB of store per 10^9 documents; the anti-join is one shuffle on
-    the 32-byte key (or a broadcast while the store is small).  Restart-
-    safe by construction: state lives in the store files, not in memory.
+    an append store of ``janus_spark/store.py`` with one version of
+    (fp_md5, first_id) rows per batch — 48 bytes/doc, i.e. ~50 GB of
+    store per 10^9 documents; the anti-join is one shuffle on the 32-byte
+    key (or a broadcast while the store is small).  Restart-safe by
+    construction: state lives in the store files, not in memory, and a
+    batch's rows become visible in one rename.
     """
     from pyspark.sql.window import Window as W
 
@@ -1410,9 +1371,8 @@ def incremental_dedup(
             seen, batch["__fp"] == seen["fp_md5"], "left_anti"
         )
     batch = batch.localCheckpoint(eager=True)
-    batch.select(
-        F.col("__fp").alias("fp_md5"), F.col(id_col).alias("first_id")
-    ).write.mode("append").parquet(store_path)
+    fps = batch.select(F.col("__fp").alias("fp_md5"), F.col(id_col).alias("first_id"))
+    commit(store_path, fps.write.parquet)
     return batch.drop("__fp")
 
 
@@ -1433,16 +1393,14 @@ def incremental_minhash_dedup(
     each arriving batch is near-dup-checked within itself and against
     every document ever seen, without rescanning any corpus text.
 
-    ``batch_id`` (optional) enables the ``incremental_entity_resolution``
-    batch-marker scheme for at-least-once callers (foreachBatch): the
-    history is the strict marker prefix ``batch_id < this`` and the
-    append is skipped when this marker is already in the store, so a
+    ``batch_id`` (optional) makes the call idempotent for at-least-once
+    callers (foreachBatch): its history is the store's versions whose
+    batch id is smaller (unmarked versions count as earliest), and a batch
+    id already committed is a replay that is not appended again, so a
     RETRIED batch recomputes byte-identical survivors (the store prefix
-    it first saw is unchanged — append-only, monotone markers) without
-    growing the store.  Without it, behavior and store schema are
-    unchanged (no marker column).  A marked call against an unmarked
-    legacy store warns RuntimeWarning: replay detection is impossible
-    there.
+    it first saw is unchanged) without growing the store.  Both follow
+    from one listing of the store's versions (``janus_spark/store.py``),
+    not from a Spark job.
 
     Drop rule (deterministic): a new document ``b`` is dropped iff some
     document ``a`` with ``a < b`` — already in the store or in this
@@ -1461,55 +1419,36 @@ def incremental_minhash_dedup(
     (``test_incremental_minhash_dropped_docs_still_block``).
 
     Store layout: one parquet row per (id, band) — ``(id, band, bh,
-    sh)`` with the shingle array carried ONLY on band 0, so one append
+    sh)`` with the shingle array carried ONLY on band 0, so one version
     commits bands and shingles together (no two-file torn state) while
     the wide column is stored once per document.  Size: ``bands`` short
     rows + one shingle array per doc; the store's shingle arrays are read
     only for candidate pairs (see :func:`_dedup_against_store` for the
-    plan).  Restart-safe by construction: state lives in the store
-    files; the append inherits Spark's output-commit protocol (staged
-    task files + rename).
+    plan).  Restart-safe by construction: each batch's rows are one
+    version of an append store (``janus_spark/store.py``), staged and
+    published by one directory rename.
 
     Returns the surviving (never-near-duplicated) rows of ``new_docs``.
     """
-    schema = None
-    if batch_id is None:  # marked mode inspects the store's own columns
-        schema = minhash_store_schema(new_docs, id_col, hash_fn)
-    hist = read_store(new_docs.sparkSession, store_path, schema=schema)
-    append = True
-    if hist is not None and batch_id is not None:
-        if "batch_id" not in hist.columns:
-            import warnings
-
-            warnings.warn(
-                f"minhash store {store_path} predates the batch-marker "
-                "scheme — replay detection is impossible for it; this "
-                "append is NOT idempotent",
-                RuntimeWarning,
-                stacklevel=2,
-            )
-        else:
-            # replay = this marker already committed; history is the
-            # strict marker PREFIX, so a retried batch recomputes its
-            # survivors against exactly the store it first saw
-            # (append-only + monotone markers).  Legacy null markers
-            # sort earliest.
-            append = hist.where(F.col("batch_id") == int(batch_id)).head() is None
-            hist = hist.where(
-                F.coalesce(F.col("batch_id"), F.lit(-1)) < int(batch_id)
-            )
+    only, replay = history(store_path, batch_id)
+    hist = read_store(
+        new_docs.sparkSession,
+        store_path,
+        schema=minhash_store_schema(new_docs, id_col, hash_fn),
+        only=only,
+    )
     signed, stats = _sign_documents(
         new_docs, text_col, num_perm, bands, shingle_k, hash_fn
     )
     return _dedup_against_store(
         signed, stats, new_docs.columns, hist, store_path, id_col,
-        bands, jaccard_threshold, batch_id, append,
+        bands, jaccard_threshold, batch_id, append=not replay,
     )
 
 
 def minhash_store_schema(docs: DataFrame, id_col: str, hash_fn: str) -> str:
-    """DDL of the minhash store's unmarked columns for documents shaped
-    like ``docs`` — what :func:`_dedup_against_store` appends: one row
+    """DDL of the minhash store's columns for documents shaped like
+    ``docs`` — what :func:`_dedup_against_store` appends: one row
     per (id, band), ``bh`` the band key (the raw signature string for the
     md5 family), ``sh`` the shingle set on band 0 only."""
     id_type = docs.schema[id_col].dataType.simpleString()
@@ -1567,7 +1506,8 @@ def _dedup_against_store(
     :func:`_sign_documents` checkpoint: one candidate/verify plan against
     ``hist`` (the store as read, or None), whose survivors (``cols`` of
     ``signed``) are materialized BEFORE the batch's signatures are
-    appended (unless ``append`` is false).
+    committed as the store's next version, marked with ``batch_id``
+    (unless ``append`` is false).
 
     ``drop_seen`` is the replay filter of ``curation_increment``: batch
     documents whose id the store already holds are neither returned nor
@@ -1657,10 +1597,8 @@ def _dedup_against_store(
         sig = batch.selectExpr(
             f"{qident(id_col)} AS id", "posexplode(__bh) AS (band, bh)", "__sh"
         ).selectExpr("id", "band", "bh", "CASE WHEN band = 0 THEN __sh END AS sh")
-        if batch_id is not None:
-            sig = sig.withColumn("batch_id", F.lit(int(batch_id)))
         n_files = max(1, -(-(n_docs * bands) // STORE_APPEND_ROWS))
-        sig.coalesce(n_files).write.mode("append").parquet(store_path)
+        commit(store_path, sig.coalesce(n_files).write.parquet, batch_id)
     return survivors
 
 

@@ -46,7 +46,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from janus_spark.datapipe.dedup import dedup_clusters, read_store
+from janus_spark.datapipe.dedup import dedup_clusters
+from janus_spark.store import commit, history, read_store
 
 __all__ = [
     "block_candidates",
@@ -432,15 +433,16 @@ def incremental_entity_resolution(
     that's entity merge, inherent to linkage, and why the return value
     is the full current assignment, not just the batch's.
 
-    Store layout: one parquet dir, one row kind per record
-    (``kind='rec'``: id + blocking keys + payload), per edge
-    (``kind='edge'``: a, b — typed as the id column itself), and, when
-    ``batch_marker`` is given, ONE ``kind='batch'`` marker row carrying
-    the micro-batch id — a single append commits a batch's records,
-    edges, and marker together (no two-file torn state), inheriting
-    Spark's staged-file output commit.  The marker is what makes the
-    streaming sink's retries idempotent (see
-    :func:`entity_resolution_sink`).
+    Store layout: an append store of ``janus_spark/store.py``, one
+    version per batch holding one row kind per record (``kind='rec'``:
+    id + blocking keys + payload) and per edge (``kind='edge'``: a, b —
+    typed as the id column itself); a batch's records and edges become
+    visible together in one directory rename (no two-file torn state).
+    ``batch_marker`` is the micro-batch id the version carries: the
+    history is then the versions whose id is smaller, and an id already
+    committed is a replay, which recomputes the assignment it first
+    published and commits nothing.  That is what makes the streaming
+    sink's retries idempotent (see :func:`entity_resolution_sink`).
 
     ``max_block_size`` is deliberately NOT offered here: a cap evaluated
     per batch against a growing block admits early pairs a single-shot
@@ -458,24 +460,18 @@ def incremental_entity_resolution(
         )
     )
     # Distinct token sets once per record (the resolve_entities
-    # discipline — scoring below passes tokens_distinct=True).  Applied
-    # on BOTH the arriving batch and the store read, so a store written
-    # by an older version (raw duplicate tokens) still satisfies the
-    # already-distinct guarantee; scores are identical either way
-    # (Jaccard is a set measure, array_distinct is idempotent).
+    # discipline — scoring below passes tokens_distinct=True).  The store
+    # holds these rows, so its records are already distinct too.
     new = (
         new_recs.select(*keep)
         .withColumn(token_col, F.array_distinct(F.col(token_col)))
         .localCheckpoint(eager=True)
     )
     id_type = new.schema[id_col].dataType
-    hist = read_store(spark, store_path, merge_schema=True)
+    only, replay = history(store_path, batch_marker)
+    hist = read_store(spark, store_path, only=only)
     if hist is not None:
-        old_recs = (
-            hist.where(F.col("kind") == "rec")
-            .select(*keep)
-            .withColumn(token_col, F.array_distinct(F.col(token_col)))
-        )
+        old_recs = hist.where(F.col("kind") == "rec").select(*keep)
         old_edges = hist.where(F.col("kind") == "edge").select("a", "b")
     else:
         old_recs = old_edges = None
@@ -520,37 +516,27 @@ def incremental_entity_resolution(
         id_col,
         numeric_col,
         canonical_order,
-    ).localCheckpoint(eager=True)  # compute fully BEFORE the append below
+    ).localCheckpoint(eager=True)  # compute fully BEFORE the commit below
 
-    # one append commits this batch's records, edges, and (from the
-    # streaming sink) its committed-batch marker together.  Edge columns
-    # carry the id column's OWN type — a hardcoded BIGINT cast would turn
-    # string record ids (the record-linkage norm) into silent nulls.
+    if replay:
+        return out
+    # one commit publishes this batch's records and edges together.  Edge
+    # columns carry the id column's OWN type — a hardcoded BIGINT cast
+    # would turn string record ids (the record-linkage norm) into silent
+    # nulls.
     rec_rows = new.select(
         F.lit("rec").alias("kind"),
         *keep,
         F.lit(None).cast(id_type).alias("a"),
         F.lit(None).cast(id_type).alias("b"),
-        F.lit(None).cast("long").alias("batch_id"),
     )
     edge_rows = new_edges.select(
         F.lit("edge").alias("kind"),
         *[F.lit(None).cast(f.dataType).alias(f.name) for f in new.schema.fields],
         F.col("a").cast(id_type).alias("a"),
         F.col("b").cast(id_type).alias("b"),
-        F.lit(None).cast("long").alias("batch_id"),
     )
-    chunk = rec_rows.unionByName(edge_rows)
-    if batch_marker is not None:
-        marker = spark.range(1).select(
-            F.lit("batch").alias("kind"),
-            *[F.lit(None).cast(f.dataType).alias(f.name) for f in new.schema.fields],
-            F.lit(None).cast(id_type).alias("a"),
-            F.lit(None).cast(id_type).alias("b"),
-            F.lit(int(batch_marker)).cast("long").alias("batch_id"),
-        )
-        chunk = chunk.unionByName(marker)
-    chunk.write.mode("append").parquet(store_path)
+    commit(store_path, rec_rows.unionByName(edge_rows).write.parquet, batch_marker)
     return out
 
 
@@ -640,48 +626,17 @@ def _sink_step(
     **resolve_kw,
 ) -> None:
     """One micro-batch of :func:`entity_resolution_sink`, exposed so the
-    retry path is unit-testable: if ``batch_id`` already has a marker in
-    the store, the batch's rows are NOT re-appended — the step only
-    recomputes and re-publishes the current assignment.
-
-    Legacy-store caveat (ADVICE r7): a store written before the marker
-    scheme has no ``batch_id`` column, so replay detection is impossible
-    there — a re-delivered micro-batch WOULD re-append.  That case now
-    warns loudly (``RuntimeWarning``) instead of silently taking the
-    non-idempotent path; from this batch on the store carries markers
-    again, so the exposure is the legacy prefix only.  To be airtight,
-    backfill once: rewrite the store with a ``batch_id: long`` column
-    (null on existing rows) plus one ``kind='batch'`` marker per
-    already-committed batch id from the checkpoint."""
-    spark = batch_df.sparkSession
-    hist = read_store(spark, store_path, merge_schema=True)
-    replay = False
-    if hist is not None and "batch_id" not in hist.columns:
-        import warnings
-
-        warnings.warn(
-            f"entity_resolution_sink: store at {store_path!r} predates the "
-            "batch-marker scheme (no batch_id column); replay detection is "
-            "DISABLED for this batch — a Structured Streaming re-delivery "
-            "would duplicate rows. Backfill markers to restore idempotency.",
-            RuntimeWarning,
-            stacklevel=2,
-        )
-    if hist is not None and "batch_id" in hist.columns:
-        # bounded collect: one marker row per committed micro-batch
-        committed = {
-            r["batch_id"]
-            for r in hist.where(F.col("kind") == "batch").select("batch_id").collect()
-        }
-        replay = batch_id in committed
+    retry path is unit-testable: the batch is resolved with ``batch_id``
+    as its marker, so a re-delivered batch commits nothing and
+    re-publishes the assignment its first delivery published."""
     out = incremental_entity_resolution(
-        batch_df.limit(0) if replay else batch_df,
+        batch_df,
         store_path,
         id_col,
         token_col,
         blocking,
         threshold,
-        batch_marker=None if replay else batch_id,
+        batch_marker=batch_id,
         **resolve_kw,
     )
     out.write.mode("overwrite").parquet(out_path)
@@ -708,14 +663,14 @@ def entity_resolution_sink(
     everything that arrived — micro-batch boundaries never leak into
     the result.
 
-    Retry idempotency: each committed batch leaves a ``kind='batch'``
-    marker row in the store (written in the SAME append as its records
-    and edges).  If Structured Streaming re-delivers a micro-batch after
-    a failure between the store append and the publish, the marker is
-    already present, so the retry appends nothing — it only recomputes
-    and re-publishes the current assignment.  Without this, a replayed
-    batch would append its rows twice and duplicate every subsequent
-    published assignment.  Returns the started StreamingQuery."""
+    Retry idempotency: each batch's store version carries its batch id
+    (committed in the SAME rename as its records and edges).  If
+    Structured Streaming re-delivers a micro-batch after a failure
+    between the store commit and the publish, the id is already
+    committed, so the retry commits nothing — it only recomputes and
+    re-publishes the assignment.  Without this, a replayed batch would
+    append its rows twice and duplicate every subsequent published
+    assignment.  Returns the started StreamingQuery."""
 
     def _step(batch_df: DataFrame, batch_id: int) -> None:
         _sink_step(

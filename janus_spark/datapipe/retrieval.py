@@ -21,14 +21,11 @@ Scale notes (100 TB corpus):
 
 from __future__ import annotations
 
-import os
-import re
-import shutil
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from janus_spark.datapipe.text import clean_tokens
+from janus_spark.store import Snapshots, commit
 
 
 def bm25_topk(
@@ -182,7 +179,7 @@ def rrf_fuse(
     )
 
 
-class IncrementalBM25Index:
+class IncrementalBM25Index(Snapshots):
     """Maintained inverted index for BM25 — the persistent-state form of
     :func:`bm25_topk`: instead of re-tokenizing the corpus per run
     (recompute-the-world at 100 TB), ``update()`` folds each new
@@ -195,11 +192,12 @@ class IncrementalBM25Index:
 
     Reference parity: the reference re-materializes history per refresh
     (src/execution/historical_executor.rs); this is the Spark-first
-    maintained alternative, same staged-rename commit discipline as
-    `operators/incremental.py::IncrementalAgg`.
+    maintained alternative, a snapshot store of ``janus_spark/store.py``
+    like `operators/incremental.py::IncrementalAgg`.
 
-    Versioned layout (crash-safe: dot-prefixed staging dir, one atomic
-    directory rename to commit; readers never see a torn version)::
+    Versioned layout (crash-safe: each version is written to a staging
+    directory and published by one atomic rename; readers never see a
+    torn version)::
 
         <path>/v=<N>/postings/  (t, id, tf)
         <path>/v=<N>/doclen/    (id, dl)
@@ -227,37 +225,10 @@ class IncrementalBM25Index:
         self.id_col = id_col
         self.text_col = text_col
 
-    # -- version bookkeeping (same scheme as IncrementalAgg) ---------------
-    def current_version(self) -> int:
-        if not os.path.isdir(self.path):
-            return 0
-        vs = [
-            int(m.group(1))
-            for d in os.listdir(self.path)
-            if (m := re.fullmatch(r"v=(\d+)", d))
-        ]
-        return max(vs, default=0)
-
-    def _vdir(self, v: int) -> str:
-        return f"{self.path}/v={v}"
-
-    def vacuum_versions(self, keep: int = 1) -> int:
-        cur = self.current_version()
-        removed = 0
-        for d in os.listdir(self.path) if os.path.isdir(self.path) else []:
-            if (m := re.fullmatch(r"v=(\d+)", d)) and int(m.group(1)) <= cur - keep:
-                shutil.rmtree(os.path.join(self.path, d), ignore_errors=True)
-                removed += 1
-            elif d.startswith(".staging-v="):
-                shutil.rmtree(os.path.join(self.path, d), ignore_errors=True)
-        return removed
-
     # -- maintenance -------------------------------------------------------
     def update(self, batch: DataFrame, skip_existing: bool = False) -> int:
         """Fold one document batch into the index; returns new version."""
-        cur, nxt = self.current_version(), self.current_version() + 1
-        stage = f"{self.path}/.staging-v={nxt}"
-        shutil.rmtree(stage, ignore_errors=True)
+        cur = self.current_version()
         docs = batch.select(
             F.col(self.id_col).alias("id"),
             clean_tokens(self.text_col).alias("__toks"),
@@ -296,14 +267,14 @@ class IncrementalBM25Index:
                     F.sum("total_len").cast("long").alias("total_len"),
                 )
             )
-        tf_b.write.mode("overwrite").parquet(f"{stage}/postings")
-        dl_b.write.mode("overwrite").parquet(f"{stage}/doclen")
-        df_b.write.mode("overwrite").parquet(f"{stage}/df")
-        st_b.coalesce(1).write.mode("overwrite").parquet(f"{stage}/stats")
-        final = self._vdir(nxt)
-        shutil.rmtree(final, ignore_errors=True)
-        os.rename(stage, final)
-        return nxt
+
+        def write(stage: str) -> None:
+            tf_b.write.parquet(f"{stage}/postings")
+            dl_b.write.parquet(f"{stage}/doclen")
+            df_b.write.parquet(f"{stage}/df")
+            st_b.coalesce(1).write.parquet(f"{stage}/stats")
+
+        return commit(self.path, write)
 
     # -- query -------------------------------------------------------------
     def query(

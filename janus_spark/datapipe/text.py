@@ -43,17 +43,6 @@ def token_count(col: Column) -> Column:
     return F.when(F.trim(col) == "", F.lit(0)).otherwise(F.size(tokens(col)))
 
 
-def word_token_count(col: Column) -> Column:
-    """BPE-ish token estimate: count of letter-runs, digit-runs and
-    individual punctuation marks (a cheap proxy for subword tokenizers)."""
-    return F.size(
-        F.filter(
-            F.split(F.lower(col), r"(?=[^a-z0-9])|(?<=[^a-z0-9])"),
-            lambda t: F.trim(t) != "",
-        )
-    )
-
-
 def quality_features(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Per-document quality signals: length, token count, punctuation
     ratio, stopword ratio, mean token length, and a composite score."""

@@ -15,7 +15,6 @@ else a plain string.  The same tests are cheap Column expressions here.
 from __future__ import annotations
 
 from pyspark.sql import Column
-from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
 # The single fixed schema of the engine's core table.
@@ -42,24 +41,3 @@ BASELINE_NS = "https://janus.rs/baseline#"
 def is_iri(col: Column) -> Column:
     """True when the term is an IRI by the reference's prefix test."""
     return col.startswith("http://") | col.startswith("https://") | col.startswith("urn:")
-
-
-def term_num(col: Column) -> Column:
-    """Numeric view of a term; null when not float-parsable.
-
-    Mirrors the reference's parse-as-f64 typing (SURVEY §1.3): any
-    float-parsable lexical value is numeric.  ``try_cast`` yields null on
-    non-numeric strings (even under Spark 4's default ANSI mode), and null
-    propagates to drop rows in FILTER — exactly the reference's
-    error-row-dropped semantics.
-    """
-    return col.try_cast("double")
-
-
-def strip_term(col: Column) -> Column:
-    """Normalize an RDF term string: strip <>, quotes, datatype/lang tags.
-
-    Mirrors baseline normalization at reference src/api/janus_api.rs:794-841.
-    """
-    c = F.regexp_replace(col, r'^"(.*)"(\^\^<[^>]*>|@[A-Za-z-]+)?$', r"$1")
-    return F.regexp_replace(c, r"^<(.*)>$", r"$1")

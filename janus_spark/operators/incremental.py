@@ -18,26 +18,24 @@ Versioned layout (no in-place mutation, readers never see a torn write):
     <path>/v=<N>/aggs/   (group..., n, sum_cents, min_v, max_v)
     <path>/v=<N>/hll/    (group..., reg, max_rank)
 
-``update()`` writes v=N+1 from v=N ∪ partial(batch); ``current_version``
-is discovered by listing.  Old versions are retained for time travel
-until ``vacuum_versions()``.
+``update()`` commits v=N+1 from v=N ∪ partial(batch) through the
+snapshot-store protocol of ``janus_spark/store.py`` (staging directory,
+one atomic rename).  Old versions are retained for time travel until
+``vacuum_versions()``.
 """
 
 from __future__ import annotations
-
-import os
-import re
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from janus_spark.functions.sketches import hll_det_estimate, hll_det_partials
+from janus_spark.store import Snapshots, commit
 
 _D38 = "decimal(38,0)"
 
 
-class IncrementalAgg:
+class IncrementalAgg(Snapshots):
     """Maintained rollup of COUNT / SUM / MIN / MAX (+ optional det-HLL
     approx-distinct) per group over an append-only stream of batches.
 
@@ -61,33 +59,6 @@ class IncrementalAgg:
         self.value_col = value_col
         self.distinct_col = distinct_col
         self.p = p
-
-    # -- version bookkeeping ------------------------------------------------
-    def current_version(self) -> int:
-        if not os.path.isdir(self.path):
-            return 0
-        vs = [
-            int(m.group(1))
-            for d in os.listdir(self.path)
-            if (m := re.fullmatch(r"v=(\d+)", d))
-        ]
-        return max(vs, default=0)
-
-    def _vdir(self, v: int) -> str:
-        return f"{self.path}/v={v}"
-
-    def vacuum_versions(self, keep: int = 1) -> int:
-        """Drop all but the newest ``keep`` versions (plus any abandoned
-        staging directories from crashed updates); returns #removed."""
-        cur = self.current_version()
-        removed = 0
-        for d in os.listdir(self.path) if os.path.isdir(self.path) else []:
-            if (m := re.fullmatch(r"v=(\d+)", d)) and int(m.group(1)) <= cur - keep:
-                shutil.rmtree(os.path.join(self.path, d), ignore_errors=True)
-                removed += 1
-            elif d.startswith(".staging-v="):
-                shutil.rmtree(os.path.join(self.path, d), ignore_errors=True)
-        return removed
 
     # -- core algebra -------------------------------------------------------
     def _partial(self, batch: DataFrame) -> DataFrame:
@@ -118,35 +89,29 @@ class IncrementalAgg:
     def update(self, batch: DataFrame) -> int:
         """Fold one batch into the rollup; returns the new version.
 
-        Crash-safe commit: every leg of v=N+1 is written to a
-        dot-prefixed staging directory (invisible to
-        ``current_version()``'s ``v=<N>`` listing) and renamed into
-        place LAST — one atomic directory rename, so a reader racing an
-        in-flight write never sees a half-written version and a failure
-        between the aggs and hll writes leaves only ignorable staging
-        garbage (cleaned by the next update/vacuum), never a version
-        whose ``read()`` throws."""
-        cur, nxt = self.current_version(), self.current_version() + 1
-        stage = f"{self.path}/.staging-v={nxt}"
-        shutil.rmtree(stage, ignore_errors=True)
-        aggs = self._partial(batch)
-        if cur:
-            aggs = self._merge(self.spark.read.parquet(f"{self._vdir(cur)}/aggs"), aggs)
-        aggs.coalesce(1).write.mode("overwrite").parquet(f"{stage}/aggs")
-        if self.distinct_col is not None:
-            hll = hll_det_partials(batch, self.distinct_col, self.group_cols, self.p)
+        Crash-safe: both legs of v=N+1 are written to the staging
+        directory and published by one rename (``store.commit``), so a
+        failure between the aggs and hll writes leaves only ignorable
+        staging garbage, never a version whose ``read()`` throws."""
+        cur = self.current_version()
+
+        def write(stage: str) -> None:
+            aggs = self._partial(batch)
             if cur:
-                hll = (
-                    self.spark.read.parquet(f"{self._vdir(cur)}/hll")
-                    .unionByName(hll)
-                    .groupBy(*self.group_cols, "reg")
-                    .agg(F.max("max_rank").alias("max_rank"))
-                )
-            hll.coalesce(1).write.mode("overwrite").parquet(f"{stage}/hll")
-        final = self._vdir(nxt)
-        shutil.rmtree(final, ignore_errors=True)  # torn dir from a pre-fix crash
-        os.rename(stage, final)
-        return nxt
+                aggs = self._merge(self.spark.read.parquet(f"{self._vdir(cur)}/aggs"), aggs)
+            aggs.coalesce(1).write.parquet(f"{stage}/aggs")
+            if self.distinct_col is not None:
+                hll = hll_det_partials(batch, self.distinct_col, self.group_cols, self.p)
+                if cur:
+                    hll = (
+                        self.spark.read.parquet(f"{self._vdir(cur)}/hll")
+                        .unionByName(hll)
+                        .groupBy(*self.group_cols, "reg")
+                        .agg(F.max("max_rank").alias("max_rank"))
+                    )
+                hll.coalesce(1).write.parquet(f"{stage}/hll")
+
+        return commit(self.path, write)
 
     def read(self, version: int | None = None) -> DataFrame:
         """Finalized aggregates at a version (default: newest): group
@@ -170,83 +135,3 @@ class IncrementalAgg:
             )
             out = out.join(est, self.group_cols)
         return out
-
-
-class IncrementalJoin:
-    """Incrementally-maintained INNER equi-join — delta-join view
-    maintenance: with accumulated sides A, B and new batches ΔA, ΔB,
-
-        ΔJ = ΔA ⋈ B  ∪  A ⋈ ΔB  ∪  ΔA ⋈ ΔB
-
-    so a refresh touches ``O(|Δ|·selectivity)`` join work instead of
-    recomputing A ⋈ B from scratch — the materialized-join companion to
-    :class:`IncrementalAgg` (same versioned layout, same crash-safe
-    staging-rename commit; readers never see a torn version).
-
-    Versioned layout::
-
-        <path>/v=<N>/a/   accumulated left side
-        <path>/v=<N>/b/   accumulated right side
-        <path>/v=<N>/j/   materialized join result
-
-    Scale notes: the delta joins shuffle only the delta plus the matched
-    keys of the base (broadcast the delta when small — AQE decides); the
-    base sides are re-written per version here for time-travel symmetry
-    with IncrementalAgg — a production deployment appends partitions
-    instead (the join algebra is unchanged).  Non-key column names must
-    be disjoint across sides (validated).
-    """
-
-    def __init__(self, spark: SparkSession, path: str, on: list[str]):
-        self.spark = spark
-        self.path = path
-        self.on = list(on)
-
-    # shares the version bookkeeping contract with IncrementalAgg
-    current_version = IncrementalAgg.current_version
-    _vdir = IncrementalAgg._vdir
-    vacuum_versions = IncrementalAgg.vacuum_versions
-
-    def _empty_like(self, df: DataFrame) -> DataFrame:
-        return self.spark.createDataFrame([], df.schema)
-
-    def update(
-        self, delta_a: DataFrame | None = None, delta_b: DataFrame | None = None
-    ) -> int:
-        """Fold one batch into the join; returns the new version."""
-        cur, nxt = self.current_version(), self.current_version() + 1
-        if cur:
-            a0 = self.spark.read.parquet(f"{self._vdir(cur)}/a")
-            b0 = self.spark.read.parquet(f"{self._vdir(cur)}/b")
-        else:
-            if delta_a is None or delta_b is None:
-                raise ValueError("first update must supply both sides")
-            a0, b0 = self._empty_like(delta_a), self._empty_like(delta_b)
-        da = delta_a if delta_a is not None else self._empty_like(a0)
-        db = delta_b if delta_b is not None else self._empty_like(b0)
-        overlap = (set(a0.columns) & set(b0.columns)) - set(self.on)
-        if overlap:
-            raise ValueError(f"non-key columns overlap: {sorted(overlap)}")
-        dj = (
-            da.join(b0, self.on)
-            .unionByName(a0.join(db, self.on))
-            .unionByName(da.join(db, self.on))
-        )
-        stage = f"{self.path}/.staging-v={nxt}"
-        shutil.rmtree(stage, ignore_errors=True)
-        a0.unionByName(da).write.mode("overwrite").parquet(f"{stage}/a")
-        b0.unionByName(db).write.mode("overwrite").parquet(f"{stage}/b")
-        if cur:
-            j = self.spark.read.parquet(f"{self._vdir(cur)}/j").unionByName(dj)
-        else:
-            j = dj
-        j.write.mode("overwrite").parquet(f"{stage}/j")
-        final = self._vdir(nxt)
-        shutil.rmtree(final, ignore_errors=True)
-        os.rename(stage, final)
-        return nxt
-
-    def read(self, version: int | None = None) -> DataFrame:
-        """The materialized join at a version (default newest)."""
-        v = version or self.current_version()
-        return self.spark.read.parquet(f"{self._vdir(v)}/j")

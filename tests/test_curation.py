@@ -248,29 +248,6 @@ def test_curation_sink_equals_increments(spark, tmp_path, inc_setup):
     assert got == _ids(surv0) | _ids(surv1)
 
 
-def test_incremental_minhash_legacy_store_warns(spark, tmp_path):
-    """A batch-marked call against a store written without markers must
-    say loudly that replay detection is impossible (RuntimeWarning),
-    not silently take the non-idempotent path."""
-    import warnings
-
-    from janus_spark.datapipe.dedup import incremental_minhash_dedup
-
-    store = str(tmp_path / "legacy_store")
-    d1 = spark.createDataFrame(
-        [(1, "alpha beta gamma delta epsilon")], "doc_id long, text string"
-    )
-    incremental_minhash_dedup(d1, store, hash_fn="md5").count()  # unmarked
-    d2 = spark.createDataFrame(
-        [(2, "zeta eta theta iota kappa")], "doc_id long, text string"
-    )
-    with warnings.catch_warnings(record=True) as caught:
-        warnings.simplefilter("always")
-        incremental_minhash_dedup(d2, store, hash_fn="md5", batch_id=7).count()
-    msgs = [w for w in caught if issubclass(w.category, RuntimeWarning)]
-    assert any("batch-marker" in str(w.message) for w in msgs)
-
-
 def test_select_model_increment_equals_frozen_batch(spark, tmp_path):
     """The frozen-DSIR selection stage preserves the incrementality
     theorem: selection is per-document and applied AFTER the store
@@ -461,6 +438,7 @@ def test_increment_job_budget_and_contracts(spark, tmp_path, inc_setup):
     import shutil
 
     from janus_spark.datapipe.curation import curation_increment
+    from janus_spark.store import read_store
 
     docs, boot, arr, _, model, _, surv1 = inc_setup
     store = str(tmp_path / "store")
@@ -481,7 +459,7 @@ def test_increment_job_budget_and_contracts(spark, tmp_path, inc_setup):
     assert dag.numTotalJobs() - before <= 12
     assert scanned.value == len(rows)
 
-    st = spark.read.parquet(store)
+    st = read_store(spark, store)
     assert st.schema.simpleString() == (
         "struct<id:bigint,band:int,bh:string,sh:array<string>>"
     )

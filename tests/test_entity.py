@@ -316,11 +316,11 @@ def test_incremental_string_ids_roundtrip(spark, tmp_path):
 
 def test_store_read_error_is_not_swallowed(spark, tmp_path):
     """A corrupt store must RAISE, not silently reset history (ADVICE r6:
-    any-exception fallback published wrong assignments).  Only
-    path-missing means 'fresh store'."""
+    any-exception fallback published wrong assignments).  Only a store
+    with no committed version means 'fresh store'."""
     import pytest
 
-    from janus_spark.datapipe.dedup import read_store
+    from janus_spark.store import read_store
 
     missing = str(tmp_path / "nope")
     assert read_store(spark, missing) is None
@@ -330,29 +330,74 @@ def test_store_read_error_is_not_swallowed(spark, tmp_path):
     assert read_store(spark, str(empty)) is None
 
     corrupt = tmp_path / "corrupt"
-    corrupt.mkdir()
-    (corrupt / "part-00000.parquet").write_bytes(b"this is not parquet")
+    (corrupt / "v=1").mkdir(parents=True)
+    (corrupt / "v=1" / "part-00000.parquet").write_bytes(b"this is not parquet")
     with pytest.raises(Exception):
         # schema inference hits the garbage footer and must propagate
-        df = read_store(spark, str(corrupt), merge_schema=True)
+        df = read_store(spark, str(corrupt))
         assert df is not None
         df.collect()
+
+
+def _no_parquet_reads(monkeypatch):
+    from pyspark.sql import DataFrameReader
+
+    def no_read(self, *paths, **kw):
+        raise AssertionError(f"read attempted: {paths}")
+
+    monkeypatch.setattr(DataFrameReader, "parquet", no_read)
 
 
 def test_missing_store_is_not_read(spark, tmp_path, monkeypatch):
     """A missing store path is answered by a filesystem check, not by a
     failed read: a failed read is also reported to the session's query
     listeners, which log it as an ERROR once an Observation has run."""
-    from pyspark.sql import DataFrameReader
+    from janus_spark.store import read_store
 
-    from janus_spark.datapipe.dedup import read_store
-
-    def no_read(self, *paths, **kw):
-        raise AssertionError(f"read attempted: {paths}")
-
-    monkeypatch.setattr(DataFrameReader, "parquet", no_read)
+    _no_parquet_reads(monkeypatch)
     assert read_store(spark, str(tmp_path / "nope")) is None
     assert read_store(spark, str(tmp_path / "nope"), schema="fp_md5 string") is None
+
+
+def test_empty_store_dir_is_not_read(spark, tmp_path, monkeypatch):
+    """An existing store directory with no committed version — empty, or
+    holding only the staging leftover of a crashed commit — is a fresh
+    store, answered by the version listing: a schema-inference read of it
+    would fail with UNABLE_TO_INFER_SCHEMA and log a listener ERROR."""
+    from janus_spark.store import read_store
+
+    empty = tmp_path / "empty"
+    empty.mkdir()
+    crashed = tmp_path / "crashed"
+    (crashed / ".staging-v=1").mkdir(parents=True)
+    (crashed / ".staging-v=1" / "_batch-3").write_bytes(b"")
+    _no_parquet_reads(monkeypatch)
+    for store in (empty, crashed):
+        assert read_store(spark, str(store)) is None
+        assert read_store(spark, str(store), schema="fp_md5 string") is None
+
+
+def test_empty_store_dir_resolves_without_read(spark, tmp_path, monkeypatch):
+    """The entity store's first batch in a pre-created directory (the
+    q_entity_incremental fixture) reads nothing from it."""
+    from pyspark.sql import DataFrameReader
+
+    from janus_spark.datapipe.entity import incremental_entity_resolution
+
+    store = tmp_path / "store"
+    store.mkdir()
+    batch = _recs(spark, [(1, ["x", "y"], "k", 2.0), (2, ["x", "y"], "k", 9.0)])
+    real = DataFrameReader.parquet
+
+    def guarded(self, *paths, **kw):
+        assert str(store) not in paths, f"store read attempted: {paths}"
+        return real(self, *paths, **kw)
+
+    monkeypatch.setattr(DataFrameReader, "parquet", guarded)
+    out = incremental_entity_resolution(
+        batch, str(store), "id", "toks", [["blk"]], 0.5, numeric_col="val"
+    )
+    assert {r["id"]: r["entity_id"] for r in out.collect()} == {1: 1, 2: 1}
 
 
 def test_sink_step_retry_is_idempotent(spark, tmp_path):
@@ -381,53 +426,6 @@ def test_sink_step_retry_is_idempotent(spark, tmp_path):
     assert spark.read.parquet(store).count() > n_store
     got = {r["id"]: r["entity_id"] for r in spark.read.parquet(out_path).collect()}
     assert got == {1: 1, 2: 1, 3: 1}
-
-
-def test_sink_step_legacy_store_warns(spark, tmp_path):
-    """ADVICE r7: a store written before the batch-marker scheme has no
-    batch_id column — replay detection is impossible there, and the sink
-    must say so loudly (RuntimeWarning) rather than silently taking the
-    non-idempotent path."""
-    import warnings
-
-    from janus_spark.datapipe.entity import _sink_step, incremental_entity_resolution
-
-    store = str(tmp_path / "store_legacy")
-    out_path = str(tmp_path / "out_legacy")
-    seed = _recs(spark, [(1, ["x", "y"], "k", 2.0)])
-    # legacy store: write through the incremental API with no marker,
-    # then strip the batch_id column as a pre-marker-era store would be
-    incremental_entity_resolution(
-        seed, store, "id", "toks", [["blk"]], 0.5, numeric_col="val"
-    ).count()
-    legacy = spark.read.parquet(store).drop("batch_id")
-    legacy_dir = str(tmp_path / "store_legacy2")
-    legacy.write.parquet(legacy_dir)
-
-    batch = _recs(spark, [(2, ["x", "y"], "k", 9.0)])
-    with warnings.catch_warnings(record=True) as caught:
-        warnings.simplefilter("always")
-        _sink_step(
-            batch, 7, legacy_dir, out_path, "id", "toks", [["blk"]], 0.5,
-            numeric_col="val",
-        )
-    msgs = [w for w in caught if issubclass(w.category, RuntimeWarning)]
-    assert any("predates the batch-marker scheme" in str(w.message) for w in msgs)
-    # the batch still lands and carries a marker, so the NEXT delivery of
-    # the same id is detected as a replay (no warning, no growth)
-    n_store = spark.read.parquet(legacy_dir).count()
-    with warnings.catch_warnings(record=True) as caught2:
-        warnings.simplefilter("always")
-        _sink_step(
-            batch, 7, legacy_dir, out_path, "id", "toks", [["blk"]], 0.5,
-            numeric_col="val",
-        )
-    assert not any(
-        issubclass(w.category, RuntimeWarning)
-        and "predates" in str(w.message)
-        for w in caught2
-    )
-    assert spark.read.parquet(legacy_dir).count() == n_store
 
 
 def test_score_pairs_tokens_distinct_identical(spark):

@@ -1,10 +1,13 @@
 """Registry gates whose fixture is generated in code (``sf_dir`` unused)
-and the incremental-store gates (over the sf0.001 documents) checked
+and the incremental-store gates (over the sf0.001 tables) checked
 against their DuckDB oracles, plus a guard that every gate's temp-dir /
 file-stream / memory-sink plumbing goes through the three helpers in
 ``janus_spark/queries.py``."""
 
+import ast
 import inspect
+import os
+from pathlib import Path
 
 import pytest
 
@@ -47,13 +50,27 @@ def test_self_contained_gate_matches_oracle(spark, name):
     )
 
 
-# gates that read, extend and dedup against a persistent MinHash store
+# gates that read and extend a persistent incremental store
 STORE_GATES = [
     "q_curation_increment",
     "q_curation_increment_select",
     "q_dedup_incremental_minhash",
     "q_live_curation",
+    "q_bm25_incremental",
+    "q_incremental_agg",
+    "q_entity_incremental",
+    "q_live_entity_resolution",
 ]
+
+
+def _check_correctness_tables() -> list[str]:
+    """The ``TABLES`` list of ``scripts/check_correctness.py``, read from
+    its source: importing the script would parse this process's argv."""
+    src = (Path(__file__).parents[1] / "scripts" / "check_correctness.py").read_text()
+    for node in ast.parse(src).body:
+        if isinstance(node, ast.Assign) and getattr(node.targets[0], "id", "") == "TABLES":
+            return node.value.func.value.value.split()
+    raise AssertionError("TABLES not found in scripts/check_correctness.py")
 
 
 def _assert_oracle_match(spark, name, sf_dir, con):
@@ -69,15 +86,15 @@ def _assert_oracle_match(spark, name, sf_dir, con):
 
 @pytest.mark.parametrize("name", STORE_GATES)
 def test_store_gate_matches_oracle(spark, sf_dir, name):
-    """The same order-free compare over the sf0.001 documents, with the
-    DuckDB view built as ``scripts/check_correctness.py`` builds it."""
+    """The same order-free compare over the sf0.001 tables, with the
+    DuckDB views built as ``scripts/check_correctness.py`` builds them."""
     import duckdb
 
     con = duckdb.connect()
-    con.execute(
-        "CREATE VIEW documents AS SELECT * FROM "
-        f"read_parquet('{sf_dir}/documents.parquet')"
-    )
+    for t in _check_correctness_tables():
+        p = f"{sf_dir}/{t}.parquet"
+        if os.path.exists(p):
+            con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
     _assert_oracle_match(spark, name, sf_dir, con)
 
 
