@@ -17,6 +17,7 @@ into ONE shuffle-efficient distributed plan over all windows at once.
 
 from __future__ import annotations
 
+from collections.abc import Callable
 from dataclasses import dataclass, field
 
 from pyspark.sql import Column, DataFrame
@@ -118,6 +119,11 @@ class SparqlCompiler:
     # smallest intermediate drives the join chain — the missing
     # "selectivity notion" the heuristic alone cannot have.
     predicate_stats: dict = field(default_factory=dict)
+    # returns a frame of every partition_cols value to evaluate; called
+    # only when a global aggregate (no GROUP BY) needs it.  A partition
+    # without solutions then still gets the one row such an aggregate
+    # yields over no solutions; without a domain it yields no row.
+    partition_domain: Callable[[], DataFrame] | None = None
 
     # ------------------------------------------------------------ entry
     def compile(self, q) -> DataFrame:
@@ -736,7 +742,22 @@ class SparqlCompiler:
         aggs = [compile_aggregate(call, self.registry).alias(name) for call, name in agg_calls.items()]
         if not aggs:
             aggs = [F.count(F.lit(1)).alias("__agg_dummy")]
-        df = df.groupBy(*all_group).agg(*aggs) if all_group else df.agg(*aggs)
+        if not all_group:
+            df = df.agg(*aggs)
+        elif group_cols or self.partition_domain is None:
+            df = df.groupBy(*all_group).agg(*aggs)
+        else:
+            # global aggregate per partition: a domain partition without
+            # solutions takes the row of the aggregate over no solutions
+            pc = self.partition_cols
+            hit = df.groupBy(*pc).agg(*aggs, F.lit(True).alias("__hit"))
+            empty = df.where(F.lit(False)).agg(*aggs)
+            names = empty.columns
+            empty = empty.select(*[F.col(n).alias(f"__empty{n}") for n in names])
+            df = self.partition_domain().join(hit, on=pc, how="left").crossJoin(empty).select(
+                *pc,
+                *[F.when(F.col("__hit"), F.col(n)).otherwise(F.col(f"__empty{n}")).alias(n) for n in names],
+            )
 
         if having is not None:
             df = df.filter(compile_expr(having, "bool", self.registry, agg_map=agg_calls))
@@ -769,6 +790,7 @@ def compile_sparql(
     reorder_bgp: bool = True,
     path_max_hops: int | None = None,
     predicate_stats: dict | None = None,
+    partition_domain: Callable[[], DataFrame] | None = None,
 ) -> DataFrame:
     return SparqlCompiler(
         quads,
@@ -779,4 +801,5 @@ def compile_sparql(
         reorder_bgp=reorder_bgp,
         path_max_hops=path_max_hops,
         predicate_stats=predicate_stats or {},
+        partition_domain=partition_domain,
     ).compile(q)

@@ -228,11 +228,17 @@ def sliding_window_bounds(now: int, offset_ms: int, range_ms: int, step_ms: int)
     return out
 
 
+def _bounds_frame(spark, bounds: list[tuple[int, int, int]]) -> DataFrame:
+    """The (window id, start, end) table of ``sliding_window_bounds``."""
+    return spark.createDataFrame(
+        bounds, schema=f"{WINDOW_ID} long, {WINDOW_START} long, {WINDOW_END} long"
+    )
+
+
 def assign_sliding_windows(quads: DataFrame, bounds: list[tuple[int, int, int]]) -> DataFrame:
     """Tag each quad with every window it belongs to via a broadcast
     range-join (window table is tiny — tens of rows)."""
-    spark = quads.sparkSession
-    bdf = spark.createDataFrame(bounds, schema=f"{WINDOW_ID} long, {WINDOW_START} long, {WINDOW_END} long")
+    bdf = _bounds_frame(quads.sparkSession, bounds)
     lo = min(b[1] for b in bounds)
     hi = max(b[2] for b in bounds)
     pruned = quads.where(F.col("ts").between(F.lit(lo), F.lit(hi)))
@@ -316,10 +322,7 @@ def run_historical_sliding(
         result = _run_sliding_panes(
             query, quads, now, offset_ms, range_ms, step_ms, registry, spec
         )
-        spark = quads.sparkSession
-        bdf = spark.createDataFrame(
-            bounds, schema=f"{WINDOW_ID} long, {WINDOW_START} long, {WINDOW_END} long"
-        )
+        bdf = _bounds_frame(quads.sparkSession, bounds)
         return result.join(F.broadcast(bdf), on=WINDOW_ID, how="inner").drop(WINDOW_ID)
     if use_panes:
         raise ValueError("query is not pane-decomposable (use_panes=True)")
@@ -353,8 +356,7 @@ def run_historical_sliding(
         path_max_hops=path_max_hops,
         predicate_stats=predicate_stats,
     )
-    spark = quads.sparkSession
-    bdf = spark.createDataFrame(bounds, schema=f"{WINDOW_ID} long, {WINDOW_START} long, {WINDOW_END} long")
+    bdf = _bounds_frame(quads.sparkSession, bounds)
     return result.join(F.broadcast(bdf), on=WINDOW_ID, how="inner").drop(WINDOW_ID)
 
 

@@ -14,6 +14,7 @@ from __future__ import annotations
 
 import shutil
 import tempfile
+import threading
 import uuid
 from collections.abc import Callable, Iterator, Sequence
 from contextlib import contextmanager
@@ -33,12 +34,17 @@ from janus_spark.sources.melt import melt_events, melt_table, read_events
 # this each call re-issues hundreds of Py4J column-expression calls for
 # the union-of-projections melt (~1s of pure driver time per query).
 _FRAME_CACHE: dict[tuple, object] = {}
+# held across the build, so concurrent callers (Flask threads, two
+# foreachBatch streams) build each key exactly once; re-entrant because
+# a build may look up another cached frame
+_FRAME_LOCK = threading.RLock()
 
 
 def _cached(key: tuple, build):
-    if key not in _FRAME_CACHE:
-        _FRAME_CACHE[key] = build()
-    return _FRAME_CACHE[key]
+    with _FRAME_LOCK:
+        if key not in _FRAME_CACHE:
+            _FRAME_CACHE[key] = build()
+        return _FRAME_CACHE[key]
 
 
 def _await_stream(q, timeout_s: int) -> None:

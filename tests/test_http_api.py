@@ -186,6 +186,7 @@ def test_hybrid_lifecycle_end_to_end(client):
     assert m["status"] == "Running" and m["n_batches"] > 0
     assert m["rows_in"] > 0 and m["windows_fired"] > 0
     assert m["last_batch_wall_ms"] is not None
+    assert m["windows_skipped"] >= 0 and m["rows_late"] >= 0
 
     stopped = client.post(f"/api/queries/{qid}/stop").get_json()
     assert stopped["status"] == "Stopped"

@@ -153,6 +153,14 @@ def test_multi_window_cross_merge(spark, tmp_path):
         (a, 3000, 6000), (a, 4000, 7000), (a, 5000, 8000), (a, 6000, 9000),
         (b, 0, 5000), (b, 2000, 7000), (b, 4000, 9000),
     ]
+    # a of [1000,4000) and [2000,5000) were skipped for good: counted,
+    # and a later batch fires only windows past the last fired end
+    assert runner.metrics["windows_skipped"] == 2
+    runner.close(12000)
+    assert [(b["window"], b["window_start"], b["window_end"]) for b in sink.batches[8:]] == [
+        (a, 7000, 10000), (a, 8000, 11000), (a, 9000, 12000), (b, 6000, 11000),
+    ]
+    assert runner.metrics["windows_skipped"] == 2
     pts = [tuple(q) for q in quads.collect()]
     temp_q = [q for q in pts if q[2] == f"{EX}temperature"]
     hum_q = [q for q in pts if q[2] == f"{EX}humidity"]
@@ -564,6 +572,15 @@ def test_parquet_sink_manifest_and_full_rows(spark, tmp_path):
     m0 = sink.manifests[0]
     got = {r["t"] for r in spark.read.parquet(m0["path"]).collect()}
     assert got == {str(i) for i in range(1, 20)} and m0["n_rows"] == 19
+    # one event at 8100 closes [4000,6000) (ts 4000..4900) and the empty
+    # [6000,8000): its manifest counts 0 rows and its path reads empty
+    runner.on_batch(batch.where("ts = 4900").selectExpr("ts + 3200 AS ts", "subject",
+                                                         "predicate", "object", "graph"), 1)
+    assert [(m["window_start"], m["window_end"], m["n_rows"]) for m in sink.manifests[2:]] == [
+        (4000, 6000, 10), (6000, 8000, 0)
+    ]
+    empty = spark.read.parquet(sink.manifests[3]["path"])
+    assert empty.columns == ["s", "t"] and empty.count() == 0
 
 
 HYBRID_QUERY = f"""
@@ -640,14 +657,14 @@ def test_close_before_any_data_emits_empty_windows(spark, tmp_path):
 
 
 class _ScanSink:
-    """DataFrame sink that keeps the files each fired window's plan scans."""
+    """DataFrame sink that keeps the files each firing batch's plan scans."""
 
     wants_dataframe = True
 
     def __init__(self):
         self.scans = []
 
-    def write(self, window_name, window_start, window_end, result):
+    def write(self, fired, result):
         self.scans.append(result.inputFiles())
 
 
@@ -690,3 +707,147 @@ def test_live_batch_job_count_and_plan(spark, tmp_path):
     (files,) = sink.scans
     assert files and all("/planbuf/" in f for f in files), files
     assert store.path.endswith("/store") and not any("/store/" in f for f in files)
+
+
+QUAD_DDL = "ts long, subject string, predicate string, object string, graph string"
+
+
+def test_late_event_lands_in_next_covering_window(spark, tmp_path):
+    """A late event (ts below the newest fired end) is buffered, counted
+    in ``rows_late`` and seen by the next window that covers it; the
+    windows that fired without it never fire again."""
+    quads = melt_sensor_fixture(spark, 50)
+    runner, sink = make_runner(spark, tmp_path)
+    runner.on_batch(quads.where("ts <= 3100"))  # fires [0,2000) and [1000,3000)
+    assert runner.metrics["rows_late"] == 0
+    late = spark.createDataFrame([(2500, f"{EX}late", f"{EX}temperature", "99", "g")], QUAD_DDL)
+    runner.on_batch(late)  # no window closes
+    assert runner.metrics["rows_late"] == 1
+    runner.on_batch(quads.where("ts > 3100 and ts <= 4100"))  # closes [2000,4000)
+    assert runner.metrics["rows_late"] == 1
+    assert [b["window_end"] for b in sink.batches] == [2000, 3000, 4000]
+    late_rows = [(b["window_end"], r["temp"]) for b in sink.batches for r in b["rows"]
+                 if r["sensor"] == f"{EX}late"]
+    assert late_rows == [(4000, "99")]
+
+
+BENCH_LIVE_QUERY = """
+PREFIX ex: <http://example.org/>
+REGISTER RStream <out> AS
+SELECT ?s ?t
+FROM NAMED WINDOW ex:w ON STREAM ex:s [RANGE 10000 STEP 1000]
+WHERE { WINDOW ex:w { ?s ex:temperature ?t . } }
+"""
+
+
+def test_closing_batch_is_one_plan(spark, tmp_path, monkeypatch):
+    """The bench.py::bench_live batches: 100 events (ts 10000 closes the
+    first window), then one event that closes the next ten.  The ten fire
+    from one compile and one collect — at most four Spark jobs with the
+    buffer append — and each window holds exactly the events of its
+    merged range."""
+    import janus_spark.streaming.live as live
+
+    compiles = []
+    compile_sparql = live.compile_sparql
+    monkeypatch.setattr(live, "compile_sparql",
+                        lambda *a, **k: compiles.append(1) or compile_sparql(*a, **k))
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
+    assert not spark.streams.active, "a running stream would add jobs to the count"
+    runner, sink = make_runner(spark, tmp_path, BENCH_LIVE_QUERY)
+    quads = melt_sensor_fixture(spark, 100)  # ts 100..10000
+    runner.on_batch(quads)
+    assert compiles == [1] and len(sink.batches) == 1
+    closer = melt_sensor_fixture(spark, 1).selectExpr(
+        "ts + 20000 as ts", "subject", "predicate", "object", "graph"
+    )
+    before = dag.numTotalJobs()
+    runner.on_batch(closer)
+    assert dag.numTotalJobs() - before <= 4
+    assert compiles == [1, 1]
+    assert [b["window_end"] for b in sink.batches] == list(range(10000, 21000, 1000))
+    events = {(r["subject"], r["object"], r["ts"]) for r in quads.collect()}
+    for b in sink.batches:
+        e = b["window_end"]
+        expected = sorted((s, o) for s, o, ts in events if e - 10000 <= ts < e)
+        assert sorted((r["s"], r["t"]) for r in b["rows"]) == expected, e
+
+
+def test_order_by_limit_is_per_window_in_one_batch(spark, tmp_path):
+    """ORDER BY … LIMIT applies to each fired window, in order, when
+    several windows fire in one batch (plain-Python reference)."""
+    text = LIVE_QUERY.replace("WHERE", "WHERE", 1).rstrip() + "\nORDER BY DESC(?temp) ?sensor LIMIT 2\n"
+    quads = _unique_subject_quads(spark, 50)
+    runner, sink = make_runner(spark, tmp_path, text)
+    runner.on_batch(quads.where("ts <= 5100"))
+    assert [b["window_end"] for b in sink.batches] == [2000, 3000, 4000, 5000]
+    events = [(r["ts"], r["subject"], r["object"]) for r in quads.collect()]
+    for b in sink.batches:
+        e = b["window_end"]
+        sols = sorted((s, t) for ts, s, t in events if e - 2000 <= ts < e)
+        sols.sort(key=lambda st: st[1], reverse=True)  # stable: ?sensor ascending within ties
+        assert [(r["sensor"], r["temp"]) for r in b["rows"]] == sols[:2], e
+
+
+def test_collect_limit_is_exact_per_window(spark, tmp_path, monkeypatch):
+    """COLLECT_LIMIT caps each fired window, not the batch: of two windows
+    fired together, the one over the cap emits exactly the cap and the
+    other all of its rows."""
+    import janus_spark.streaming.live as live
+
+    monkeypatch.setattr(live, "COLLECT_LIMIT", 3)
+    text = LIVE_QUERY.replace("[RANGE 2000 STEP 1000]", "[RANGE 1000 STEP 1000]")
+    rows = [(ts, f"{EX}s{ts}", f"{EX}temperature", str(ts), "g")
+            for ts in (100, 200, 300, 400, 500, 1100, 1200, 2000)]
+    runner, sink = make_runner(spark, tmp_path, text)
+    runner.on_batch(spark.createDataFrame(rows, QUAD_DDL))
+    first, second = sink.batches
+    assert (first["window_end"], second["window_end"]) == (1000, 2000)
+    assert len(first["rows"]) == 3
+    assert {r["temp"] for r in first["rows"]} <= {"100", "200", "300", "400", "500"}
+    assert sorted(r["temp"] for r in second["rows"]) == ["1100", "1200"]
+
+
+def test_specs_sharing_an_end_emit_identical_rows(spark, tmp_path):
+    """Windows of two specs that end together see the same merged range,
+    so they emit the same rows."""
+    text = f"""
+    PREFIX ex: <{EX}>
+    REGISTER RStream <out> AS
+    SELECT ?sensor ?temp
+    FROM NAMED WINDOW ex:a ON STREAM ex:s [RANGE 2000 STEP 1000]
+    FROM NAMED WINDOW ex:b ON STREAM ex:s [RANGE 3000 STEP 3000]
+    WHERE {{
+      WINDOW ex:a {{ ?sensor ex:temperature ?temp . }}
+      WINDOW ex:b {{ ?sensor ex:temperature ?temp . }}
+    }}
+    """
+    runner, sink = make_runner(spark, tmp_path, text)
+    runner.on_batch(_unique_subject_quads(spark, 70))  # ts 100..7000
+    a, b = (w.spec.name for w in runner.windows)
+    by_spec = {(x["window"], x["window_end"]): x["rows"] for x in sink.batches}
+    shared = sorted(e for (w, e) in by_spec if w == b)
+    assert shared == [3000, 6000]
+    for e in shared:
+        assert by_spec[(a, e)] and by_spec[(a, e)] == by_spec[(b, e)]
+
+
+def test_global_aggregate_emits_one_row_per_window(spark, tmp_path):
+    """An aggregate without GROUP BY yields one row for every fired
+    window, an empty one included (COUNT 0), as a per-window evaluation
+    does."""
+    text = f"""
+    PREFIX ex: <{EX}>
+    REGISTER RStream <out> AS
+    SELECT (COUNT(?temp) AS ?n)
+    FROM NAMED WINDOW ex:w ON STREAM ex:s [RANGE 2000 STEP 1000]
+    WHERE {{ WINDOW ex:w {{ ?sensor ex:temperature ?temp . }} }}
+    """
+    sparse = melt_sensor_fixture(spark, 10).union(
+        spark.createDataFrame([(6100, f"{EX}sensorX", f"{EX}temperature", "42", "g")], QUAD_DDL)
+    )
+    runner, sink = make_runner(spark, tmp_path, text)
+    runner.on_batch(sparse)  # ts 100..1000, then 6100
+    assert [(b["window_end"], [r["n"] for r in b["rows"]]) for b in sink.batches] == [
+        (2000, [10]), (3000, [1]), (4000, [0]), (5000, [0]), (6000, [0])
+    ]
