@@ -1,19 +1,22 @@
 """Driver contract for the spark-graft builder (PySpark target).
 
 ``entry(spark)`` — flagship Janus-QL hybrid-historical query at sf0.001.
-``queries()``   — one entry per implemented operator from SURVEY.md §2.
+``queries()``   — every registry gate, least recently checked first.
 ``oracle_sql()``— DuckDB-equivalent SQL per query (same column names).
 """
 
 from __future__ import annotations
 
+import json
 import os
+import re
 import sys
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+ROOT = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, ROOT)
 
 DEFAULT_SF_DIR = "/root/testdata/sf0.001"
 
@@ -27,232 +30,32 @@ def entry(spark: SparkSession) -> DataFrame:
     return q_hist_fixed(spark, DEFAULT_SF_DIR)
 
 
-# The driver's correctness check samples the FIRST 50 registry entries.
-# Window history: r04 = round-1 head, r05 = newest 50, r06 = the 50 at
-# HEAD of round 6, r07 = the 13 gates displaced in r6 + the next 37
-# never-checked (all green in CORRECTNESS_r07.json).  This round (r8)
-# takes the LAST 47 gates with no driver-hash row anywhere in r1-r7 —
-# the 45 NEVER_CHECKED_TAIL gates plus the two DSIR gates added mid-r7
-# — plus 3 refreshes of the oldest-checked core gates (r1-vintage
-# q_bgp_scan / q_hist_fixed / q_baseline_aggregate).  After r8 lands,
-# every gate registered when the window was pinned has a driver-hash
-# record; gates added later this round sit in R9_QUEUE below.
-#
-# R8_WINDOW is pinned by tests/test_entry.py::test_priority_window_pinned
-# so a mid-round gate insertion can never silently displace a planned
-# window again (it displaced 13 gates in r6; new gates — e.g. the r8
-# quality-classifier family — go to the BACK of the registry and wait
-# for the r9 window).
-R7_WINDOW = [
-    # the 13 gates displaced past slot 50 by r6's mid-round insertion
-    "q_funnel",
-    "q_pmi",
-    "q_sliding_topk",
-    "q_retention_cohorts",
-    "q_ab_test",
-    "q_ohlc_resample",
-    "q_ewma",
-    "q_cusum",
-    "q_live_istream",
-    "q_live_dstream",
-    "q_live_session",
-    "q_live_topk",
-    "q_live_rollup",
-    # next 37 never-driver-checked gates in registry order
-    "q_chunk_documents", "q_pii_scrub", "q_length_hist", "q_asof_join",
-    "q_rollup", "q_window_funcs", "q_gapfill", "q_range_join", "q_cube",
-    "q_topk_per_group", "q_pivot", "q_latest_event", "q_tpch_revenue",
-    "q_skew_join", "q_sample_weighted", "q_doc_logprob",
-    "q_time_weighted_avg", "q_sliding_panes", "q_sliding_percentile",
-    "q_describe", "q_locf_resample", "q_edit_distance", "q_quality_ntile",
-    "q_baseline_last", "q_live_baseline_join", "q_sliding_distinct",
-    "q_frame_sample", "q_tpch_local_supplier", "q_tpch_small_quantity",
-    "q_live_interval_join", "q_bigram_logprob", "q_interp_resample",
-    "q_winsorize", "q_mad_outliers", "q_novelty", "q_embedding_clusters",
-    "q_rank_funcs",
-]
-
-# The 45 gates that had never been driver-checked after r7, in registry
-# order — the bulk of the r8 window.
-NEVER_CHECKED_TAIL = [
-    "q_optional_filter", "q_not_exists_anti",
-    "q_skew_stats", "q_live_percentile", "q_live_ingest_dedup",
-    "q_corpus_report", "q_autocorr", "q_bloom_join",
-    "q_tpch_returned_items", "q_tpch_large_orders", "q_grouping_sets",
-    "q_vocab_coverage", "q_audio_features", "q_asof_forward",
-    "q_tpch_promo", "q_cooccurrence", "q_seasonal_outliers",
-    "q_corpus_diff", "q_hll_overlap", "q_decompose", "q_cms_join_size",
-    "q_zipf_fit", "q_tpch_custdist", "q_tpch_disjunctive",
-    "q_tpch_lone_returner", "q_tpch_idle_rich", "q_linreg_trend",
-    "q_skyline", "q_cross_corr", "q_incremental_agg", "q_live_linreg",
-    "q_attribution", "q_live_attribution", "q_expr_hash",
-    "q_scene_changes", "q_live_ohlc", "q_contamination_semantic",
-    "q_funnel_time", "q_decayed_topk", "q_keywords",
-    "q_period_over_period", "q_benford", "q_tpch_top_supplier",
-    "q_tpch_market_share", "q_ltv_cohort",
-]
-
-# Slots 96-145: the r06 window (all driver-green in CORRECTNESS_r06.json),
-# kept at the back of the priority list.
-R6_CHECKED = [
-    "q_feature_hashing", "q_profile", "q_k_core",
-    "q_dedup_incremental_minhash", "q_shuffle_shard",
-    "q_entity_resolution", "q_entity_golden",
-    "q_entity_sorted_neighborhood", "q_entity_incremental",
-    "q_entity_tfidf_match", "q_live_entity_resolution",
-    "q_k_truss", "q_modularity", "q_entity_eval", "q_ari_lpa_vs_cc",
-    "q_entity_block_cap",
-    "q_json_props", "q_token_entropy", "q_pack_tokens",
-    "q_tpch_shipmode", "q_markov_transitions", "q_validate",
-    "q_freshness", "q_jsonl_roundtrip", "q_live_validate",
-    "q_pagerank", "q_pagerank_personalized", "q_pagerank_weighted",
-    "q_harmonic_centrality", "q_assortativity",
-    "q_connected_components", "q_shortest_paths", "q_triangle_count",
-    "q_bfs_hops",
-    "q_path_closure", "q_path_star", "q_path_alt_closure",
-    "q_bm25_topk", "q_hybrid_rrf", "q_hard_negatives", "q_tfidf_pairs",
-    "q_jaccard_pairs", "q_jaccard_prefix", "q_containment_pairs",
-    "q_dedup_keep_best", "q_contamination_ngram",
-    "q_hll_distinct", "q_cms_counts", "q_percentiles",
-    "q_sliding_hll_distinct",
-]
-
-# The r8 driver window (slots 1-50): the 47 gates with no driver-hash
-# row in any of CORRECTNESS_r01..r07 (45 tail + 2 DSIR, judge
-# pre-verified 47/47 EXACT against their DuckDB oracles in the r7
-# adjudication), then 3 refreshes of r1-vintage core gates.
-R8_WINDOW = NEVER_CHECKED_TAIL + [
-    "q_dsir_scores",
-    "q_dsir_topk",
-    # refreshes: oldest driver-hash rows in the registry (r1-vintage)
-    "q_bgp_scan",
-    "q_hist_fixed",
-    "q_baseline_aggregate",
-]
-
-PRIORITY_GATES = R8_WINDOW + R7_WINDOW + [
-    g for g in R6_CHECKED if g not in R8_WINDOW
-]
-
-# Gates added AFTER the r8 window was pinned; they head the r9 window
-# below (judge pre-verified all 5 EXACT in the r8 adjudication).
-R9_QUEUE = [
-    "q_quality_classifier",
-    "q_quality_filter",
-    "q_live_quality",
-    "q_dup_spans",
-    "q_gopher_rules",
-]
-
-# The 45 refresh slots of the r9 window: the gates whose most recent
-# driver-hash row is oldest (all r4-vintage; computed as max round per
-# gate over CORRECTNESS_r01..r08, ties broken by registry order).  One
-# more r4 gate (q_contamination) missed the 45-slot cut and is first in
-# line for the r10 refresh window.
-R9_REFRESHES = [
-    "q_bgp_join", "q_agg_group", "q_join_bind_concat", "q_optional",
-    "q_union", "q_minus", "q_distinct_order_limit", "q_values",
-    "q_graph", "q_expr_functions", "q_ext_outlier", "q_ext_rules",
-    "q_hist_sliding", "q_hist_sliding_star", "q_comparator_stats",
-    "q_token_count", "q_text_quality", "q_lang_id", "q_fingerprint",
-    "q_dedup_exact", "q_dedup_minhash", "q_dedup_simhash",
-    "q_ann_bruteforce", "q_ann_lsh", "q_ann_ivf",
-    "q_embedding_near_dup", "q_multimodal_decode", "q_nquads_roundtrip",
-    "q_ask", "q_construct", "q_property_path", "q_path_inverse_alt",
-    "q_path_zero_or_one", "q_path_negated_set", "q_subquery",
-    "q_agg_full", "q_tpch_pricing", "q_dedup_keeplist", "q_sessionize",
-    "q_sample_hash", "q_sample_stratified", "q_sample_quota",
-    "q_split_train_eval", "q_repetition", "q_word_freq",
-]
-
-# The r9 driver window (slots 1-50): the 5 R9_QUEUE gates — after which
-# EVERY gate in the registry-as-of-the-r8-pin has a driver-hash row —
-# then 45 refreshes of the oldest rows, beginning the recycling phase
-# (VERDICT r8 "Next round" #1).
-R9_WINDOW = R9_QUEUE + R9_REFRESHES
-
-PRIORITY_GATES = list(
-    dict.fromkeys(R9_WINDOW + R8_WINDOW + R7_WINDOW + R6_CHECKED)
-)
-
-# Gates added AFTER the r9 window was pinned: they go to the BACK of the
-# registry this round and form the head of the r10 window (the coverage
-# test exempts exactly these).  Entries are appended in the same commit
-# that registers the gate.
-R10_QUEUE = [
-    "q_dup_cut",
-    "q_domain_mixture",
-    "q_mixture_sample",
-    "q_curation_full",
-    "q_unimax_mixture",
-    "q_mixture_tokens",
-    "q_curation_funnel",
-    "q_sample_quota_prefiltered",
-]
-
-# The 42 refresh slots of the r10 window: the gates whose most recent
-# driver-hash row is oldest (q_contamination is the last r4-vintage row;
-# the rest are r5-vintage, ties broken by registry order — recomputed
-# from CORRECTNESS_r01..r09 at the r10 pin).
-R10_REFRESHES = [
-    "q_contamination",
-    "q_live_tumbling_join", "q_skew_auto_join", "q_live_sink_parquet",
-    "q_path_deep_closure", "q_comparator_stream", "q_passage_dedup",
-    "q_scd2_history", "q_dedup_cross_corpus", "q_window_path_closure",
-    "q_temperature_mix", "q_ann_pq", "q_curation_pipeline",
-    "q_ann_ivfadc", "q_multimodal_ann", "q_live_cms", "q_live_funnel",
-    "q_bm25_incremental", "q_temporal_join", "q_bpe_pairs",
-    "q_skyline3d", "q_live_hll", "q_match_pattern",
-    "q_live_match_pattern", "q_tpch_ship_priority", "q_tpch_late_orders",
-    "q_tpch_nation_volume", "q_clustering_coeff", "q_khop_features",
-    "q_negative_edges", "q_target_encoding", "q_target_encoding_smoothed",
-    "q_diff_in_diff", "q_spatial_join", "q_quantile_hist",
-    "q_drift_chi2", "q_expr_datetime", "q_live_drift", "q_line_dedup",
-    "q_link_prediction", "q_tpch_profit", "q_tpch_min_cost_supplier",
-]
-
-# The r10 driver window (slots 1-50): the 8 R10_QUEUE gates (judge
-# pre-verified 8/8 EXACT at sf0.01 AND sf0.1 in the r9 adjudication) —
-# after which every gate registered at the r9 pin has a driver-hash row
-# — then 42 refreshes of the oldest rows (VERDICT r9 "Next round" #1).
-R10_WINDOW = R10_QUEUE + R10_REFRESHES
-
-PRIORITY_GATES = list(
-    dict.fromkeys(R10_WINDOW + R9_WINDOW + R8_WINDOW + R7_WINDOW + R6_CHECKED)
-)
-
-# Gates added AFTER the r10 window was pinned: they go to the BACK of
-# the registry this round and form the head of the r11 window (the
-# coverage test exempts exactly these).  Entries are appended in the
-# same commit that registers the gate.
-R11_QUEUE: list[str] = [
-    "q_mixture_sample_prefiltered",
-    "q_mixture_tokens_prefiltered",
-    "q_curation_increment",
-    "q_live_curation",
-    "q_curation_increment_select",
-]
+def last_checked() -> dict[str, int]:
+    """Gate -> the newest round N whose ``CORRECTNESS_r<N>.json`` in
+    ``ROOT`` names it."""
+    last: dict[str, int] = {}
+    for fn in os.listdir(ROOT):
+        m = re.fullmatch(r"CORRECTNESS_r(\d+)\.json", fn)
+        if m:
+            with open(os.path.join(ROOT, fn)) as f:
+                for gate in json.load(f):
+                    last[gate] = max(last.get(gate, 0), int(m.group(1)))
+    return last
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
+    """Every registry gate, ordered by the newest round that checked it
+    (0 if none), ties in registry order.  The external correctness check
+    takes the first 50 and records them in ``CORRECTNESS_r<N>.json``, so
+    each round checks the never-checked gates, then the oldest records."""
     from janus_spark.queries import QUERIES
 
-    head = {k: QUERIES[k] for k in PRIORITY_GATES if k in QUERIES}
-    head.update(QUERIES)
-    return head
+    last = last_checked()
+    return {g: QUERIES[g] for g in sorted(QUERIES, key=lambda g: last.get(g, 0))}
 
 
 def oracle_sql() -> dict[str, str]:
-    from janus_spark.queries import (
-        ORACLES,
-        oracle_for_hist_fixed,
-        oracle_for_hist_sliding,
-        oracle_for_hist_sliding_star,
-    )
+    from janus_spark.queries import oracles
 
     sf_dir = os.environ.get("SPARK_GRAFT_ORACLE_SF_DIR", "/root/testdata/sf0.01")
-    out = dict(ORACLES)
-    out["q_hist_fixed"] = oracle_for_hist_fixed(sf_dir)
-    out["q_hist_sliding"] = oracle_for_hist_sliding(sf_dir)
-    out["q_hist_sliding_star"] = oracle_for_hist_sliding_star(sf_dir)
-    return out
+    return oracles(sf_dir)

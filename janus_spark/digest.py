@@ -9,8 +9,8 @@ package (not ``scripts/``) because :func:`spark_multiset_digest` ships a
 closure to executors, and only package modules are importable from the
 Python workers.
 
-Used by ``scripts/check_correctness.py`` (stress-scale compares where
-both result sets are too big to hold) and
+Used by :func:`janus_spark.oracle.check_gate` (every gate-vs-oracle
+compare; the distributed form for stress sweeps) and
 ``scripts/selfcheck_differential.py`` (engine-vs-engine A/B digests for
 gates whose DuckDB oracles cannot run at sf10).
 """

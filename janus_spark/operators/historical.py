@@ -15,9 +15,12 @@ evaluation per hop), events are assigned to every window they fall in via
 a broadcast range-join against the tiny window-bounds table, and the
 compiled plan runs ONCE over all windows with ``__window_id`` threaded as
 an implicit key (see compiler.compile partition_cols).  At 100 TB this is
-one shuffle instead of N sequential jobs; windows with zero matching
-events simply produce no rows, matching the reference (empty windows emit
-empty batches).
+one shuffle instead of N sequential jobs.  A hop with zero matching
+events yields what a per-hop evaluation yields: no rows, except that a
+global aggregate (no GROUP BY) yields its one row over no solutions
+(COUNT 0): the window-id path passes the bounds ids as the compiler's
+``partition_domain``, the pane path gives every window an identity
+partial.
 """
 
 from __future__ import annotations
@@ -144,7 +147,7 @@ def _run_sliding_panes(
     rows = compile_sparql(
         row_q, tagged, partition_cols=[PANE, PANE_BOUNDARY], registry=registry
     )
-    partial_cols, final_cols, p_names = [], [], []
+    partial_cols, final_cols, p_names, count_names = [], [], [], []
     for i, (alias, kind, arg) in enumerate(items):
         if kind == "key":
             continue
@@ -153,6 +156,7 @@ def _run_sliding_panes(
             partial_cols.append(c.alias(f"__p{i}"))
             final_cols.append(F.sum(f"__p{i}").alias(alias))
             p_names.append(f"__p{i}")
+            count_names.append(f"__p{i}")
         elif kind in ("SUM", "MIN", "MAX"):
             fn = {"SUM": F.sum, "MIN": F.min, "MAX": F.max}[kind]
             w = "num" if kind == "SUM" else None
@@ -165,6 +169,7 @@ def _run_sliding_panes(
             partial_cols.append(F.count(num).alias(f"__p{i}c"))
             final_cols.append((F.sum(f"__p{i}s") / F.sum(f"__p{i}c")).alias(alias))
             p_names.extend([f"__p{i}s", f"__p{i}c"])
+            count_names.append(f"__p{i}c")
     partials = rows.groupBy(*group_names, PANE, PANE_BOUNDARY).agg(*partial_cols)
     # window k is [base+k*step, base+k*step+range] inclusive: a pane-m
     # partial feeds windows [m-r+1, m]; a boundary partial also feeds m-r
@@ -178,6 +183,15 @@ def _run_sliding_panes(
     seq = F.when(lo <= hi, F.sequence(lo, hi)).otherwise(F.array().cast("array<long>"))
     win = F.explode(seq).alias(WINDOW_ID)
     exploded = partials.select(*group_names, win, *p_names)
+    if not group_names:
+        # a global aggregate yields its row over no solutions (COUNT 0)
+        # in a window without partials, as the compiler's partition
+        # domain does: every window gets the identity partial (counts 0,
+        # the rest null)
+        identity = quads.sparkSession.range(k_max + 1).select(
+            F.col("id").alias(WINDOW_ID), *[F.lit(0).cast("long").alias(n) for n in count_names]
+        )
+        exploded = exploded.unionByName(identity, allowMissingColumns=True)
     final = exploded.groupBy(*group_names, WINDOW_ID).agg(*final_cols)
     # key projections may alias the grouping var ((?u AS ?x)): the frame
     # carries the var name, the output contract carries the alias
@@ -312,6 +326,7 @@ def run_historical_sliding(
     True/False force/disable it (parity tests use both).
     """
     bounds = sliding_window_bounds(now, offset_ms, range_ms, step_ms)
+    bdf = _bounds_frame(quads.sparkSession, bounds)
     spec = sliding_pane_spec(query) if use_panes is not False else None
     if (
         spec is not None
@@ -322,7 +337,6 @@ def run_historical_sliding(
         result = _run_sliding_panes(
             query, quads, now, offset_ms, range_ms, step_ms, registry, spec
         )
-        bdf = _bounds_frame(quads.sparkSession, bounds)
         return result.join(F.broadcast(bdf), on=WINDOW_ID, how="inner").drop(WINDOW_ID)
     if use_panes:
         raise ValueError("query is not pane-decomposable (use_panes=True)")
@@ -355,8 +369,8 @@ def run_historical_sliding(
         registry=registry,
         path_max_hops=path_max_hops,
         predicate_stats=predicate_stats,
+        partition_domain=lambda: bdf.select(WINDOW_ID),
     )
-    bdf = _bounds_frame(quads.sparkSession, bounds)
     return result.join(F.broadcast(bdf), on=WINDOW_ID, how="inner").drop(WINDOW_ID)
 
 

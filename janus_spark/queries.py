@@ -1,6 +1,6 @@
 """Driver-contract query set: every implemented operator from SURVEY §2
-gets a ``queries()`` entry (Spark, through the engine) and an
-``oracle_sql()`` entry (equivalent ANSI SQL for DuckDB over the original
+gets a ``QUERIES`` entry (Spark, through the engine) and an
+``oracles(sf_dir)`` entry (equivalent ANSI SQL for DuckDB over the original
 parquet tables).
 
 Design note: engine queries run over MELTED quads (FIXTURES.md §3-4) so
@@ -647,9 +647,10 @@ def oracle_for_hist_sliding(sf_dir: str) -> str:
     values = ", ".join(f"({s}, {e})" for _, s, e in bounds)
     return f"""
         WITH w(window_start, window_end) AS (VALUES {values})
-        SELECT w.window_start, w.window_end, COUNT(*) AS n,
+        SELECT w.window_start, w.window_end, COUNT(e.value) AS n,
                ROUND(AVG(e.value), 6) AS avg_v
-        FROM w JOIN events e ON {_TSM.replace('ts', 'e.ts')} BETWEEN w.window_start AND w.window_end
+        FROM w LEFT JOIN events e
+          ON {_TSM.replace('ts', 'e.ts')} BETWEEN w.window_start AND w.window_end
         GROUP BY w.window_start, w.window_end"""
 
 
@@ -672,6 +673,18 @@ def oracle_for_hist_sliding_star(sf_dir: str) -> str:
         FROM w JOIN events e ON {_TSM.replace('ts', 'e.ts')} BETWEEN w.window_start AND w.window_end
         WHERE e.event_type IS NOT NULL AND e.value IS NOT NULL
         GROUP BY w.window_start, w.window_end, e.event_type"""
+
+
+def oracles(sf_dir: str) -> dict[str, str]:
+    """Every gate's DuckDB oracle over ``sf_dir``: ``ORACLES`` plus the
+    three historical-window oracles, whose window bounds are read from
+    that dir's events."""
+    return {
+        **ORACLES,
+        "q_hist_fixed": oracle_for_hist_fixed(sf_dir),
+        "q_hist_sliding": oracle_for_hist_sliding(sf_dir),
+        "q_hist_sliding_star": oracle_for_hist_sliding_star(sf_dir),
+    }
 
 
 # ----------------------------------------------------- datapipe queries
@@ -3103,7 +3116,7 @@ ORACLES["q_sliding_distinct"] = f"""
          e AS (SELECT user_id, {_TSM} AS t FROM events)
     SELECT w.ws AS window_start, w.we AS window_end,
            COUNT(DISTINCT e.user_id) AS n_users
-    FROM w JOIN e ON e.t >= w.ws AND e.t <= w.we
+    FROM w LEFT JOIN e ON e.t >= w.ws AND e.t <= w.we
     GROUP BY w.ws, w.we"""
 
 

@@ -1,265 +1,59 @@
-"""Local mirror of the driver's correctness gate: run each queries() entry
-and its oracle_sql() on the same sf dir, compare row count, column names,
-and order-insensitive values.  Reports exact and tolerant comparison.
+"""Check registry gates against their DuckDB oracles on one sf dir, in the
+order of ``__spark_entry__.queries()``; each gate goes through
+``janus_spark.oracle.check_gate``.
 
-Usage: python scripts/check_correctness.py [sf_dir] [query ...]
+Usage: python scripts/check_correctness.py [sf_dir] [gate ...]
+
+Prints one ``OK``/``FAIL`` line per gate and ``N queries, M failures``;
+exits 1 on any failure.  ``JANUS_DISTRIBUTED_DIGEST=1`` digests the
+Spark side executor-side, for stress sweeps (scripts/sweep_sf10.sh).
 """
 
 from __future__ import annotations
 
-import math
 import os
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
-
-import duckdb
 
 SF_DIR = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
 ONLY = set(sys.argv[2:])
 
-os.environ["SPARK_GRAFT_ORACLE_SF_DIR"] = SF_DIR
-# Stress sweeps (sf1/sf10) collect multi-GB results for the value compare;
+# Stress sweeps (sf1/sf10) collect multi-GB results for the compare;
 # give the driver room unless the caller already chose.
 os.environ.setdefault("JANUS_DRIVER_MEM", "24g")
 os.environ.setdefault("JANUS_MAX_RESULT_SIZE", "8g")
 
 import __spark_entry__ as entry_mod  # noqa: E402
-from audit_oracle_dtypes import ALLOWED, duck_family, spark_family  # noqa: E402
-from janus_spark.digest import (  # noqa: E402
-    multiset_digest,
-    norm,
-    spark_multiset_digest,
-)
+from janus_spark.oracle import check_gate, connect  # noqa: E402
 from janus_spark.session import get_spark  # noqa: E402
-
-TABLES = "region nation customer supplier part orders lineitem events documents embeddings".split()
-
-
-def _load_snapshot():
-    import json
-
-    from audit_oracle_dtypes import SNAPSHOT
-
-    try:
-        with open(SNAPSHOT) as f:
-            return json.load(f)
-    except OSError:
-        return {}
-
-
-_SNAPSHOT = _load_snapshot()
-
-
-def dtype_mismatches(name, sdf, con, sql):
-    """Per-gate pandas-dtype-family check mirroring the driver's
-    type-sensitive hash: Spark plan schema vs DuckDB DESCRIBE (plan-only).
-    The r05 q_feature_hashing/q_profile failures were value-identical but
-    int-vs-HUGEINT->float64 — Python ``==`` (1 == 1.0) can't see that, so
-    this check runs alongside the value compare on every gate.  Also
-    fails on drift between the live Spark schema and the pinned snapshot
-    tests/oracle_schema_snapshot.json (the fast pytest trusts that file;
-    regenerate with scripts/audit_oracle_dtypes.py --write-snapshot)."""
-    sfields = {f.name: spark_family(f.dataType) for f in sdf.schema.fields}
-    bad = []
-    for col, dtype, *_ in con.execute(f"DESCRIBE {sql}").fetchall():
-        sf = sfields.get(col)
-        if sf is not None and (sf, duck_family(dtype)) not in ALLOWED:
-            bad.append(f"{col}: spark={sf} duck={duck_family(dtype)}({dtype})")
-    pinned = _SNAPSHOT.get(name)
-    if pinned is not None and pinned != sfields:
-        bad.append(f"snapshot drift: pinned={pinned} live={sfields} — regen snapshot")
-    return bad
-
-
-def canon(rows, cols):
-    order = sorted(range(len(cols)), key=lambda i: cols[i])
-    out = []
-    for r in rows:
-        out.append(tuple(norm(r[i]) for i in order))
-    return sorted(out, key=repr)
-
-
-# Results bigger than this skip the sorted-list compare (O(n log n) reprs,
-# both sides resident) for a commutative multiset digest — exact, order-
-# insensitive, O(n) and constant extra memory.  Loses example-diff output,
-# which only matters when a mismatch needs debugging at small scale anyway.
-# The digest helpers live in janus_spark.digest (package module) so the
-# mapInArrow closure is importable from the executors' Python workers.
-DIGEST_THRESHOLD = int(os.environ.get("JANUS_DIGEST_THRESHOLD", "5000000"))
-
-
-def _fetch_chunks(cur, size=1_000_000):
-    while True:
-        chunk = cur.fetchmany(size)
-        if not chunk:
-            return
-        yield from chunk
-
-
-def approx_equal(a, b):
-    if len(a) != len(b):
-        return False
-    for ra, rb in zip(a, b):
-        if len(ra) != len(rb):
-            return False
-        for x, y in zip(ra, rb):
-            if isinstance(x, float) and isinstance(y, float):
-                if not math.isclose(x, y, rel_tol=1e-9, abs_tol=1e-9):
-                    return False
-            elif x != y:
-                return False
-    return True
 
 
 def main():
     spark = get_spark("correctness")
     spark.sparkContext.setLogLevel("ERROR")
-    con = duckdb.connect()
+    con = connect(SF_DIR)
     # big-oracle spills (wedge joins at sf10) go to the large volume, not cwd
     spill = os.environ.get("JANUS_DUCKDB_TMP", "/tmp/duckdb_spill")
     os.makedirs(spill, exist_ok=True)
     con.execute(f"SET temp_directory='{spill}'")
-    for t in TABLES:
-        p = f"{SF_DIR}/{t}.parquet"
-        if os.path.exists(p):
-            con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
 
-    queries = entry_mod.queries()
-    oracles = entry_mod.oracle_sql()
     results = {}
-
-    def progress(name):
-        print(f"  .. {name}: {results[name][:120]}", flush=True)
-
-    # JANUS_DISTRIBUTED_DIGEST=1: persist each result, count, and digest
-    # huge results executor-side (only 32 partials cross to the driver) —
-    # the stress-sweep mode; default off so the driver-style small-SF path
-    # is byte-identical to previous rounds.
-    dist_mode = os.environ.get("JANUS_DISTRIBUTED_DIGEST") == "1"
-
-    for name, fn in queries.items():
+    for name in entry_mod.queries():
         if ONLY and name not in ONLY:
             continue
-        persisted = None
         try:
-            sdf = fn(spark, SF_DIR)
-            scols = sdf.columns
-            if dist_mode:
-                from pyspark import StorageLevel
+            ok, _, msg = check_gate(spark, con, name, SF_DIR)
+        except Exception as e:
+            ok, msg = False, f"ERROR: {e}"
+        results[name] = (ok, msg)
+        print(f"  .. {name}: {msg[:120]}", flush=True)
 
-                persisted = sdf.persist(StorageLevel.DISK_ONLY)
-                scount = persisted.count()
-                srows = (
-                    None
-                    if scount > DIGEST_THRESHOLD
-                    else [tuple(r) for r in persisted.collect()]
-                )
-            else:
-                srows = [tuple(r) for r in sdf.collect()]
-                scount = len(srows)
-        except Exception as e:
-            results[name] = f"SPARK ERROR: {e}"
-            progress(name)
-            if persisted is not None:
-                persisted.unpersist()
-            continue
-        if name not in oracles:
-            results[name] = f"rows-only ({scount} rows)"
-            progress(name)
-            if persisted is not None:
-                persisted.unpersist()
-            continue
-        try:
-            dt_bad = dtype_mismatches(name, sdf, con, oracles[name])
-        except Exception as e:
-            dt_bad = [f"dtype-check error: {e}"]
-        if dt_bad:
-            results[name] = f"DTYPE MISMATCH {dt_bad}"
-            progress(name)
-            if persisted is not None:
-                persisted.unpersist()
-            continue
-        try:
-            cur = con.execute(oracles[name])
-            ocols = [d[0] for d in cur.description]
-        except Exception as e:
-            results[name] = f"ORACLE ERROR: {e}"
-            progress(name)
-            if persisted is not None:
-                persisted.unpersist()
-            continue
-        if sorted(scols) != sorted(ocols):
-            results[name] = f"SCHEMA MISMATCH spark={sorted(scols)} oracle={sorted(ocols)}"
-            progress(name)
-            if persisted is not None:
-                persisted.unpersist()
-            continue
-        if srows is None or len(srows) > DIGEST_THRESHOLD:
-            if srows is None:
-                sn, sdig = spark_multiset_digest(persisted)
-            else:
-                sn, sdig = multiset_digest(srows, scols)
-            srows = []  # free before the oracle side streams in
-            if persisted is not None:
-                persisted.unpersist()
-                persisted = None
-            try:
-                on, odig = multiset_digest(_fetch_chunks(cur), ocols)
-            except Exception as e:
-                results[name] = f"ORACLE ERROR: {e}"
-                progress(name)
-                continue
-            if sn != on:
-                results[name] = f"ROWCOUNT MISMATCH spark={sn} oracle={on}"
-            elif sdig == odig:
-                results[name] = f"EXACT ({sn} rows, digest)"
-            else:
-                results[name] = f"VALUE MISMATCH ({sn} rows, digest)"
-            progress(name)
-            continue
-        try:
-            orows = cur.fetchall()
-        except Exception as e:
-            results[name] = f"ORACLE ERROR: {e}"
-            progress(name)
-            if persisted is not None:
-                persisted.unpersist()
-            continue
-        if len(srows) != len(orows):
-            results[name] = f"ROWCOUNT MISMATCH spark={len(srows)} oracle={len(orows)}"
-            progress(name)
-            if persisted is not None:
-                persisted.unpersist()
-            continue
-        a = canon(srows, scols)
-        b = canon(orows, ocols)
-        # repr-strict like the driver's hash: 1 vs 1.0 must NOT pass
-        if a == b and all(repr(x) == repr(y) for x, y in zip(a, b)):
-            results[name] = f"EXACT ({len(srows)} rows)"
-        elif a == b:
-            diffs = [(x, y) for x, y in zip(a, b) if repr(x) != repr(y)][:2]
-            results[name] = f"TYPE MISMATCH (values equal, reprs differ) e.g. {diffs}"
-        elif approx_equal(a, b):
-            diffs = [(x, y) for x, y in zip(a, b) if x != y][:2]
-            results[name] = f"APPROX ({len(srows)} rows) e.g. {diffs}"
-        else:
-            diffs = [(x, y) for x, y in zip(a, b) if x != y][:3]
-            results[name] = f"VALUE MISMATCH ({len(srows)} rows) e.g. {diffs}"
-        progress(name)
-        if persisted is not None:
-            persisted.unpersist()
-
-    width = max(len(n) for n in results)
+    width = max(map(len, results), default=0)
     fails = 0
-    for name, res in results.items():
-        status = "OK " if res.startswith("EXACT") else ("~  " if res.startswith("APPROX") else "FAIL")
-        if status == "FAIL" and not res.startswith("rows-only"):
-            fails += 1
-        if res.startswith("rows-only"):
-            status = "R/O"
-        print(f"{status} {name:<{width}} {res[:300]}")
+    for name, (ok, msg) in results.items():
+        fails += not ok
+        print(f"{'OK ' if ok else 'FAIL'} {name:<{width}} {msg[:300]}")
     print(f"\n{len(results)} queries, {fails} failures")
     return 1 if fails else 0
 

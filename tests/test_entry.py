@@ -1,11 +1,10 @@
 """Guards on the driver contract in ``__spark_entry__.py``.
 
-The driver's correctness check samples the FIRST 50 entries of the
-registry returned by ``queries()``.  In round 6 a mid-round gate
-insertion silently displaced 13 planned gates past slot 50, so they
-missed their driver window (VERDICT r6, "What's wrong" #1).  These
-tests pin the window so that can never happen silently again: changing
-the head now requires changing this test in the same commit.
+The external correctness check samples the FIRST 50 gates of
+``queries()``.  That order is computed from its own records
+(``CORRECTNESS_r<N>.json``): the gates whose newest check is oldest come
+first, so every window takes the most overdue gates and a gate added
+mid-round can displace nothing that is more overdue.
 """
 
 from __future__ import annotations
@@ -20,133 +19,44 @@ sys.path.insert(0, ROOT)
 
 import __spark_entry__ as entry_mod  # noqa: E402
 
-# The intended round-10 driver window: the 8 R10_QUEUE gates (added
-# after the r9 pin; judge pre-verified 8/8 EXACT at sf0.01 AND sf0.1 in
-# the r9 adjudication) — after which every gate registered at the r9
-# pin has a driver-hash row — then 42 refreshes of the oldest rows
-# (q_contamination is the last r4-vintage row, the rest r5-vintage).
-# VERDICT r9 "Next round" #1.
-INTENDED_R10_WINDOW = [
-    "q_dup_cut", "q_domain_mixture", "q_mixture_sample",
-    "q_curation_full", "q_unimax_mixture", "q_mixture_tokens",
-    "q_curation_funnel", "q_sample_quota_prefiltered",
-    "q_contamination",
-    "q_live_tumbling_join", "q_skew_auto_join", "q_live_sink_parquet",
-    "q_path_deep_closure", "q_comparator_stream", "q_passage_dedup",
-    "q_scd2_history", "q_dedup_cross_corpus", "q_window_path_closure",
-    "q_temperature_mix", "q_ann_pq", "q_curation_pipeline",
-    "q_ann_ivfadc", "q_multimodal_ann", "q_live_cms", "q_live_funnel",
-    "q_bm25_incremental", "q_temporal_join", "q_bpe_pairs",
-    "q_skyline3d", "q_live_hll", "q_match_pattern",
-    "q_live_match_pattern", "q_tpch_ship_priority", "q_tpch_late_orders",
-    "q_tpch_nation_volume", "q_clustering_coeff", "q_khop_features",
-    "q_negative_edges", "q_target_encoding", "q_target_encoding_smoothed",
-    "q_diff_in_diff", "q_spatial_join", "q_quantile_hist",
-    "q_drift_chi2", "q_expr_datetime", "q_live_drift", "q_line_dedup",
-    "q_link_prediction", "q_tpch_profit", "q_tpch_min_cost_supplier",
-]
 
-# Slots 1-8 are first-timers (no prior driver-hash row); slots 9-50 are
-# deliberate refreshes and must each ALREADY have a prior row.
-R10_FIRST_TIMERS = set(INTENDED_R10_WINDOW[:8])
-
-
-def test_priority_window_pinned():
-    """PRIORITY_GATES[:50] must equal the round's intended window."""
-    assert entry_mod.PRIORITY_GATES[:50] == INTENDED_R10_WINDOW
-
-
-def test_priority_gates_no_duplicates():
-    pg = entry_mod.PRIORITY_GATES
-    assert len(pg) == len(set(pg))
-
-
-def test_priority_gates_all_in_registry():
+def test_queries_yields_every_gate_once():
     from janus_spark.queries import QUERIES
 
-    missing = [g for g in entry_mod.PRIORITY_GATES if g not in QUERIES]
-    assert not missing, f"PRIORITY_GATES not in registry: {missing}"
+    order = list(entry_mod.queries())
+    assert sorted(order) == sorted(QUERIES)
 
 
-def _driver_checked(last_round: int) -> set[str]:
-    """Union of gate names across CORRECTNESS_r01..r{last_round}.json.
-
-    The pattern accepts any two-digit round number: the r1-r9 artifacts
-    are named ``CORRECTNESS_r0N.json`` and round 10 onward produce
-    ``CORRECTNESS_r10.json`` etc. (the old ``r0([1-9])`` pattern went
-    blind at round 10 — VERDICT r9 "What's wrong" #1).
-    """
-    checked: set[str] = set()
-    for fn in sorted(os.listdir(ROOT)):
-        m = re.fullmatch(r"CORRECTNESS_r(\d{2})\.json", fn)
-        if m and int(m.group(1)) <= last_round:
-            with open(os.path.join(ROOT, fn)) as f:
-                checked.update(json.load(f).keys())
-    return checked
+def test_never_checked_gates_come_first():
+    last = entry_mod.last_checked()
+    checked = [g in last for g in entry_mod.queries()]
+    assert checked == sorted(checked)
 
 
-def test_driver_history_includes_r9():
-    """The regex fix must actually see the r9 artifact (and, once the
-    r10 driver has run, the r10 one) — guards against a silent return
-    to the blind pattern."""
-    if not os.path.exists(os.path.join(ROOT, "CORRECTNESS_r09.json")):
-        return  # fresh clone without driver artifacts
-    checked = _driver_checked(9)
-    with open(os.path.join(ROOT, "CORRECTNESS_r09.json")) as f:
-        r9_keys = set(json.load(f).keys())
-    assert r9_keys <= checked
+def test_newest_round_never_decreases():
+    last = entry_mod.last_checked()
+    rounds = [last.get(g, 0) for g in entry_mod.queries()]
+    assert rounds == sorted(rounds)
 
 
-def test_window_split_matches_driver_history():
-    """The 8 first-timers must be absent from all r1-r9 driver records;
-    the 42 refresh slots must each already HAVE a record (they exist to
-    refresh the oldest hash rows, not to cover gaps)."""
-    checked = _driver_checked(9)
-    if not checked:  # fresh clone without driver artifacts
-        return
-    wrong_first = sorted(R10_FIRST_TIMERS & checked)
-    assert not wrong_first, f"first-timers already driver-checked: {wrong_first}"
-    unrefreshable = [
-        g for g in INTENDED_R10_WINDOW
-        if g not in R10_FIRST_TIMERS and g not in checked
-    ]
-    assert not unrefreshable, (
-        f"refresh slots with no prior driver record: {unrefreshable}"
-    )
+def test_history_pattern_sees_two_digit_rounds(tmp_path, monkeypatch):
+    """``CORRECTNESS_r10.json`` and ``_r11.json`` count as rounds 10 and
+    11 (a one-digit pattern went blind at round 10)."""
+    with open(os.path.join(ROOT, "CORRECTNESS_r11.json")) as f:
+        r11 = json.load(f)
+    assert all(entry_mod.last_checked()[g] == 11 for g in r11)
+    for n, gates in ((9, ["a", "b"]), (10, ["b"]), (11, ["c"])):
+        (tmp_path / f"CORRECTNESS_r{n:02d}.json").write_text(json.dumps(dict.fromkeys(gates, {})))
+    monkeypatch.setattr(entry_mod, "ROOT", str(tmp_path))
+    assert entry_mod.last_checked() == {"a": 9, "b": 10, "c": 11}
 
 
-def test_registry_coverage_complete_after_r10():
-    """After the r10 window runs, every registry gate has a driver-hash
-    row: (all r1-r9 records) ∪ (the pinned r10 window) ⊇ the registry,
-    except gates added after the r10 pin (tracked by R11_QUEUE)."""
+def test_no_history_means_registry_order(tmp_path, monkeypatch):
     from janus_spark.queries import QUERIES
 
-    checked = _driver_checked(9) | set(INTENDED_R10_WINDOW)
-    if checked == set(INTENDED_R10_WINDOW):  # fresh clone, no artifacts
-        return
-    uncovered = [
-        g for g in QUERIES
-        if g not in checked and g not in getattr(entry_mod, "R11_QUEUE", ())
-    ]
-    assert not uncovered, f"gates with no driver window scheduled: {uncovered}"
-
-
-def test_r11_queue_gates_in_registry():
-    """Every R11_QUEUE entry must exist in the registry once its feature
-    lands — a queue naming a gate that was never registered would let
-    the coverage test pass vacuously."""
-    from janus_spark.queries import QUERIES
-
-    missing = [g for g in entry_mod.R11_QUEUE if g not in QUERIES]
-    assert not missing, f"R11_QUEUE gates not in registry: {missing}"
-
-
-def test_queries_head_order_matches_priority():
-    """queries() must yield the priority gates first, in order — the
-    driver samples by iteration order."""
-    q = entry_mod.queries()
-    head = list(q)[: len(entry_mod.PRIORITY_GATES)]
-    assert head == entry_mod.PRIORITY_GATES
+    monkeypatch.setattr(entry_mod, "ROOT", str(tmp_path))
+    assert entry_mod.last_checked() == {}
+    assert list(entry_mod.queries()) == list(QUERIES)
 
 
 def test_docs_registry_count_in_sync():

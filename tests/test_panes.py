@@ -8,8 +8,10 @@ from pyspark.sql import functions as F
 
 from janus_spark.compiler import parse_sparql
 from janus_spark.operators.historical import (
+    run_historical_fixed,
     run_historical_sliding,
     sliding_pane_spec,
+    sliding_window_bounds,
 )
 from janus_spark.sources.melt import melt_sensor_fixture
 
@@ -65,6 +67,26 @@ def test_pane_path_with_filter(spark, quads):
     fast = run_historical_sliding(q, quads, 20_000, 10_000, 2_000, 1_000, use_panes=True)
     slow = run_historical_sliding(q, quads, 20_000, 10_000, 2_000, 1_000, use_panes=False)
     assert _collect(fast) == _collect(slow)
+
+
+@pytest.mark.parametrize("use_panes", [True, False])
+def test_global_aggregate_yields_one_row_per_hop(spark, use_panes):
+    """A hop without solutions yields the aggregate over no solutions
+    (COUNT 0, SUM and AVG null), as a per-hop evaluation does."""
+    q = parse_sparql(
+        f"SELECT (COUNT(?t) AS ?n) (SUM(?t) AS ?sum_t) (AVG(?t) AS ?avg_t)"
+        f" WHERE {{ ?s <{EX}temperature> ?t . }}"
+    )
+    quads = melt_sensor_fixture(spark, 20)  # ts 100..2000
+    now, offset, rng, step = 5_000, 5_000, 1_000, 1_000
+    cols = ["n", "sum_t", "avg_t"]
+    got = run_historical_sliding(q, quads, now, offset, rng, step, use_panes=use_panes)
+    per_hop = [
+        (start, end, *run_historical_fixed(q, quads, start, end).select(*cols).first())
+        for _, start, end in sliding_window_bounds(now, offset, rng, step)
+    ]
+    assert len(per_hop) == 6 and per_hop[-1][2:] == (0, None, None)
+    assert sorted(map(tuple, got.select("window_start", "window_end", *cols).collect())) == per_hop
 
 
 def test_pane_spec_rejects_joins_paths_distinct(spark):
