@@ -20,11 +20,20 @@ sys.path.insert(0, ROOT)
 import __spark_entry__ as entry_mod  # noqa: E402
 
 
-def test_queries_yields_every_gate_once():
+def test_priority_gates_no_duplicates():
+    order = list(entry_mod.queries())
+    assert len(order) == len(set(order))
+
+
+def test_priority_gates_all_in_registry():
+    """The priority order is exactly the registry: no stray name, no gate
+    left out."""
     from janus_spark.queries import QUERIES
 
     order = list(entry_mod.queries())
-    assert sorted(order) == sorted(QUERIES)
+    missing = [g for g in order if g not in QUERIES]
+    assert not missing, f"queries() yields gates not in registry: {missing}"
+    assert set(order) == set(QUERIES)
 
 
 def test_never_checked_gates_come_first():
