@@ -45,7 +45,6 @@ from janus_spark.compiler.ast import (
     Var,
 )
 from janus_spark.compiler.expressions import compile_aggregate, compile_expr
-from janus_spark.functions.registry import FUNCTION_REGISTRY
 
 
 def _alias_map(projection) -> dict:
@@ -88,7 +87,6 @@ class _StarFrame:
 class SparqlCompiler:
     quads: DataFrame
     partition_cols: list[str] = field(default_factory=list)
-    registry: dict = field(default_factory=lambda: dict(FUNCTION_REGISTRY))
     static_quads: DataFrame | None = None  # baseline/background triples (broadcast side)
     # +/* property-path closures iterate to FIXPOINT by default (the
     # semi-naive anti-join terminates on any finite graph — rounds ≤
@@ -143,13 +141,13 @@ class SparqlCompiler:
             if q.having is not None:
                 # pre-projection frame: resolve projection aliases here too
                 hv = _subst_aliases(q.having, _alias_map(q.projection))
-                df = df.filter(compile_expr(hv, "bool", self.registry))
+                df = df.filter(compile_expr(hv, "bool"))
             df = self._project(q, df)
         if q.distinct:
             df = df.distinct()
         if q.order_by:
             keys = [
-                (compile_expr(e, None, self.registry)) if asc else compile_expr(e, None, self.registry).desc()
+                compile_expr(e) if asc else compile_expr(e).desc()
                 for e, asc in q.order_by
             ]
             df = df.orderBy(*keys)
@@ -160,7 +158,7 @@ class SparqlCompiler:
             from pyspark.sql import Window as W
 
             order = (
-                [compile_expr(e, None, self.registry).asc() if asc else compile_expr(e, None, self.registry).desc() for e, asc in q.order_by]
+                [compile_expr(e).asc() if asc else compile_expr(e).desc() for e, asc in q.order_by]
                 if q.order_by
                 else [F.monotonically_increasing_id()]
             )
@@ -315,8 +313,8 @@ class SparqlCompiler:
         df = pt.df
         for c in conds:
             df = df.where(c)
-        sel = [expr.alias(name) for name, expr in cols.items()]
-        sel += [F.col(pc) for pc in self.partition_cols]
+        sel = [F.col(pc) for pc in self.partition_cols]
+        sel += [expr.alias(name) for name, expr in cols.items()]
         return df.select(*sel)
 
     # ------------------------------------------------------------ group
@@ -345,7 +343,7 @@ class SparqlCompiler:
             elif isinstance(el, Bind):
                 if df is None:
                     raise ValueError("BIND before any pattern is unsupported")
-                df = df.withColumn(el.var, compile_expr(el.expr, None, self.registry))
+                df = df.withColumn(el.var, compile_expr(el.expr))
             elif isinstance(el, OptionalGroup):
                 right = self.compile_group(el.group, graph_term)
                 df = self._merge(df, right, "left")
@@ -404,7 +402,7 @@ class SparqlCompiler:
                 probe = right.limit(1).select(F.lit(1).alias("__e"))
                 return df.join(probe, on=F.lit(True), how="left_anti")
             return df.join(right.select(*shared).distinct(), on=shared, how="left_anti")
-        return df.filter(compile_expr(fexpr, "bool", self.registry))
+        return df.filter(compile_expr(fexpr, "bool"))
 
     # ------------------------------------------------------- path scans
     def _path_relation(self, path, graph_term: Term | None) -> DataFrame:
@@ -546,8 +544,8 @@ class SparqlCompiler:
         out = rel
         for c in conds:
             out = out.filter(c)
-        cols = [F.col(src).alias(var) for var, src in proj.items()]
-        cols += [F.col(c) for c in self.partition_cols]
+        cols = [F.col(c) for c in self.partition_cols]
+        cols += [F.col(src).alias(var) for var, src in proj.items()]
         return out.select(*cols)
 
     # ------------------------------------------------------------ scans
@@ -587,8 +585,10 @@ class SparqlCompiler:
         out = src
         for c in conds:
             out = out.filter(c)
-        cols = [F.col(srccol).alias(var) for var, srccol in proj.items()]
-        cols += [F.col(pc) for pc in self.partition_cols]
+        # partition columns lead, so joins and streaming state stores
+        # key on (partition, …)
+        cols = [F.col(pc) for pc in self.partition_cols]
+        cols += [F.col(srccol).alias(var) for var, srccol in proj.items()]
         return out.select(*cols)
 
     def _values_frame(self, v: InlineValues) -> DataFrame:
@@ -735,11 +735,11 @@ class SparqlCompiler:
                 group_cols.append(e.name)
             else:
                 name = alias or f"__grp{len(group_cols)}"
-                df = df.withColumn(name, compile_expr(e, None, self.registry))
+                df = df.withColumn(name, compile_expr(e))
                 group_cols.append(name)
-        all_group = group_cols + [c for c in self.partition_cols if c not in group_cols]
+        all_group = [c for c in self.partition_cols if c not in group_cols] + group_cols
 
-        aggs = [compile_aggregate(call, self.registry).alias(name) for call, name in agg_calls.items()]
+        aggs = [compile_aggregate(call).alias(name) for call, name in agg_calls.items()]
         if not aggs:
             aggs = [F.count(F.lit(1)).alias("__agg_dummy")]
         if not all_group:
@@ -760,12 +760,12 @@ class SparqlCompiler:
             )
 
         if having is not None:
-            df = df.filter(compile_expr(having, "bool", self.registry, agg_map=agg_calls))
+            df = df.filter(compile_expr(having, "bool", agg_map=agg_calls))
 
         if q.projection is None:
             return df.drop("__agg_dummy")
         cols = [
-            compile_expr(e, None, self.registry, agg_map=agg_calls).alias(name)
+            compile_expr(e, agg_map=agg_calls).alias(name)
             for e, name in q.projection
         ]
         cols += [F.col(pc) for pc in self.partition_cols if pc not in [n for _, n in q.projection]]
@@ -775,7 +775,7 @@ class SparqlCompiler:
     def _project(self, q: SelectQuery, df: DataFrame) -> DataFrame:
         if q.projection is None:  # SELECT *
             return df
-        cols = [compile_expr(e, None, self.registry).alias(name) for e, name in q.projection]
+        cols = [compile_expr(e).alias(name) for e, name in q.projection]
         cols += [F.col(pc) for pc in self.partition_cols if pc not in [n for _, n in q.projection]]
         return df.select(*cols)
 
@@ -784,7 +784,6 @@ def compile_sparql(
     q: SelectQuery,
     quads: DataFrame,
     partition_cols: list[str] | None = None,
-    registry: dict | None = None,
     static_quads: DataFrame | None = None,
     property_tables: dict | None = None,
     reorder_bgp: bool = True,
@@ -795,7 +794,6 @@ def compile_sparql(
     return SparqlCompiler(
         quads,
         partition_cols or [],
-        registry if registry is not None else dict(FUNCTION_REGISTRY),
         static_quads,
         property_tables=property_tables or {},
         reorder_bgp=reorder_bgp,

@@ -13,8 +13,6 @@ predicate as false — the same observable behavior.
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -53,17 +51,16 @@ def is_numericish(e: Expr) -> bool:
 def compile_expr(
     e: Expr,
     want: str | None = None,
-    registry: dict[str, Callable[..., Column]] | None = None,
     agg_map: dict[ECall, str] | None = None,
 ) -> Column:
     """Compile to a Column.  ``want``: 'num'|'str'|'bool'|None coercion hint.
 
     ``agg_map`` maps aggregate ECall nodes to already-computed column names
-    (set during GROUP BY lowering)."""
-    registry = registry if registry is not None else FUNCTION_REGISTRY
+    (set during GROUP BY lowering).  Extension functions resolve through
+    ``FUNCTION_REGISTRY`` (``functions.register_function``)."""
 
     def rec(x: Expr, w: str | None = None) -> Column:
-        return compile_expr(x, w, registry, agg_map)
+        return compile_expr(x, w, agg_map)
 
     if agg_map and isinstance(e, ECall) and e in agg_map:
         return _coerce(F.col(agg_map[e]), want)
@@ -114,7 +111,7 @@ def compile_expr(
         raise ValueError(f"unknown binary op {op}")
 
     if isinstance(e, ECall):
-        return _coerce(_compile_call(e, rec, registry), want)
+        return _coerce(_compile_call(e, rec), want)
 
     raise ValueError(f"cannot compile expression {e!r}")
 
@@ -127,12 +124,12 @@ def _coerce(c: Column, want: str | None) -> Column:
     return c
 
 
-def _compile_call(e: ECall, rec, registry) -> Column:
+def _compile_call(e: ECall, rec) -> Column:
     name = e.name
     a = e.args
 
-    if name in registry:
-        return registry[name](*[rec(x, "num") for x in a])
+    if name in FUNCTION_REGISTRY:
+        return FUNCTION_REGISTRY[name](*[rec(x, "num") for x in a])
 
     if name == "STR":
         return rec(a[0]).cast("string")
@@ -278,11 +275,11 @@ def _compile_call(e: ECall, rec, registry) -> Column:
     raise ValueError(f"unknown function {name!r} (not a builtin, not in registry)")
 
 
-def compile_aggregate(e: ECall, registry=None) -> Column:
+def compile_aggregate(e: ECall) -> Column:
     """Compile an aggregate call to a Spark aggregate Column."""
 
     def rec(x: Expr, w: str | None = None) -> Column:
-        return compile_expr(x, w, registry)
+        return compile_expr(x, w)
 
     name = e.name
     if name == "COUNT_STAR":

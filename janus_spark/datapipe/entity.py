@@ -47,6 +47,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from janus_spark.datapipe.dedup import dedup_clusters
+from janus_spark.operators.graph import global_rank
 from janus_spark.store import commit, history, read_store
 
 __all__ = [
@@ -61,43 +62,6 @@ __all__ = [
     "score_pairs_tfidf",
     "evaluate_resolution",
 ]
-
-
-def _global_rank(recs: DataFrame, id_col: str, key_col: str) -> DataFrame:
-    """Dense 0-based global rank by (key, id) WITHOUT a single-partition
-    window: range-partition on the sort key, rank within each partition,
-    then add driver-computed cumulative partition offsets (≤ #partitions
-    rows ever reach the driver).  The same distributed-rank shape as
-    operators/graph.py::negative_edges phase 1-2; a global
-    ``ROW_NUMBER() OVER (ORDER BY …)`` would funnel the corpus through
-    one task."""
-    spark = recs.sparkSession
-    nparts = max(2, spark.sparkContext.defaultParallelism)
-    local = (
-        recs.repartitionByRange(nparts, F.col(key_col), F.col(id_col))
-        .withColumn("__pid", F.spark_partition_id())
-        .withColumn(
-            "__r",
-            F.row_number().over(
-                Window.partitionBy("__pid").orderBy(F.col(key_col), F.col(id_col))
-            ),
-        )
-        .localCheckpoint(eager=False)
-    )
-    pc = sorted(
-        (r["__pid"], r["cnt"])
-        for r in local.groupBy("__pid").agg(F.count(F.lit(1)).alias("cnt")).collect()
-    )
-    offsets, acc = [], 0
-    for pid, cnt in pc:
-        offsets.append((pid, acc))
-        acc += cnt
-    if not offsets:
-        return local.select(F.lit(0).cast("long").alias("__rank"), *recs.columns).limit(0)
-    off = spark.createDataFrame(offsets, ["__pid", "__off"])
-    return local.join(F.broadcast(off), "__pid").select(
-        (F.col("__r") - 1 + F.col("__off")).cast("long").alias("__rank"), *recs.columns
-    )
 
 
 def sorted_neighborhood_candidates(
@@ -116,7 +80,8 @@ def sorted_neighborhood_candidates(
     block, and candidate volume is exactly linear (≤ n·(window−1) pairs)
     rather than Σ block².
 
-    Scale shape: the global rank is distributed (see :func:`_global_rank`);
+    Scale shape: the global rank is distributed
+    (:func:`janus_spark.operators.graph.global_rank`);
     the window pairs come from ONE equi-join on ``rank // window`` bucket
     ids (each left row joins its own and the next bucket — a two-bucket
     band join), filtered to the exact rank distance.  No sliding state,
@@ -130,7 +95,8 @@ def sorted_neighborhood_candidates(
     if window < 2:
         raise ValueError("window must be >= 2 records")
     keyed = recs.select(id_col, key_col, *payload_cols).where(F.col(key_col).isNotNull())
-    ranked = _global_rank(keyed, id_col, key_col).select(
+    ranked, _ = global_rank(keyed, [key_col, id_col])
+    ranked = ranked.select(
         "__rank", F.col(id_col).alias("__id"), *payload_cols
     )
     w = window

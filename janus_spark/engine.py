@@ -114,11 +114,13 @@ class JanusEngine:
 
     def unregister_query(self, query_id: str) -> None:
         self.registry.pop(query_id, None)
+        self._runners.pop(query_id, None)
 
     def stop_query(self, query_id: str) -> None:
         rq = self.registry.get(query_id)
         if rq:
             rq.status = STOPPED
+        self._runners.pop(query_id, None)
 
     # ------------------------------------------------------------- C4
     def run_historical_window(

@@ -110,7 +110,7 @@ def create_app(engine: JanusEngine, buffer_root: str = "/tmp/janus_spark_live") 
         raise ImportError("flask is required for the HTTP API layer")
     app = Flask("janus_spark")
     hub = QueryResultHub()
-    runners: dict[str, object] = {}
+    runners = engine._runners  # qid -> LiveQueryRunner, the engine's own
     replay_state = {"running": False, "batches": 0, "events": 0, "stopped": False}
     replay_stop = threading.Event()
     app.extensions["janus"] = {"engine": engine, "hub": hub, "runners": runners}
@@ -162,7 +162,6 @@ def create_app(engine: JanusEngine, buffer_root: str = "/tmp/janus_spark_live") 
     @app.delete("/api/queries/<qid>")
     def delete_query(qid):
         engine.unregister_query(qid)
-        runners.pop(qid, None)
         return jsonify({"ok": True})
 
     @app.post("/api/queries/<qid>/start")
@@ -194,7 +193,7 @@ def create_app(engine: JanusEngine, buffer_root: str = "/tmp/janus_spark_live") 
                             ),
                         )
 
-                    runners[qid] = engine.start_live(qid, f"{buffer_root}/{qid}", sink=sink)
+                    engine.start_live(qid, f"{buffer_root}/{qid}", sink=sink)
             except Exception as e:  # surface execution errors via status
                 rq.status = FAILED
                 hub.publish(qid, {"query_id": qid, "type": "error", "error": str(e)})
@@ -205,7 +204,6 @@ def create_app(engine: JanusEngine, buffer_root: str = "/tmp/janus_spark_live") 
     @app.post("/api/queries/<qid>/stop")
     def stop_query(qid):
         engine.stop_query(qid)
-        runners.pop(qid, None)
         return jsonify({"query_id": qid, "status": engine.get_query(qid).status})
 
     @app.get("/api/queries/<qid>/metrics")

@@ -630,6 +630,36 @@ def khop_neighbor_agg(
     )
 
 
+def global_rank(df: DataFrame, order_cols: list[str]) -> tuple[DataFrame, int]:
+    """Dense 0-based rank of ``df``'s rows by ``order_cols`` WITHOUT a
+    single-partition window, and the row total.
+
+    Phase 1: range-partition on the sort key (partition p holds smaller
+    keys than p+1) and ROW_NUMBER within each partition — each task
+    sorts only its slice.  Phase 2: one collect of the per-partition
+    counts (≤ #partitions rows) gives the cumulative offsets and the
+    total; the offsets ride back as a literal array indexed by partition
+    id, so the rank is local rank + offset with no join.  The result is
+    invariant to where the sampled range boundaries fall.  Returns
+    (``__rank`` + ``df``'s columns, total)."""
+    nparts = max(2, df.sparkSession.sparkContext.defaultParallelism)
+    keys = [F.col(c) for c in order_cols]
+    local = (
+        df.repartitionByRange(nparts, *keys)
+        .withColumn("__pid", F.spark_partition_id())
+        .withColumn("__r", F.row_number().over(Window.partitionBy("__pid").orderBy(*keys)))
+        .localCheckpoint(eager=False)
+    )
+    counts = dict(local.groupBy("__pid").count().collect())
+    offsets, total = [], 0
+    for pid in range(max(counts, default=-1) + 1):
+        offsets.append(total)
+        total += counts.get(pid, 0)
+    off = F.element_at(F.array(*map(F.lit, offsets)), F.col("__pid") + 1) if offsets else F.lit(0)
+    rank = (F.col("__r") - 1 + off).cast("long").alias("__rank")
+    return local.select(rank, *df.columns), total
+
+
 def negative_edges(
     edges: DataFrame,
     dst_nodes: DataFrame,
@@ -646,13 +676,10 @@ def negative_edges(
     contrastive/link-prediction trainer needs, reproducible across runs
     and engines (md5 hash family, no RNG).
 
-    Plan: destinations get a dense 0..n-1 index in id-sort order via a
-    DISTRIBUTED two-phase rank — range-partition on id, per-partition
-    ROW_NUMBER (each partition sorts only its slice), then a
-    #partitions-row offset collect + broadcast join.  No global-window
-    single-partition bottleneck: the destination universe scales to the
-    cluster, not to one executor.  The index frame is localCheckpointed
-    once and reused for both the modulo count and the candidate join.
+    Plan: destinations get a dense 0..n-1 index in id-sort order via
+    ``global_rank`` (distributed: no global-window single-partition
+    bottleneck, so the destination universe scales to the cluster, not
+    to one executor); its one collect also yields the modulo count.
     Candidates are a map-side explode of ``m`` slots per source (no
     cross join), then two equi-joins: index→node id, and a left-anti
     against the edge list.  Collisions with real edges or self-loops
@@ -664,44 +691,11 @@ def negative_edges(
     """
     from janus_spark.datapipe.dedup import shared_hash64
 
-    spark = edges.sparkSession
-    n = dst_nodes.select(F.col(id_col)).distinct()
-    nparts = max(2, spark.sparkContext.defaultParallelism)
-    # phase 1: range partition (partition p holds smaller ids than p+1)
-    # + per-partition rank.  The output index is offset + local rank, so
-    # it is invariant to where the sampled range boundaries fall.
-    local = (
-        n.repartitionByRange(nparts, F.col(id_col))
-        .select(
-            F.col(id_col).alias("__dst"),
-            F.spark_partition_id().alias("__pid"),
-        )
-        .withColumn(
-            "__r",
-            F.row_number().over(
-                Window.partitionBy("__pid").orderBy(F.col("__dst"))
-            ),
-        )
-        .localCheckpoint(eager=False)
-    )
-    # phase 2: tiny per-partition counts (≤ nparts rows) → cumulative
-    # offsets on the driver → broadcast back.  This is also the only
-    # count job: n_dst falls out of the same collect.
-    pc = sorted(
-        (r["__pid"], r["cnt"])
-        for r in local.groupBy("__pid").agg(F.count(F.lit(1)).alias("cnt")).collect()
-    )
-    n_dst = sum(c for _, c in pc)
+    n = dst_nodes.select(F.col(id_col).alias("__dst")).distinct()
+    ranked, n_dst = global_rank(n, ["__dst"])
     if n_dst == 0:
         raise ValueError("dst_nodes is empty")
-    offsets, acc = [], 0
-    for pid, cnt in pc:
-        offsets.append((pid, acc))
-        acc += cnt
-    off = spark.createDataFrame(offsets, ["__pid", "__off"])
-    idx = local.join(F.broadcast(off), "__pid").select(
-        "__dst", (F.col("__r") - 1 + F.col("__off")).alias("__i")
-    )
+    idx = ranked.select("__dst", F.col("__rank").alias("__i"))
     srcs = edges.select(F.col(src).alias("__src")).distinct()
     cand = srcs.select(
         "__src", F.explode(F.array([F.lit(i) for i in range(m)])).alias("slot")

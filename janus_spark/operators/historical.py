@@ -11,21 +11,25 @@ Reference behavior:
   one evaluation per hop; iteration ends when ``cur > now``.
 
 Spark-first design: instead of the reference's per-window loop (one
-evaluation per hop), events are assigned to every window they fall in via
-a broadcast range-join against the tiny window-bounds table, and the
-compiled plan runs ONCE over all windows with ``__window_id`` threaded as
-an implicit key (see compiler.compile partition_cols).  At 100 TB this is
-one shuffle instead of N sequential jobs.  A hop with zero matching
-events yields what a per-hop evaluation yields: no rows, except that a
-global aggregate (no GROUP BY) yields its one row over no solutions
-(COUNT 0): the window-id path passes the bounds ids as the compiler's
+evaluation per hop), every event is tagged map-side with the ids of the
+windows it falls in (``tag_window_ids``: hop k is
+``[now - offset + k*step, min(now - offset + k*step + range, now)]``, so
+the id interval of a timestamp is two divisions), and the compiled plan
+runs ONCE over all windows with ``__window_id`` threaded as an implicit
+key (see compiler.compile partition_cols).  At 100 TB this is one
+shuffle instead of N sequential jobs.  The result's
+``window_start``/``window_end`` are the same arithmetic on the id — no
+bounds table, no join.  A hop with zero matching events yields what a
+per-hop evaluation yields: no rows, except that a global aggregate (no
+GROUP BY) yields its one row over no solutions (COUNT 0): the window-id
+path passes ``range(offset // step + 1)`` as the compiler's
 ``partition_domain``, the pane path gives every window an identity
 partial.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from janus_spark.compiler.ast import SelectQuery
@@ -115,7 +119,6 @@ def _run_sliding_panes(
     offset_ms: int,
     range_ms: int,
     step_ms: int,
-    registry: dict | None,
     spec,
 ) -> DataFrame:
     """Pane-decomposed sliding aggregation ("no pane, no gain", Li et al.
@@ -144,15 +147,13 @@ def _run_sliding_panes(
         .withColumn(PANE_BOUNDARY, rel % F.lit(step_ms) == 0)
     )
     row_q = SelectQuery(projection=None, where=query.where)  # SELECT *
-    rows = compile_sparql(
-        row_q, tagged, partition_cols=[PANE, PANE_BOUNDARY], registry=registry
-    )
+    rows = compile_sparql(row_q, tagged, partition_cols=[PANE, PANE_BOUNDARY])
     partial_cols, final_cols, p_names, count_names = [], [], [], []
     for i, (alias, kind, arg) in enumerate(items):
         if kind == "key":
             continue
         if kind in ("COUNT", "COUNT_STAR"):
-            c = F.count(F.lit(1)) if arg is None else F.count(compile_expr(arg, None, registry))
+            c = F.count(F.lit(1)) if arg is None else F.count(compile_expr(arg))
             partial_cols.append(c.alias(f"__p{i}"))
             final_cols.append(F.sum(f"__p{i}").alias(alias))
             p_names.append(f"__p{i}")
@@ -160,11 +161,11 @@ def _run_sliding_panes(
         elif kind in ("SUM", "MIN", "MAX"):
             fn = {"SUM": F.sum, "MIN": F.min, "MAX": F.max}[kind]
             w = "num" if kind == "SUM" else None
-            partial_cols.append(fn(compile_expr(arg, w, registry)).alias(f"__p{i}"))
+            partial_cols.append(fn(compile_expr(arg, w)).alias(f"__p{i}"))
             final_cols.append(fn(f"__p{i}").alias(alias))
             p_names.append(f"__p{i}")
         else:  # AVG = SUM/COUNT partials
-            num = compile_expr(arg, "num", registry)
+            num = compile_expr(arg, "num")
             partial_cols.append(F.sum(num).alias(f"__p{i}s"))
             partial_cols.append(F.count(num).alias(f"__p{i}c"))
             final_cols.append((F.sum(f"__p{i}s") / F.sum(f"__p{i}c")).alias(alias))
@@ -207,7 +208,6 @@ def run_historical_fixed(
     quads: DataFrame,
     start_ts: int,
     end_ts: int,
-    registry: dict | None = None,
     property_tables: dict | None = None,
     path_max_hops: int | None = None,
     predicate_stats: dict | None = None,
@@ -222,7 +222,7 @@ def run_historical_fixed(
         sliced = {id(pt): pt.time_filtered(start_ts, end_ts) for pt in set(property_tables.values())}
         pts = {pred: sliced[id(pt)] for pred, pt in property_tables.items()}
     return compile_sparql(
-        query, window, registry=registry,
+        query, window,
         property_tables=pts, path_max_hops=path_max_hops,
         predicate_stats=predicate_stats,
     )
@@ -242,17 +242,13 @@ def sliding_window_bounds(now: int, offset_ms: int, range_ms: int, step_ms: int)
     return out
 
 
-def _bounds_frame(spark, bounds: list[tuple[int, int, int]]) -> DataFrame:
-    """The (window id, start, end) table of ``sliding_window_bounds``."""
-    return spark.createDataFrame(
-        bounds, schema=f"{WINDOW_ID} long, {WINDOW_START} long, {WINDOW_END} long"
-    )
-
-
 def assign_sliding_windows(quads: DataFrame, bounds: list[tuple[int, int, int]]) -> DataFrame:
     """Tag each quad with every window it belongs to via a broadcast
-    range-join (window table is tiny — tens of rows)."""
-    bdf = _bounds_frame(quads.sparkSession, bounds)
+    range-join against the bounds table (tens of rows) — the reference
+    shape ``tag_window_ids`` replaces with arithmetic."""
+    bdf = quads.sparkSession.createDataFrame(
+        bounds, schema=f"{WINDOW_ID} long, {WINDOW_START} long, {WINDOW_END} long"
+    )
     lo = min(b[1] for b in bounds)
     hi = max(b[2] for b in bounds)
     pruned = quads.where(F.col("ts").between(F.lit(lo), F.lit(hi)))
@@ -297,6 +293,19 @@ def tag_window_ids(
     return pruned.withColumn(WINDOW_ID, F.explode(seq))
 
 
+def _with_window_bounds(
+    result: DataFrame, now: int, offset_ms: int, range_ms: int, step_ms: int
+) -> DataFrame:
+    """Replace ``__window_id`` with the hop's inclusive bounds — the
+    arithmetic of ``sliding_window_bounds`` on the id column."""
+    start = F.lit(now - offset_ms) + F.col(WINDOW_ID) * F.lit(step_ms)
+    return (
+        result.withColumn(WINDOW_START, start)
+        .withColumn(WINDOW_END, F.least(start + F.lit(range_ms), F.lit(now)))
+        .drop(WINDOW_ID)
+    )
+
+
 def run_historical_sliding(
     query: SelectQuery,
     quads: DataFrame,
@@ -304,7 +313,6 @@ def run_historical_sliding(
     offset_ms: int,
     range_ms: int,
     step_ms: int,
-    registry: dict | None = None,
     property_tables: dict | None = None,
     use_panes: bool | None = None,
     path_max_hops: int | None = None,
@@ -325,8 +333,6 @@ def run_historical_sliding(
     mergeable aggregate, range a multiple of step);
     True/False force/disable it (parity tests use both).
     """
-    bounds = sliding_window_bounds(now, offset_ms, range_ms, step_ms)
-    bdf = _bounds_frame(quads.sparkSession, bounds)
     spec = sliding_pane_spec(query) if use_panes is not False else None
     if (
         spec is not None
@@ -334,10 +340,8 @@ def run_historical_sliding(
         and range_ms % step_ms == 0
         and not property_tables
     ):
-        result = _run_sliding_panes(
-            query, quads, now, offset_ms, range_ms, step_ms, registry, spec
-        )
-        return result.join(F.broadcast(bdf), on=WINDOW_ID, how="inner").drop(WINDOW_ID)
+        result = _run_sliding_panes(query, quads, now, offset_ms, range_ms, step_ms, spec)
+        return _with_window_bounds(result, now, offset_ms, range_ms, step_ms)
     if use_panes:
         raise ValueError("query is not pane-decomposable (use_panes=True)")
     tagged = assign_sliding_windows_regular(quads, now, offset_ms, range_ms, step_ms)
@@ -366,12 +370,13 @@ def run_historical_sliding(
         tagged,
         property_tables=pts,
         partition_cols=[WINDOW_ID],
-        registry=registry,
         path_max_hops=path_max_hops,
         predicate_stats=predicate_stats,
-        partition_domain=lambda: bdf.select(WINDOW_ID),
+        partition_domain=lambda: quads.sparkSession.range(offset_ms // step_ms + 1).select(
+            F.col("id").alias(WINDOW_ID)
+        ),
     )
-    return result.join(F.broadcast(bdf), on=WINDOW_ID, how="inner").drop(WINDOW_ID)
+    return _with_window_bounds(result, now, offset_ms, range_ms, step_ms)
 
 
 def tag_results(df: DataFrame, query_id: str, source: str, timestamp: int | None = None) -> DataFrame:

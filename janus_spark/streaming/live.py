@@ -165,7 +165,6 @@ class LiveQueryRunner:
         buffer_path: str,
         static_quads: DataFrame | None = None,
         sink=None,
-        registry: dict | None = None,
         max_windows_per_batch: int = 100,
     ):
         self.spark = spark
@@ -174,7 +173,6 @@ class LiveQueryRunner:
         self.buffer_path.mkdir(parents=True, exist_ok=True)
         self.static_quads = static_quads
         self.sink = sink if sink is not None else ListSink()
-        self.registry = registry
         self.max_windows_per_batch = max_windows_per_batch
         self.windows = [_WindowState(w) for w in parsed.live_windows]
         if not self.windows:
@@ -329,7 +327,6 @@ class LiveQueryRunner:
             self._live_query,
             content,
             partition_cols=[WINDOW_END],
-            registry=self.registry,
             static_quads=static,
             partition_domain=lambda: self.spark.range(1).select(all_ends.alias(WINDOW_END)),
         )

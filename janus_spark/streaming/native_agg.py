@@ -3,32 +3,43 @@ Structured Streaming alternative to the foreachBatch runtime.
 
 When a live query is aggregate-shaped — ONE live window, a BGP of
 triple patterns, aggregates over its variables — the RStream
-evaluation is exactly Spark's built-in event-time machinery:
+evaluation is exactly Spark's built-in event-time machinery, and the
+plan is the SPARQL compiler's own over window-tagged quads:
 
-    single pattern (sliding or tumbling):
-        stream.withWatermark(ts).groupBy(window(ts, range, step), keys).agg(...)
-    multi-pattern BGP (tumbling):
-        per-pattern window-tagged streams, chained stream-stream
-        equi-joins on (window, shared vars), then the windowed agg —
-        Spark's window-join + chained-aggregation pipeline.
+    stream.withWatermark(__event_time)
+          .withColumn("window", window(__event_time, range, step))
+    → compile_sparql(live query, partition_cols=["window"])
+
+The window column rides every scan, join and aggregate like the
+historical paths' ``__window_id``.  A single pattern becomes Spark's
+watermarked sliding/tumbling window aggregation; a multi-pattern BGP
+(tumbling only) becomes stream-stream equi-joins on (window, shared
+vars) feeding the windowed aggregation — Spark's window-join +
+chained-aggregation pipeline.  Partition columns lead every scan and
+grouping key, so the state stores are keyed ``(window, …)``.
 
 This path gets incremental state, watermark-driven cleanup, and
 exactly-once sinks from the engine itself (no driver-side window
 bookkeeping, no full re-evaluation per close) — at 100 TB/day this is
 the mode you want for metrics-style continuous queries.  Queries that
-need OPTIONAL, deltas, baselines, sliding multi-pattern joins, or
-multi-window merge stay on LiveQueryRunner (which trades those
-capabilities for generality).
+need OPTIONAL, property paths, deltas, baselines, sliding multi-pattern
+joins, or multi-window merge stay on LiveQueryRunner (which trades
+those capabilities for generality).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from janus_spark.compiler.ast import ECall, EVar, Filter, Group, TriplePattern, Var
-from janus_spark.compiler.expressions import compile_aggregate, compile_expr
+from janus_spark.compiler.ast import ECall, EVar, Filter, Path, TriplePattern
+from janus_spark.compiler.compile import compile_sparql
 from janus_spark.parsing.janusql import JanusQuery
+
+# both names are part of the streaming state schema: a checkpoint
+# written under them resumes only under them
+WINDOW = "window"
+EVENT_TIME = "__event_time"
 
 
 def native_agg_reason(parsed: JanusQuery) -> str | None:
@@ -55,6 +66,8 @@ def native_agg_reason(parsed: JanusQuery) -> str | None:
         return "OPTIONAL/UNION/subpatterns need the foreachBatch runtime"
     if not patterns:
         return "native agg path needs at least one triple pattern"
+    if any(isinstance(tp.p, Path) for tp in patterns):
+        return "property paths need the foreachBatch runtime"
     if len(patterns) > 1 and w.range_ms != w.step_ms:
         return (
             "multi-pattern BGPs run natively only on tumbling windows "
@@ -76,21 +89,6 @@ def native_agg_reason(parsed: JanusQuery) -> str | None:
     return None
 
 
-def _pattern_stream(stream_quads: DataFrame, tp: TriplePattern) -> tuple[DataFrame, set[str]]:
-    """Constant-term filter + variable projection for ONE triple pattern,
-    keeping the event time; returns (stream, bound variable names)."""
-    df = stream_quads
-    proj: dict[str, str] = {}
-    for pos, term in (("subject", tp.s), ("predicate", tp.p), ("object", tp.o)):
-        if isinstance(term, Var):
-            proj[term.name] = pos
-        else:
-            df = df.where(F.col(pos) == term.value if hasattr(term, "value") else term.lexical)
-    sel: list[Column] = [F.timestamp_millis(F.col("ts")).alias("__event_time")]
-    sel += [F.col(src).alias(var) for var, src in proj.items()]
-    return df.select(*sel), set(proj)
-
-
 def native_window_agg_stream(
     parsed: JanusQuery,
     stream_quads: DataFrame,
@@ -100,69 +98,37 @@ def native_window_agg_stream(
     window aggregation.  Raises ValueError (with the reason) when the
     query's shape needs the general foreachBatch runtime instead.
 
-    Single pattern: watermark + sliding/tumbling ``window()`` groupBy.
-    Multi-pattern BGP (tumbling windows only): each pattern becomes a
-    filtered projection of the stream, window-tagged per-row, and the
-    patterns chain through stream-stream equi-joins on
-    (window, shared vars) — Spark's window-equality join lets the state
-    store evict a window's rows once the watermark passes, so join state
-    is O(open windows), and the chained windowed aggregation after the
-    join is the multiple-stateful-operator pipeline Structured Streaming
-    supports natively (append mode).  The reference evaluates the same
-    shape by re-running the full SPARQL join on every window close
-    (src/stream/, rsp-rs); here the join state is incremental."""
+    The stream gets its event time and watermark, then a ``window``
+    column (Spark's ``window()``: ``[k*step, k*step+range)``), and the
+    live query compiles over it with ``window`` as the partition column.
+    For a multi-pattern BGP (tumbling only) the compiler's joins are on
+    (window, shared vars): window equality lets the state store evict a
+    window's rows once the watermark passes, so join state is O(open
+    windows), and the windowed aggregation after the join is the
+    multiple-stateful-operator pipeline Structured Streaming supports
+    natively (append mode).  The reference evaluates the same shape by
+    re-running the full SPARQL join on every window close (src/stream/,
+    rsp-rs); here the join state is incremental.
+
+    Output: ``window_start``, ``window_end`` (epoch ms), then the
+    projection in projection order."""
     reason = native_agg_reason(parsed)
     if reason is not None:
         raise ValueError(reason)
     w = parsed.live_windows[0]
-    body = parsed.window_bodies[w.name]
-    patterns = [el for el in body.elements if isinstance(el, TriplePattern)]
-    filters = [el for el in body.elements if isinstance(el, Filter)]
-
-    group_vars = [e.name for e, _ in parsed.group_by if isinstance(e, EVar)]
-    aggs = [
-        compile_aggregate(e).alias(name)
-        for e, name in parsed.projection
-        if isinstance(e, ECall) and e.is_aggregate()
-    ]
-
-    if len(patterns) == 1:
-        df, _ = _pattern_stream(stream_quads, patterns[0])
-        for f in filters:
-            df = df.where(compile_expr(f.expr, "bool"))
-        spark_window = F.window(
-            F.col("__event_time"), f"{w.range_ms} milliseconds", f"{w.step_ms} milliseconds"
+    tagged = (
+        stream_quads.withColumn(EVENT_TIME, F.timestamp_millis(F.col("ts")))
+        .withWatermark(EVENT_TIME, watermark)
+        .withColumn(
+            WINDOW,
+            F.window(F.col(EVENT_TIME), f"{w.range_ms} milliseconds", f"{w.step_ms} milliseconds"),
         )
-        out = (
-            df.withWatermark("__event_time", watermark)
-            .groupBy(spark_window.alias("window"), *[F.col(v) for v in group_vars])
-            .agg(*aggs)
-        )
-    else:
-        joined: DataFrame | None = None
-        bound: set[str] = set()
-        for tp in patterns:
-            df, tp_vars = _pattern_stream(stream_quads, tp)
-            df = df.withWatermark("__event_time", watermark).select(
-                F.window(F.col("__event_time"), f"{w.range_ms} milliseconds").alias("window"),
-                *[F.col(v) for v in tp_vars],
-            )
-            if joined is None:
-                joined, bound = df, tp_vars
-            else:
-                # shared vars = SPARQL join keys; window equality scopes the
-                # join to co-windowed events AND drives state eviction
-                joined = joined.join(df, on=["window", *sorted(bound & tp_vars)])
-                bound |= tp_vars
-        for f in filters:
-            joined = joined.where(compile_expr(f.expr, "bool"))
-        out = joined.groupBy(F.col("window"), *[F.col(v) for v in group_vars]).agg(*aggs)
-
+    )
+    out = compile_sparql(parsed.live_query(), tagged, partition_cols=[WINDOW])
     return out.select(
-        F.unix_millis(F.col("window.start")).alias("window_start"),
-        F.unix_millis(F.col("window.end")).alias("window_end"),
-        *[F.col(v) for v in group_vars],
-        *[F.col(name) for e, name in parsed.projection if isinstance(e, ECall) and e.is_aggregate()],
+        F.unix_millis(F.col(f"{WINDOW}.start")).alias("window_start"),
+        F.unix_millis(F.col(f"{WINDOW}.end")).alias("window_end"),
+        *[F.col(name) for _, name in parsed.projection],
     )
 
 

@@ -155,10 +155,11 @@ def test_sorted_neighborhood_window_too_small(spark):
 
 def test_global_rank_no_single_partition_window(spark):
     # the rank plan must not contain a window over one global partition
-    from janus_spark.datapipe.entity import _global_rank
+    from janus_spark.operators.graph import global_rank
 
     df = _recs(spark, [(i, ["x"], "k%d" % (i % 5), 1.0) for i in range(1, 30)])
-    ranked = _global_rank(df, "id", "blk")
+    ranked, total = global_rank(df, ["blk", "id"])
+    assert total == 29
     plan = ranked._jdf.queryExecution().executedPlan().toString()
     assert "SinglePartition" not in plan
     got = [r["id"] for r in ranked.orderBy("__rank").collect()]

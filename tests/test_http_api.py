@@ -62,6 +62,38 @@ def test_register_get_delete_lifecycle(client):
     assert client.get(f"/api/queries/{qid}").status_code == 404
 
 
+LIVE_QUERY = f"""
+PREFIX ex: <{EX}>
+REGISTER RStream <out> AS
+SELECT ?sensor ?temp
+FROM NAMED WINDOW ex:w ON STREAM ex:sensors [RANGE 2000 STEP 2000]
+WHERE {{ WINDOW ex:w {{ ?sensor ex:temperature ?temp . }} }}
+"""
+
+
+def _started_runner(client, engine):
+    qid = client.post("/api/queries", json={"query": LIVE_QUERY}).get_json()["query_id"]
+    client.post(f"/api/queries/{qid}/start")
+    for _ in range(100):
+        if qid in engine._runners:
+            return qid
+        time.sleep(0.1)
+    raise AssertionError("live runner never started")
+
+
+def test_delete_and_stop_drop_the_live_runner(client):
+    """The app reads the engine's one runner registry, and neither a
+    deleted nor a stopped query keeps its runner referenced."""
+    engine = client.application.extensions["janus"]["engine"]
+    qid = _started_runner(client, engine)
+    client.delete(f"/api/queries/{qid}")
+    assert qid not in engine._runners
+    qid = _started_runner(client, engine)
+    client.post(f"/api/queries/{qid}/stop")
+    assert qid not in engine._runners
+    assert client.application.extensions["janus"]["runners"] is engine._runners
+
+
 def test_start_and_stream_results(client):
     qid = client.post("/api/queries", json={"query": HIST_QUERY}).get_json()["query_id"]
     assert client.post(f"/api/queries/{qid}/start").get_json()["status"] == "starting"

@@ -60,6 +60,7 @@ def test_sliding_window_has_no_nested_loop_join(spark):
     df = eng.start_historical(qid, now=100000)["http://example.org/h"]
     plan = plan_of(df)
     assert "BroadcastNestedLoopJoin" not in plan, "window assignment must be arithmetic, not a range join"
+    assert "ExistingRDD" not in plan, "window bounds must be arithmetic, not a table built from Python rows"
 
 
 def test_aggregate_is_partial_then_final(spark, sf_dir):

@@ -1,6 +1,8 @@
 """Live window runtime (W3-W6) — semantics mirrored from the reference's
 live-stream integration tests (tests/live_stream_integration_test.rs)."""
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -17,6 +19,18 @@ SELECT ?sensor ?temp
 FROM NAMED WINDOW ex:w ON STREAM ex:sensors [RANGE 2000 STEP 1000]
 WHERE {{ WINDOW ex:w {{ ?sensor ex:temperature ?temp . }} }}
 """
+
+
+def state_keys(q, op: str) -> list[list[str]]:
+    """Key column names of every ``op`` node (``StateStoreSave``,
+    ``StreamingSymmetricHashJoin`` — one list per join side) in the
+    streaming query's last executed plan."""
+    plan = q._jsq.streamingQuery().lastExecution().executedPlan().toString()
+    return [
+        re.findall(r"(\w+)#\d+", keys)
+        for node in re.findall(rf"{op} ((?:\[[^\]]*\], )+)", plan)
+        for keys in re.findall(r"\[([^\]]*)\]", node)
+    ]
 
 
 def make_runner(spark, tmp_path, text=LIVE_QUERY, static=None):
@@ -294,6 +308,8 @@ def test_native_window_agg_stream(spark, tmp_path):
         .start()
     )
     q.awaitTermination(180)
+    # the state layout checkpoints depend on: keyed (window, group vars)
+    assert state_keys(q, "StateStoreSave") == [["window", "sensor"]]
     rows = spark.sql("SELECT * FROM nat_agg ORDER BY window_start, sensor").collect()
     assert rows
     # spark's window(): [k*step, k*step+range) — same hop shape as the runtime
@@ -371,6 +387,8 @@ def test_native_multi_pattern_join_stream(spark, tmp_path):
         .start()
     )
     q.awaitTermination(180)
+    assert state_keys(q, "StateStoreSave") == [["window", "s"]]
+    assert state_keys(q, "StreamingSymmetricHashJoin") == [["window", "s"], ["window", "s"]]
     rows = spark.sql(
         "SELECT * FROM nat_join WHERE window_start = 0 ORDER BY s"
     ).collect()
@@ -447,6 +465,91 @@ def test_native_join_late_data_within_watermark(spark, tmp_path):
     # sensor A: temps {21,22} x hums {70,71} -> 4 bindings; the late
     # ts=300 pair MUST be counted even though ts=2500 arrived first
     assert got == {f"{EX}A": 4}
+
+
+def run_native(spark, tmp_path, text, rows, name):
+    """Drain a native live query over ``rows`` (one file, complete mode)
+    and return its output rows."""
+    from janus_spark.model import QUAD_SCHEMA
+    from janus_spark.streaming.native_agg import native_window_agg_stream
+
+    src = tmp_path / f"{name}_src"
+    spark.createDataFrame(rows, QUAD_DDL).coalesce(1).write.parquet(str(src))
+    stream = spark.readStream.schema(QUAD_SCHEMA).parquet(str(src))
+    q = (
+        native_window_agg_stream(parse_janusql(text), stream)
+        .writeStream.format("memory")
+        .queryName(name)
+        .outputMode("complete")
+        .option("checkpointLocation", str(tmp_path / f"{name}_ck"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination(180)
+    return spark.sql(f"SELECT * FROM {name}").collect()
+
+
+def native_query(select: str, pattern: str) -> str:
+    return f"""
+    PREFIX ex: <{EX}>
+    REGISTER RStream <out> AS
+    SELECT {select}
+    FROM NAMED WINDOW ex:w ON STREAM ex:sensors [RANGE 1000 STEP 1000]
+    WHERE {{ WINDOW ex:w {{ {pattern} }} }}
+    GROUP BY ?s
+    """
+
+
+def test_native_literal_object_constant(spark, tmp_path):
+    """A literal object constant is a filter on the object column."""
+    text = native_query("?s (COUNT(?s) AS ?n)", '?s ex:state "on" .')
+    rows = [(100, f"{EX}A", f"{EX}state", "on", "g"), (200, f"{EX}A", f"{EX}state", "off", "g"),
+            (300, f"{EX}B", f"{EX}state", "on", "g"), (400, f"{EX}A", f"{EX}state", "on", "g")]
+    got = run_native(spark, tmp_path, text, rows, "nat_lit")
+    assert {(r["window_start"], r["s"], r["n"]) for r in got} == {(0, f"{EX}A", 2), (0, f"{EX}B", 1)}
+
+
+def test_native_repeated_variable_must_match(spark, tmp_path):
+    """``?s ex:knows ?s`` binds only quads whose subject IS the object."""
+    text = native_query("?s (COUNT(?s) AS ?n)", "?s ex:knows ?s .")
+    rows = [(100, f"{EX}A", f"{EX}knows", f"{EX}A", "g"), (200, f"{EX}A", f"{EX}knows", f"{EX}B", "g"),
+            (300, f"{EX}B", f"{EX}knows", f"{EX}B", "g")]
+    got = run_native(spark, tmp_path, text, rows, "nat_rep")
+    assert {(r["s"], r["n"]) for r in got} == {(f"{EX}A", 1), (f"{EX}B", 1)}
+
+
+def test_native_projection_alias_names_the_column(spark, tmp_path):
+    """``(?s AS ?x)`` comes out as column ``x``, in projection order."""
+    text = native_query("(COUNT(?t) AS ?n) (?s AS ?x)", "?s ex:temperature ?t .")
+    rows = [(100, f"{EX}A", f"{EX}temperature", "20", "g"), (200, f"{EX}A", f"{EX}temperature", "21", "g"),
+            (1100, f"{EX}A", f"{EX}temperature", "22", "g")]
+    got = run_native(spark, tmp_path, text, rows, "nat_alias")
+    assert got[0].__fields__ == ["window_start", "window_end", "n", "x"]
+    assert {(r["window_start"], r["x"], r["n"]) for r in got} == {(0, f"{EX}A", 2), (1000, f"{EX}A", 1)}
+
+
+def test_property_path_routes_to_foreachbatch(spark, tmp_path):
+    """A property path is not a native shape: the engine hands the query
+    to the runner, which evaluates the path per window."""
+    from janus_spark.engine import JanusEngine
+    from janus_spark.streaming.native_agg import native_agg_reason
+
+    text = native_query("?s (COUNT(?o) AS ?n)", "?s ex:p/ex:q ?o .")
+    assert native_agg_reason(parse_janusql(text)) == "property paths need the foreachBatch runtime"
+    eng = JanusEngine(spark)
+    qid = eng.register_query(text)
+    assert eng.explain_live(qid)["mode"] == "foreachbatch"
+    sink = ListSink()
+    mode, runner = eng.start_live_auto(qid, None, str(tmp_path / "buf"), sink=sink)
+    assert mode == "foreachbatch" and isinstance(runner, LiveQueryRunner)
+    # A -p-> B -q-> C and A -p-> B -q-> D in [0,1000); B -q-> E alone
+    rows = [(100, f"{EX}A", f"{EX}p", f"{EX}B", "g"), (200, f"{EX}B", f"{EX}q", f"{EX}C", "g"),
+            (300, f"{EX}B", f"{EX}q", f"{EX}D", "g"), (400, f"{EX}X", f"{EX}q", f"{EX}E", "g"),
+            (1500, f"{EX}Z", f"{EX}z", f"{EX}Z", "g")]
+    runner.on_batch(spark.createDataFrame(rows, QUAD_DDL))
+    assert [(b["window_end"], [(r["s"], r["n"]) for r in b["rows"]]) for b in sink.batches] == [
+        (1000, [(f"{EX}A", 2)])
+    ]
 
 
 def test_engine_dispatches_live_mode(spark, tmp_path):
